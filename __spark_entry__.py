@@ -16,25 +16,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 # Importing these modules registers every query + oracle pair.
+# Order matters: registration order is the registry's dict order.
 from clickhouse_mysql_data_reader_spark.queries import analytics  # noqa: F401
-
-try:  # modules added incrementally; keep entry importable mid-build
-    from clickhouse_mysql_data_reader_spark.queries import pipeline  # noqa: F401
-except ImportError:
-    pass
-try:
-    from clickhouse_mysql_data_reader_spark.queries import llmops  # noqa: F401
-except ImportError:
-    pass
-try:
-    from clickhouse_mysql_data_reader_spark.queries import advanced  # noqa: F401
-except ImportError:
-    pass
-try:
-    from clickhouse_mysql_data_reader_spark.queries import multimodal  # noqa: F401
-except ImportError:
-    pass
-
+from clickhouse_mysql_data_reader_spark.queries import pipeline  # noqa: F401
+from clickhouse_mysql_data_reader_spark.queries import llmops  # noqa: F401
+from clickhouse_mysql_data_reader_spark.queries import advanced  # noqa: F401
+from clickhouse_mysql_data_reader_spark.queries import multimodal  # noqa: F401
 from clickhouse_mysql_data_reader_spark.queries.registry import (
     oracle_sql_map,
     query_map,

@@ -211,19 +211,15 @@ def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
             return 0
         if cfg.curate.state_dir:
             state = CurationState.from_config(ccfg, cfg.curate.state_dir)
-            # State lands LAST, derived from the durably written dst —
-            # curate_stream's epoch ordering (curation_epoch_apply). The
-            # previous order (eager state append, then the dst write)
-            # made a failed/rerun dst write catastrophic: the rerun
-            # anti-joined every doc against its own landed fingerprints
-            # and overwrote dst with an EMPTY corpus. Now a crash
-            # before/during state.write leaves dst complete and the
-            # batch's state rows absent or partial; the retry remedy —
-            # rerun with the same --curation-epoch/--curation-run-id so
-            # the history joins exclude that tag's rows — is reachable
-            # from the verb.
-            fps_out = {} if ccfg.dedup_lines else None
-            sp_out = {} if ccfg.split_fractions is not None else None
+            # State commits LAST, derived from the durably written dst
+            # (curation_epoch_apply's ordering): doc tables, line fps and
+            # split assignment land in ONE commit, so a crash leaves the
+            # state without the batch and a plain rerun lands it exactly
+            # once. Rerunning a batch whose state already committed
+            # needs the same --curation-epoch/--curation-run-id, so the
+            # history joins exclude the batch's own rows.
+            fps_out: dict = {}
+            sp_out: dict = {}
             kept = curate_increment(
                 docs, state, cfg=ccfg, benchmark=benchmark,
                 text_col=cfg.curate.text_col, id_col=cfg.curate.id_col,
@@ -232,42 +228,14 @@ def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
                 line_fps_out=fps_out, splits_out=sp_out,
             )
             kept.write.mode("overwrite").parquet(cfg.dst.parquet_dir)
-            landed = spark.read.parquet(cfg.dst.parquet_dir)
             state.write(
-                landed, text_col=cfg.curate.text_col,
-                id_col=cfg.curate.id_col,
+                spark.read.parquet(cfg.dst.parquet_dir),
+                text_col=cfg.curate.text_col, id_col=cfg.curate.id_col,
                 epoch_id=cfg.curate.epoch_id, run_id=cfg.curate.run_id,
+                line_fps=fps_out.get("line_fps"),
+                split_comps=sp_out.get("comps"),
+                split_fractions=ccfg.split_fractions,
             )
-            if fps_out and fps_out.get("line_fps") is not None:
-                # last of the three commits (dst -> doc state -> line
-                # fps), same crash semantics as curation_epoch_apply:
-                # at worst MISSING line fps, never fps for unlanded docs
-                state.append_line_fps(
-                    fps_out["line_fps"],
-                    epoch_id=cfg.curate.epoch_id, run_id=cfg.curate.run_id,
-                )
-            if sp_out and sp_out.get("comps") is not None:
-                # split assignments over the landed dst, appended after
-                # the doc-state commit (curation_epoch_apply's ordering:
-                # at worst missing split rows, replayable by epoch tag,
-                # never splits for unlanded docs)
-                from clickhouse_mysql_data_reader_spark.curation import (
-                    _split_assignment_frame,
-                )
-                from pyspark.sql import functions as F
-
-                assign = _split_assignment_frame(
-                    landed, sp_out["comps"], ccfg.split_fractions,
-                    cfg.curate.id_col,
-                )
-                state.append_splits(
-                    assign.select(
-                        F.col(cfg.curate.id_col).alias("doc_id"),
-                        "component", "split",
-                    ),
-                    ccfg.split_fractions,
-                    epoch_id=cfg.curate.epoch_id, run_id=cfg.curate.run_id,
-                )
             mode = "increment"
         else:
             res = curate(
@@ -298,7 +266,11 @@ def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
         elif ccfg.split_fractions is not None:
             # increments land assignments in the state's splits table
             # (read back via CurationState.split_assignments)
-            report["splits_table"] = cfg.curate.state_dir.rstrip("/") + "/splits"
+            report["split_rows"] = {
+                r["split"]: r["count"]
+                for r in state.split_assignments(spark)
+                .groupBy("split").count().collect()
+            }
         print(json.dumps(report))
         return 0
 

@@ -19,6 +19,8 @@ this is the BASELINE.json north-star surface composed end-to-end.
 
 from __future__ import annotations
 
+import json
+import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -104,8 +106,8 @@ class CurationConfig:
     # therefore STABLE across daily batches and no near-dup cluster
     # ever straddles train/test. With batch-ordered ids this equals
     # batch-over-concatenation bit-for-bit (parity pinned by test);
-    # fractions are pinned in the state's _split_params.json for its
-    # lifetime. None = off.
+    # fractions are pinned in the state's manifest for its lifetime.
+    # None = off.
     split_fractions: tuple[tuple[str, float], ...] | None = None
     drop_repetitive: bool = True
     redact_pii: bool = True
@@ -992,7 +994,7 @@ def _decoder_tag(decode_fn, explicit: str | None) -> str:
         raise ValueError(
             "an injected media decode_fn needs an explicit decoder tag "
             "(e.g. image_decoder_tag='pillow-v10') — the tag is pinned "
-            "in the state's _*_params.json so fingerprints landed by a "
+            "in the state's manifest so fingerprints landed by a "
             "DIFFERENT decoder can never silently match"
         )
     return "md5-blocked-fake"
@@ -1669,6 +1671,25 @@ def curate(
     )
 
 
+def _tagged(df: DataFrame, epoch_id: int | None = None, run_id: str | None = None) -> DataFrame:
+    """``df`` with the ``(_epoch, _run)`` append tag every state row
+    carries (``(-1, "")`` for plain batch appends and backfills)."""
+    return df.withColumns(
+        {
+            "_epoch": F.lit(-1 if epoch_id is None else int(epoch_id)).cast("long"),
+            "_run": F.lit(run_id or ""),
+        }
+    )
+
+
+def _split_pin(fractions) -> dict:
+    """The pinned form of a split configuration (fractions + fixed salt)."""
+    return {"fractions": [[str(n), float(f)] for n, f in fractions], "salt": "split"}
+
+
+_MANIFESTS = "_manifest"
+
+
 class CurationState:
     """Landed dedup state of the already-curated corpus — the sidecar
     tables an incremental (daily-batch) pipeline needs to dedup NEW
@@ -1676,17 +1697,38 @@ class CurationState:
     historical corpus:
 
     - ``fingerprints``: (doc_id, fp) md5 content fingerprints (exact dedup)
-    - ``bands``:        (doc_id, band_id, band_hash) LSH buckets (near-dup
+    - ``bands``: (doc_id, band_id, band_hash) LSH buckets (near-dup
       candidate generation)
-    - ``shingles``:     (doc_id, sh_h) shingle hashes (Jaccard verify)
-    - ``prefixes``:     (doc_id, sh_h) AllPairs prefix shingles — OPTIONAL
-      (lands only when ``jaccard_exact_threshold``/
-      ``containment_threshold`` is set); the exact candidate source for
-      ``near_dup_exact``/``near_dup_containment`` in increments
+    - ``shingles``: (doc_id, sh_h) shingle hashes (Jaccard verify)
+    - OPTIONAL, one per enabled feature: ``prefixes`` (AllPairs prefix
+      shingles, the exact candidate source of ``near_dup_exact``/
+      ``near_dup_containment``), ``srp_bands``/``embeddings`` (semantic),
+      ``image_fps``/``audio_fps``/``video_fps`` (media fingerprints),
+      ``line_fps`` (fingerprints of every eligible line of every INPUT
+      batch, ``dedup_lines``) and ``splits`` (the immutable leakage-safe
+      split of every kept doc).
 
-    All three are plain parquet — partition/bucket them by their join
-    key at real scale. ``append`` adds a new batch's rows; state grows
-    with the KEPT corpus only (dropped docs contribute nothing).
+    State grows with the KEPT corpus only (dropped docs contribute
+    nothing). An optional Bloom filter over the landed fingerprints
+    (``bloom_bits``) lets increments route definite misses around the
+    history anti-join.
+
+    ONE commit protocol — the ClickHouse-part / Delta-log shape that
+    ``SnapshotStore`` uses for the pump. ``write``, the backfills,
+    ``ensure_prefixes``/``ensure_bloom`` and ``compact`` each write their
+    new files under a fresh ``gen-<N>/`` directory, then commit by adding
+    manifest version ``_manifest/<N>.json``. A version is written to a
+    temp name and renamed, and a rename onto an existing version is
+    refused, so any Hadoop filesystem works and a concurrent commit
+    fails loudly instead of overwriting. The manifest lists every
+    table's live generation dirs, the Bloom filter file and the pinned
+    parameters. Readers find files ONLY through the highest version, so
+    a batch lands in all its tables at once or not at all: a crash
+    before the rename leaves the previous snapshot (the orphaned
+    generation is cleared by the next attempt), a crash after it the
+    new one, and a plain retry of a crashed batch lands it exactly
+    once. After each commit, unreferenced generations and older
+    manifest versions are garbage-collected. One writer at a time.
 
     Every row carries an ``(_run, _epoch)`` tag (``("", -1)`` for plain
     batch appends; the stream's run id + foreachBatch epoch id for
@@ -1698,12 +1740,75 @@ class CurationState:
     run id is what keeps one run's exclusion from hiding another run's
     genuine history.
 
-    The MinHash/LSH parameters the landed tables were derived with are
-    persisted in ``_params.json`` at first write and validated on
-    every subsequent write and incremental read-path — a session that
-    reconstructs ``CurationState`` with different parameters would
-    otherwise silently find zero cross-history near-dups.
+    Pinned parameters, one manifest key per feature (MinHash/LSH, Bloom
+    sizing, prefix thresholds, SRP geometry, media geometry + decoder
+    tag, split fractions): the first commit that uses a feature pins
+    it, and every later commit and incremental read validates the
+    handle against the pins — rows derived under other parameters never
+    match the landed ones (silently missed duplicates). A handle that
+    lacks a landed feature may not commit either: its batches would be
+    invisible to that feature's later probes. Probe-time thresholds
+    (cosine, Hamming budgets, video match count) are not pinned; their
+    verify is exact.
+
+    Legacy states (table dirs appended in place, one parameter file per
+    feature, no manifest) are imported once on first open through the
+    compaction path: each table is read with ``mergeSchema``, missing
+    tags are filled with NULL (so legacy untagged rows keep surviving
+    epoch exclusion), generation 1 is committed with the old pins and
+    the legacy files are removed. A legacy Bloom filter is dropped and
+    rebuilt from the landed fingerprints on its next use.
     """
+
+    _CORE = ("fingerprints", "shingles", "bands")
+    _TABLES = (
+        *_CORE,
+        "line_fps",
+        "prefixes",
+        "srp_bands",
+        "embeddings",
+        "image_fps",
+        "audio_fps",
+        "video_fps",
+        "splits",
+    )
+    # feature -> (ctor argument that enables it, what a reconstruction
+    # must reuse, the tables it lands, how a landed state gains them)
+    _FEATURES = {
+        "minhash": (None, "parameters", _CORE, None),
+        "bloom": ("bloom_bits", "sizing", (), None),
+        "prefix": (
+            "jaccard_exact_threshold/containment_threshold",
+            "thresholds",
+            ("prefixes",),
+            "ensure_prefixes(spark)",
+        ),
+        "embed": (
+            "embed_dim",
+            "geometry",
+            ("embeddings", "srp_bands"),
+            "backfill_embeddings(historical_kept_corpus)",
+        ),
+        "image": (
+            "image_grid_w",
+            "geometry and decoder",
+            ("image_fps",),
+            "backfill_image_fps(historical_kept_corpus)",
+        ),
+        "audio": (
+            "audio_n_windows",
+            "geometry and decoder",
+            ("audio_fps",),
+            "backfill_audio_fps(historical_kept_corpus)",
+        ),
+        "video": (
+            "video_every_ms",
+            "geometry and decoder",
+            ("video_fps",),
+            "backfill_video_fps(historical_kept_corpus)",
+        ),
+        "split": (None, "fractions", ("splits",), None),
+    }
 
     def __init__(
         self,
@@ -1748,18 +1853,14 @@ class CurationState:
         # exact Hamming verify runs on the joined longs directly, so
         # unlike the embed tables ONE landed table carries both the
         # candidate and verify sides (8 bytes per image-bearing kept
-        # doc). The GRID geometry and the decoder identity tag are
-        # pinned in ``_image_params.json`` — fingerprints derived with
-        # a different grid or decoder can never match the landed ones
-        # (silently missed image dups), same first-writer-wins
-        # manifest protocol as minhash/bloom/prefix/embed. The HAMMING
-        # budget is deliberately not pinned: the verify is exact over
+        # doc). The grid geometry and the decoder identity tag are
+        # pinned; the HAMMING budget is not (the verify is exact over
         # the landed longs, so a later batch may probe at any budget
-        # the bit width divides. ``image_col``/``image_decode_fn`` are
-        # derive-time inputs (cosmetic / injectable seam), not
-        # manifest state. Enabling on a state with landed batches
-        # needs ``backfill_image_fps`` (like embeddings, the state
-        # keeps keys, not media bytes).
+        # the bit width divides). ``image_col``/``image_decode_fn`` are
+        # derive-time inputs (cosmetic / injectable seam), not pinned.
+        # Enabling on a state with landed batches needs
+        # ``backfill_image_fps`` (like embeddings, the state keeps
+        # keys, not media bytes).
         self.image_grid_w = int(image_grid_w) if image_grid_w is not None else None
         self.image_grid_h = int(image_grid_h)
         self.image_col = str(image_col)
@@ -1769,11 +1870,9 @@ class CurationState:
         )
         # Opt-in AUDIO near-dup support (cfg.audio_near_hamming): the
         # image stanza's exact mirror — when ``audio_n_windows`` is
-        # set, write() lands ``audio_fps`` (doc_id, ahash) and probes
-        # chunk-bucket-join the landed longs; window count + decoder
-        # tag pinned in ``_audio_params.json``; the hamming budget is
-        # probe-time-free like the image one. Enable on a landed state
-        # via ``backfill_audio_fps``.
+        # set, write() lands ``audio_fps`` (doc_id, ahash); window
+        # count + decoder tag pinned, the hamming budget probe-time
+        # free. Enable on a landed state via ``backfill_audio_fps``.
         self.audio_n_windows = (
             int(audio_n_windows) if audio_n_windows is not None else None
         )
@@ -1787,8 +1886,7 @@ class CurationState:
         # (doc_id, fhash — one row per DISTINCT sampled-frame hash, the
         # shingle-table shape) and probes equi-join the landed rows +
         # count matches per pair. Sampling interval, grid geometry and
-        # decoder tag pinned in ``_video_params.json``; the MATCH
-        # THRESHOLD is probe-time-free like the hamming budgets.
+        # decoder tag pinned; the MATCH THRESHOLD is probe-time free.
         # Enable on a landed state via ``backfill_video_fps``.
         self.video_every_ms = (
             int(video_every_ms) if video_every_ms is not None else None
@@ -1810,17 +1908,14 @@ class CurationState:
         # cosine against the landed VECTORS (storage: dim x 8 bytes per
         # kept doc; the price of a no-false-positive verify — bands
         # alone can only propose). The GEOMETRY (dim/bits/bands/seed)
-        # is pinned in ``_embed_params.json``: bands derived with any
-        # other geometry can never collide with the landed ones, so a
-        # mismatch means silently missed semantic dups — same
-        # first-writer-wins manifest protocol as minhash/bloom/prefix.
-        # The cosine THRESHOLD is deliberately NOT pinned: the verify
-        # is exact, so a later batch may probe at any threshold.
-        # ``embed_col`` names the vector column on incoming kept
-        # frames; cosmetic (the landed table normalizes to ``v``), so
-        # not in the manifest. Enabling on a state with landed batches
-        # needs ``backfill_embeddings`` (unlike prefixes there is
-        # nothing to derive vectors from — the state keeps no text).
+        # is pinned: bands derived with any other geometry can never
+        # collide with the landed ones. The cosine THRESHOLD is not
+        # pinned: the verify is exact, so a later batch may probe at
+        # any threshold. ``embed_col`` names the vector column on
+        # incoming kept frames; cosmetic (the landed table normalizes
+        # to ``v``), so not pinned. Enabling on a state with landed
+        # batches needs ``backfill_embeddings`` (unlike prefixes there
+        # is nothing to derive vectors from — the state keeps no text).
         self.embed_dim = int(embed_dim) if embed_dim is not None else None
         if self.embed_dim is not None and embed_bits % embed_srp_bands:
             raise ValueError(
@@ -1843,10 +1938,9 @@ class CurationState:
         # (jaccard t=0.8 -> ~11%, containment t=0.9 -> ~10%); probe
         # cost per increment: one extra scan of the landed shingles +
         # prefixes with the batch side broadcast. The thresholds are
-        # pinned in ``_prefix_params.json`` (a prefix landed at frac f
-        # is exact for any probe frac <= f, but a SILENT threshold
-        # change would land under-length prefixes for future batches —
-        # so equality is enforced, like minhash_k/lsh_bands).
+        # pinned (a prefix landed at frac f is exact for any probe frac
+        # <= f, but a SILENT threshold change would land under-length
+        # prefixes for future batches — so equality is enforced).
         self.jaccard_exact_threshold = (
             float(jaccard_exact_threshold)
             if jaccard_exact_threshold is not None
@@ -1860,18 +1954,18 @@ class CurationState:
         # curate_increment's history anti-join can route definite-miss
         # rows around the shuffle join without re-scanning history.
         # Size for the EVENTUAL corpus cardinality — the bit width is
-        # fixed for the state's lifetime (recorded in _params.json) and
-        # an over-full filter degrades to all-maybe (correct, just no
-        # speedup). bloom_bits=None disables the filter entirely.
-        # Rounded UP to a byte multiple: build_bloom/might_contain
-        # reject partial bytes (floor-to-bytes would index past the
-        # array), and rounding here is deterministic so every session
-        # reconstructing this state lands on the same recorded width.
+        # pinned for the state's lifetime and an over-full filter
+        # degrades to all-maybe (correct, just no speedup).
+        # bloom_bits=None disables the filter entirely. Rounded UP to a
+        # byte multiple: build_bloom/might_contain reject partial bytes
+        # (floor-to-bytes would index past the array), and rounding
+        # here is deterministic so every session reconstructing this
+        # state lands on the same pinned width.
         self.bloom_bits = ((int(bloom_bits) + 7) // 8) * 8 if bloom_bits else None
         self.bloom_hashes = int(bloom_hashes)
 
-    def _path(self, name: str) -> str:
-        return f"{self.state_dir}/{name}"
+    def _path(self, rel: str = "") -> str:
+        return f"{self.state_dir}/{rel}" if rel else self.state_dir
 
     @classmethod
     def from_config(cls, cfg: CurationConfig, state_dir: str) -> "CurationState":
@@ -1921,139 +2015,306 @@ class CurationState:
             )
         return cls(state_dir, **kw)
 
+    # ---- the commit protocol -----------------------------------------
+
     def _fs(self, spark):
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.state_dir)
-        return jvm, path.getFileSystem(spark._jsc.hadoopConfiguration())
+        """(rel -> Hadoop Path under the state dir, its FileSystem)."""
+        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+        fs = jvm_path(self.state_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+        return (lambda rel="": jvm_path(self._path(rel))), fs
 
-    # line_fps is the OPTIONAL fourth table (cfg.dedup_lines): 60-bit
-    # fingerprints of every eligible line seen in any INPUT batch (not
-    # just kept docs — the batch line pass runs before the gates, so a
-    # line of a later-dropped doc still holds keeper status, exactly as
-    # in batch curate() over the concatenated corpus). Listed in
-    # _TABLES so compact()/crash-recovery cover it; exists() still
-    # probes only the three doc tables (line state is independent).
-    # srp_bands/embeddings are the OPTIONAL fifth/sixth tables
-    # (embed_dim set): SRP band buckets + exact vectors of every KEPT
-    # doc, the cross-history semantic-dedup probe targets. Listed in
-    # _TABLES so compact()/crash-recovery/growth_report cover them;
-    # exists() still probes only the three core doc tables.
-    # image_fps is the OPTIONAL eighth table (image_grid_w set): dHash
-    # perceptual fingerprints of every image-bearing KEPT doc, the
-    # cross-history image-dedup probe target — one table serves both
-    # candidate generation (chunk bucket-join) and the exact Hamming
-    # verify (bit_count over the joined longs). Listed in _TABLES so
-    # compact()/crash-recovery/growth_report cover it; exists() still
-    # probes only the three core doc tables.
-    # splits is the OPTIONAL ninth table (cfg.split_fractions in
-    # increments): the IMMUTABLE (doc_id, component, split) assignment
-    # of every kept doc at the time it landed — what makes the
-    # leakage-safe split STABLE across daily batches (a landed doc's
-    # split never changes; a newcomer near-dup of a landed doc is
-    # dropped by history-wins, so near-twins can never straddle splits
-    # — the one surviving member carries the cluster's assignment).
-    # The split fractions + salt are pinned in ``_split_params.json``:
-    # a later batch assigning under different fractions would silently
-    # skew the landed proportions.
-    _TABLES = (
-        "fingerprints",
-        "shingles",
-        "bands",
-        "line_fps",
-        "prefixes",
-        "srp_bands",
-        "embeddings",
-        "image_fps",
-        "audio_fps",
-        "video_fps",
-        "splits",
-    )
+    def _get(self, spark, rel: str) -> bytes:
+        hp, fs = self._fs(spark)
+        stream = fs.open(hp(rel))
+        try:
+            return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
 
-    def _recover_crashed_compact(self, spark, names=None) -> list[str]:
-        """Roll back a compact() interrupted between its two renames.
+    def _put(self, spark, rel: str, payload: bytes) -> None:
+        hp, fs = self._fs(spark)
+        out = fs.create(hp(rel), True)
+        try:
+            out.write(bytearray(payload))
+        finally:
+            out.close()
 
-        That crash window leaves ``table`` MISSING and ``table__gc``
-        holding the only copy of the state. Every state entry point
-        (``exists``/``_read``/``compact``) calls this first, because
-        each fails differently on the bare post-crash layout:
-        ``exists()`` would report no history (silently re-admitting
-        every duplicate via the bootstrap path), ``_read`` would die on
-        a missing dir, and ``compact()`` would DELETE ``__gc`` as a
-        crashed-run leftover — destroying the history permanently.
-        Idempotent, one existence probe per table on the happy path;
-        returns the recovered table names."""
-        jvm, fs = self._fs(spark)
+    def _data_files(self, spark, rels) -> list:
+        hp, fs = self._fs(spark)
+        return [
+            st
+            for rel in rels
+            if fs.exists(hp(rel))
+            for st in fs.listStatus(hp(rel))
+            if not st.getPath().getName().startswith(("_", "."))
+        ]
 
-        def hpath(p: str):
-            return jvm.org.apache.hadoop.fs.Path(p)
+    @staticmethod
+    def _has(m: dict, *tables: str) -> bool:
+        return all(t in m["tables"] for t in tables)
 
-        recovered = []
-        for name in names or self._TABLES:
-            table, gc = self._path(name), self._path(name) + "__gc"
-            if not fs.exists(hpath(table)) and fs.exists(hpath(gc)):
-                if not fs.rename(hpath(gc), hpath(table)):
-                    raise IOError(
-                        f"recover: rename {gc} -> {table} failed; state "
-                        "is intact under __gc but unreadable until renamed"
-                    )
-                recovered.append(name)
-        return recovered
+    def _manifest(self, spark) -> dict:
+        """The committed snapshot: the highest manifest version
+        ({version, tables: {name: [generation dirs]}, params, bloom}).
+        A legacy state is imported first."""
+        hp, fs = self._fs(spark)
+        if fs.exists(hp(_MANIFESTS)):
+            names = sorted(
+                n
+                for n in (st.getPath().getName() for st in fs.listStatus(hp(_MANIFESTS)))
+                if n.endswith(".json")  # not a temp file
+            )
+            if names:
+                return json.loads(self._get(spark, f"{_MANIFESTS}/{names[-1]}"))
+        return self._import_legacy(spark)
+
+    def _commit(
+        self,
+        spark,
+        m: dict,
+        frames: dict,
+        params: dict,
+        bloom: bytes | None = None,
+        replace: bool = False,
+    ) -> dict:
+        """THE commit point: write ``frames`` (table -> tagged rows)
+        and the ``bloom`` bytes under generation ``gen-<v+1>``, then
+        add manifest version v+1 that appends the generation to each
+        written table (or, with ``replace``, makes it the tables' only
+        one). Returns the new manifest."""
+        hp, fs = self._fs(spark)
+        v = m["version"] + 1
+        gen = f"gen-{v:06d}"
+        fs.delete(hp(gen), True)  # orphan of a crashed attempt at v
+        tables = {} if replace else dict(m["tables"])
+        for name, df in frames.items():
+            df.write.parquet(self._path(f"{gen}/{name}"))
+            tables[name] = [*tables.get(name, []), f"{gen}/{name}"]
+        new = {
+            "version": v,
+            "tables": {n: tables[n] for n in self._TABLES if n in tables},
+            "params": params,
+            "bloom": m["bloom"] if bloom is None else f"{gen}/bloom.bin",
+        }
+        if bloom is not None:
+            self._put(spark, new["bloom"], bloom)
+        final, tmp = f"{_MANIFESTS}/{v:010d}.json", f"{_MANIFESTS}/.{v:010d}.tmp"
+        self._put(spark, tmp, json.dumps(new).encode())
+        if fs.exists(hp(final)) or not fs.rename(hp(tmp), hp(final)):
+            raise IOError(
+                f"CurationState({self.state_dir}): manifest version {v} "
+                "was committed by another writer"
+            )
+        try:
+            self._gc(spark, new)
+        except Exception as e:  # the commit stands; the next one collects
+            warnings.warn(f"CurationState({self.state_dir}): gc failed: {e}")
+        return new
+
+    def _gc(self, spark, m: dict) -> None:
+        """Delete generations ``m`` no longer references (superseded by
+        compaction, or orphaned by a crash) and older manifest
+        versions. Best-effort, after the commit."""
+        hp, fs = self._fs(spark)
+        live = {rel.split("/")[0] for rels in m["tables"].values() for rel in rels}
+        live.add((m["bloom"] or "").split("/")[0])
+        for st in fs.listStatus(hp()):
+            name = st.getPath().getName()
+            if name.startswith("gen-") and name not in live:
+                fs.delete(st.getPath(), True)
+        for st in fs.listStatus(hp(_MANIFESTS)):
+            if st.getPath().getName() != f"{m['version']:010d}.json":
+                fs.delete(st.getPath(), False)
+
+    def _rewrite(
+        self, spark, m: dict, target_file_bytes: int, merge_schema: bool = False
+    ) -> dict:
+        """The compaction path: every table of ``m`` (and the Bloom
+        filter) rewritten into size-targeted files of ONE new generation,
+        tags preserved (and added as NULL where a legacy file lacks
+        them), committed as the tables' only generation."""
+        frames = {}
+        for name, rels in m["tables"].items():
+            size = sum(st.getLen() for st in self._data_files(spark, rels))
+            df = spark.read.option("mergeSchema", merge_schema).parquet(
+                *[self._path(r) for r in rels]
+            )
+            for tag, typ in (("_epoch", "long"), ("_run", "string")):
+                df = df.withColumn(
+                    tag, (F.col(tag) if tag in df.columns else F.lit(None)).cast(typ)
+                )
+            frames[name] = df.repartition(max(1, -(-size // int(target_file_bytes))))
+        bloom = None if m["bloom"] is None else self._get(spark, m["bloom"])
+        return self._commit(spark, m, frames, m["params"], bloom=bloom, replace=True)
+
+    def _import_legacy(self, spark) -> dict:
+        """One-time import of a pre-manifest state dir (see the class
+        docstring); the empty snapshot when there is nothing to import."""
+        hp, fs = self._fs(spark)
+        legacy: dict = {"version": 0, "tables": {}, "params": {}, "bloom": None}
+        if not fs.exists(hp()):
+            return legacy
+        for name in self._TABLES:
+            if self._data_files(spark, [name]):
+                legacy["tables"][name] = [name]
+        pins = [
+            st.getPath().getName()
+            for st in fs.listStatus(hp())
+            if st.getPath().getName().startswith("_")
+            and st.getPath().getName().endswith("params.json")
+        ]
+        for name in pins:
+            # the one pin file without a feature name held MinHash/LSH
+            key = name[1 : -len("params.json")].rstrip("_") or "minhash"
+            legacy["params"][key] = json.loads(self._get(spark, name))
+        if not legacy["tables"] and not legacy["params"]:
+            return legacy
+        m = self._rewrite(spark, legacy, 128 * 1024 * 1024, merge_schema=True)
+        for rel in (*self._TABLES, *pins, "_bloom.bin"):
+            fs.delete(hp(rel), True)
+        return m
+
+    # ---- pinned parameters -------------------------------------------
+
+    def _pins(self) -> dict:
+        """This handle's parameters, one key per feature (None: the
+        feature is off on this handle)."""
+        return {
+            "minhash": {"minhash_k": self.minhash_k, "lsh_bands": self.lsh_bands},
+            "bloom": None
+            if self.bloom_bits is None
+            else {"bloom_bits": self.bloom_bits, "bloom_hashes": self.bloom_hashes},
+            "prefix": None
+            if self._prefix_frac() is None
+            else {
+                "jaccard_exact_threshold": self.jaccard_exact_threshold,
+                "containment_threshold": self.containment_threshold,
+            },
+            "embed": None
+            if self.embed_dim is None
+            else {
+                "embed_dim": self.embed_dim,
+                "embed_bits": self.embed_bits,
+                "embed_srp_bands": self.embed_srp_bands,
+                "embed_seed": self.embed_seed,
+            },
+            "image": None
+            if self.image_grid_w is None
+            else {
+                "image_grid_w": self.image_grid_w,
+                "image_grid_h": self.image_grid_h,
+                "image_decoder": self.image_decoder_tag,
+            },
+            "audio": None
+            if self.audio_n_windows is None
+            else {
+                "audio_n_windows": self.audio_n_windows,
+                "audio_decoder": self.audio_decoder_tag,
+            },
+            "video": None
+            if self.video_every_ms is None
+            else {
+                "video_every_ms": self.video_every_ms,
+                "video_grid_w": self.video_grid_w,
+                "video_grid_h": self.video_grid_h,
+                "video_decoder": self.video_decoder_tag,
+            },
+        }
+
+    def _checked_pins(self, m: dict, split: dict | None = None) -> dict:
+        """Validate this handle (and a batch's ``split`` pin) against
+        the pins of ``m``; returns the pins the next commit records —
+        the first commit using a feature pins it."""
+        mine = {**self._pins(), "split": split}
+        for key, have in m["params"].items():
+            arg, what = self._FEATURES[key][:2]
+            want = mine[key]
+            if want is None and arg is not None:
+                raise ValueError(
+                    f"CurationState({self.state_dir}) has landed {key} state "
+                    f"({have}) but this instance was constructed without "
+                    f"{arg} — its writes would leave landed docs invisible "
+                    f"to every later {key} probe (silently missed "
+                    "cross-batch duplicates); construct with the landed "
+                    "parameters"
+                )
+            if want is not None and want != have:
+                raise ValueError(
+                    f"CurationState({self.state_dir}) constructed with "
+                    f"{want} but the landed state was derived with {have}; "
+                    f"rows derived differently never match — use the landed "
+                    f"{what} (pinned for the state's lifetime) or a fresh state"
+                )
+        return {**m["params"], **{k: v for k, v in mine.items() if v is not None}}
+
+    def _require_tables(self, m: dict, features) -> None:
+        """On a landed state, every feature in ``features`` needs its
+        tables landed too: appending or probing only new batches would
+        leave the older docs invisible to it (silently missed
+        cross-batch duplicates)."""
+        if not self._has(m, *self._CORE):
+            return
+        for f in features:
+            tables, fix = self._FEATURES[f][2:]
+            if fix is not None and not self._has(m, *tables):
+                raise ValueError(
+                    f"CurationState({self.state_dir}) has landed batches but "
+                    f"no landed {'/'.join(tables)} — run {fix} once "
+                    f"(offline) before {f}-enabled appends or probes"
+                )
+
+    # ---- read side ---------------------------------------------------
+
+    def landed(self, spark, *tables: str) -> bool:
+        """True once every named table has a committed generation."""
+        return self._has(self._manifest(spark), *tables)
 
     def exists(self, spark) -> bool:
-        """True once a first batch has FULLY landed in all three tables.
+        """True once a first batch is committed (the three core tables
+        are in the manifest). Files of an uncommitted generation are
+        never consulted, so a crashed first write reads as not landed
+        and the retry bootstraps."""
+        return self.landed(spark, *self._CORE)
 
-        Primary probe is the committed-write marker (``_SUCCESS``): the
-        committer creates the dir (with only ``_temporary``) before any
-        data commits, so a bare-DIR probe would call a crashed first
-        write 'landed' and every later batch would die reading a
-        schemaless table. But success markers are commonly DISABLED
-        (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false`` is
-        typical on object-store committers), so when the marker is
-        absent we fall back to probing for committed top-level data
-        files (anything not named ``_*``/``.*`` — crashed v1 writes
-        leave only ``_temporary``, which the fallback ignores). Without
-        the fallback, every increment would silently take the bootstrap
-        path forever: history dedup stops and duplicate docs are
-        re-admitted with no error. Checked through the Hadoop
-        FileSystem API so any Spark-supported store works.
+    def _read(
+        self,
+        spark,
+        name: str,
+        exclude_epoch: int | None,
+        run_id: str | None,
+    ) -> DataFrame:
+        rels = self._manifest(spark)["tables"].get(name)
+        if not rels:
+            raise FileNotFoundError(
+                f"CurationState({self.state_dir}) has no landed {name} table"
+            )
+        df = spark.read.parquet(*[self._path(r) for r in rels])
+        if exclude_epoch is not None:
+            # eqNullSafe: legacy rows carry NULL tags — a null-hostile
+            # `!=` would silently drop that entire history from every
+            # dedup join
+            df = df.filter(
+                ~(
+                    F.col("_epoch").eqNullSafe(int(exclude_epoch))
+                    & F.col("_run").eqNullSafe(run_id or "")
+                )
+            )
+        return df.drop("_epoch", "_run")
 
-        Known limit of the fallback: on committers that make TASK
-        commits visible before job commit (some object-store
-        committers), a first write that crashes mid-job can leave
-        visible part files and read as 'landed' — later increments
-        then dedup against a partial history (duplicates of the
-        unlanded docs slip through; never data loss). If your
-        committer behaves that way, keep ``_SUCCESS`` markers enabled
-        (the primary probe is then authoritative) or clear the state
-        dirs before retrying a failed bootstrap."""
-        self._recover_crashed_compact(spark)
-        return all(
-            self._table_landed(spark, n)
-            for n in ("fingerprints", "shingles", "bands")
-        )
+    def fingerprints(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        return self._read(spark, "fingerprints", exclude_epoch, run_id)
 
-    def _table_landed(self, spark, name: str) -> bool:
-        """Committed-write probe for one state table (see ``exists``
-        for the marker-vs-data-file fallback rationale)."""
-        jvm, fs = self._fs(spark)
-        dir_path = jvm.org.apache.hadoop.fs.Path(self._path(name))
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(self._path(name) + "/_SUCCESS")):
-            return True
-        if not fs.exists(dir_path):
-            return False
-        for st in fs.listStatus(dir_path):
-            base = st.getPath().getName()
-            if not base.startswith("_") and not base.startswith("."):
-                return True
-        return False
+    def shingles(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        return self._read(spark, "shingles", exclude_epoch, run_id)
 
-    def line_fps_exist(self, spark) -> bool:
-        """True once a line-fingerprint batch has fully landed — probed
-        separately from ``exists()`` because the table only ever exists
-        for ``dedup_lines`` pipelines (and may be enabled later in a
-        state's life: the first line-enabled batch bootstraps it)."""
-        self._recover_crashed_compact(spark, ("line_fps",))
-        return self._table_landed(spark, "line_fps")
+    def bands(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        return self._read(spark, "bands", exclude_epoch, run_id)
 
     def line_fps(
         self, spark, exclude_epoch: int | None = None, run_id: str | None = None
@@ -2061,34 +2322,6 @@ class CurationState:
         """The landed (line_fp: long) history for the incremental line
         pass, with the same replayed-epoch exclusion as the doc tables."""
         return self._read(spark, "line_fps", exclude_epoch, run_id)
-
-    def append_line_fps(
-        self,
-        fps: DataFrame,
-        mode: str = "append",
-        epoch_id: int | None = None,
-        run_id: str | None = None,
-    ) -> None:
-        """Append one batch's surviving eligible-line fingerprints,
-        tagged like every other state append so a replayed epoch can
-        exclude its own crashed attempt's rows. The caller must ensure
-        ``fps``'s plan does NOT read this same table (derive it from a
-        checkpointed frame — ``curate_increment`` does)."""
-        etag = F.lit(-1 if epoch_id is None else int(epoch_id)).alias("_epoch")
-        rtag = F.lit(run_id or "").alias("_run")
-        fps.select("line_fp").withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-            mode
-        ).parquet(self._path("line_fps"))
-
-    def splits_exist(self, spark) -> bool:
-        """True once a split batch has fully landed — probed separately
-        from ``exists()`` because the table only exists for pipelines
-        that pass ``split_fractions`` (and may be enabled later: the
-        first split-enabled batch bootstraps it, covering only docs
-        kept from then on — earlier docs backfill via one
-        ``append_splits`` of a batch-mode assignment)."""
-        self._recover_crashed_compact(spark, ("splits",))
-        return self._table_landed(spark, "splits")
 
     def split_assignments(
         self, spark, exclude_epoch: int | None = None, run_id: str | None = None
@@ -2104,228 +2337,86 @@ class CurationState:
             ["doc_id", "component", "split"]
         )
 
-    def _sync_split_params(self, spark, fractions) -> None:
-        """First-writer-wins manifest for the split fractions (and the
-        fixed salt): a later batch assigning under DIFFERENT fractions
-        would silently skew the landed train/val/test proportions and
-        break the 'same component -> same split' determinism — not an
-        error any read would surface."""
-        mine = {
-            "fractions": [[str(n), float(f)] for n, f in fractions],
-            "salt": "split",
-        }
+    def prefixes(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, sh_h) prefix history, with the same
+        replayed-epoch exclusion as the doc tables. (A backfilled row
+        of an excluded epoch can surface here — tagged ("", -1) by
+        ``ensure_prefixes`` — but the candidates it generates die in
+        the metric verify, whose shingle read IS epoch-excluded.)"""
+        return self._read(spark, "prefixes", exclude_epoch, run_id)
 
-        def validate(landed: dict) -> None:
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) landed split "
-                    f"assignments under {landed} but this batch uses "
-                    f"{mine}; fractions are pinned for a state's "
-                    "lifetime (use a fresh state to re-split)"
-                )
+    def srp_bands(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, band_idx, band_val) SRP bucket history."""
+        return self._read(spark, "srp_bands", exclude_epoch, run_id)
 
-        self._sync_manifest(spark, "_split_params.json", mine, validate)
+    def embeddings(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, v: array<double>) vector history — the
+        exact-cosine verify side of the semantic probe."""
+        return self._read(spark, "embeddings", exclude_epoch, run_id)
 
-    def append_splits(
-        self,
-        assign: DataFrame,
-        fractions,
-        mode: str = "append",
-        epoch_id: int | None = None,
-        run_id: str | None = None,
-    ) -> None:
-        """Append one batch's (doc_id, component, split) assignments,
-        tagged like every other state append. Syncs the fractions
-        manifest first. The caller must ensure ``assign``'s plan does
-        not read this table (``curate_increment`` derives it from
-        checkpointed frames)."""
-        self._sync_split_params(assign.sparkSession, fractions)
-        etag = F.lit(-1 if epoch_id is None else int(epoch_id)).alias("_epoch")
-        rtag = F.lit(run_id or "").alias("_run")
-        assign.select("doc_id", "component", "split").withColumns(
-            {"_epoch": etag, "_run": rtag}
-        ).write.mode(mode).parquet(self._path("splits"))
+    def image_fps(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, dhash) perceptual-fingerprint history."""
+        return self._read(spark, "image_fps", exclude_epoch, run_id)
 
-    def _sync_manifest(self, spark, filename: str, payload, validate) -> None:
-        """ONE land-once/validate parameter-manifest protocol shared by
-        params/bloom/prefix syncs (three near-verbatim copies had begun
-        to drift): if the manifest exists, ``validate(landed_dict)``;
-        else, when ``payload`` is not None, land it with
-        ``create(overwrite=false)`` — atomic on HDFS-like stores, so
-        two concurrent first writers cannot both land different params
-        unseen: the loser's create fails, and it re-reads and
-        validates against the winner's manifest like any later caller.
-        ``payload=None`` means this instance has nothing to land (the
-        feature is off here) — validation still runs if someone ELSE
-        landed one.
-        """
-        import json
+    def audio_fps(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, ahash) energy-contour history."""
+        return self._read(spark, "audio_fps", exclude_epoch, run_id)
 
-        jvm, fs = self._fs(spark)
-        path = jvm.org.apache.hadoop.fs.Path(f"{self.state_dir}/{filename}")
+    def video_fps(
+        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
+    ) -> DataFrame:
+        """The landed (doc_id, fhash) sampled-frame history."""
+        return self._read(spark, "video_fps", exclude_epoch, run_id)
 
-        def validate_landed() -> None:
-            stream = fs.open(path)
-            try:
-                landed = json.loads(
-                    jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-                )
-            finally:
-                stream.close()
-            validate(landed)
-
-        if fs.exists(path):
-            validate_landed()
-            return
-        if payload is None:
-            return
-        try:
-            out = fs.create(path, False)  # no-overwrite: atomic first-writer-wins
-            try:
-                out.write(bytearray(json.dumps(payload).encode("utf-8")))
-            finally:
-                out.close()
-        except Exception:
-            # Lost the create race (FileAlreadyExistsException through
-            # py4j) — converge on the winner's manifest.
-            if not fs.exists(path):
-                raise
-            validate_landed()
-
-    def sync_params(self, spark) -> None:
-        """Land ``_params.json`` on first write; on every later call,
-        raise if this instance's parameters differ from the landed
-        ones (the guard ``curate_increment`` performs against cfg only
-        covers in-memory consistency — this covers the on-disk truth).
-        """
-
-        def validate(landed: dict) -> None:
-            if (landed.get("minhash_k"), landed.get("lsh_bands")) != (
-                self.minhash_k,
-                self.lsh_bands,
-            ):
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"minhash_k={self.minhash_k}, lsh_bands={self.lsh_bands} "
-                    f"but the landed state was derived with {landed}; "
-                    "band hashes would never match — use the landed parameters"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_params.json",
-            {"minhash_k": self.minhash_k, "lsh_bands": self.lsh_bands},
-            validate,
-        )
-
-    # ---- incremental Bloom filter over landed fingerprints ----------
-    # Correctness invariant: the filter is a SUPERSET of the landed
-    # fingerprint set at all times. Guaranteed by (a) updating the
-    # bloom BEFORE the fingerprints append in write() — a crash
-    # between the two leaves extra bits (false positives, removed by
-    # the exact join), never missing ones; (b) bits only ever being
-    # added; (c) bootstrap from the full landed history when the file
-    # is absent (legacy states, or a crashed atomic replace).
-
-    def _bloom_file(self) -> str:
-        return f"{self.state_dir}/_bloom.bin"
-
-    def _sync_bloom_params(self, spark) -> None:
-        """Mirror of sync_params for the bloom sizing: first user lands
-        `_bloom_params.json` atomically; later instances must match —
-        probing with a different bit width or hash count than the bits
-        were built with produces FALSE NEGATIVES, i.e. silently
-        readmitted duplicates. A separate manifest (not _params.json)
-        because the filter can be enabled later in a state's life."""
-
-        def validate(landed: dict) -> None:
-            if self.bloom_bits is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has a landed Bloom "
-                    f"filter ({landed}) but this instance was constructed "
-                    "without bloom_bits — writes that skip the bloom update "
-                    "would create false negatives (readmitted duplicates) "
-                    "for every later bloom-enabled reader"
-                )
-            if (landed.get("bloom_bits"), landed.get("bloom_hashes")) != (
-                self.bloom_bits,
-                self.bloom_hashes,
-            ):
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"bloom_bits={self.bloom_bits}, bloom_hashes="
-                    f"{self.bloom_hashes} but the landed filter was built "
-                    f"with {landed}; probes would miss landed keys — use "
-                    "the landed sizing"
-                )
-
-        payload = (
-            None
-            if self.bloom_bits is None
-            else {"bloom_bits": self.bloom_bits, "bloom_hashes": self.bloom_hashes}
-        )
-        self._sync_manifest(spark, "_bloom_params.json", payload, validate)
+    # ---- Bloom filter over the landed fingerprints --------------------
+    # Invariant: the committed filter is a SUPERSET of the committed
+    # fingerprint set. It commits in the same manifest as the rows it
+    # covers, bits are only ever added, and a state without one builds
+    # it from the full landed history.
 
     def read_bloom(self, spark) -> bytes | None:
-        """The landed filter bytes, or None if never written."""
-        jvm, fs = self._fs(spark)
-        path = jvm.org.apache.hadoop.fs.Path(self._bloom_file())
-        if not fs.exists(path):
-            return None
-        stream = fs.open(path)
-        try:
-            return bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
+        """The committed filter bytes, or None if none is committed."""
+        rel = self._manifest(spark)["bloom"]
+        return None if rel is None else self._get(spark, rel)
 
-    def _write_bloom(self, spark, payload: bytes) -> None:
-        # tmp + rename: a crash window can at worst DELETE the file
-        # (between delete and rename), and an absent file bootstraps
-        # from full history on next use — superset invariant holds
-        jvm, fs = self._fs(spark)
-        tmp = jvm.org.apache.hadoop.fs.Path(self._bloom_file() + ".tmp")
-        final = jvm.org.apache.hadoop.fs.Path(self._bloom_file())
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        if fs.exists(final):
-            fs.delete(final, False)
-        if not fs.rename(tmp, final):
-            raise IOError(f"bloom filter rename failed: {self._bloom_file()}")
-
-    def ensure_bloom(self, spark) -> None:
-        """Bootstrap the filter from the FULL landed fingerprint
-        history when enabled but absent (a pre-bloom state being
-        upgraded, or a crashed replace). One pass over the fingerprint
-        table — paid once, not per increment."""
+    def _landed_bloom(self, spark, m: dict) -> bytes | None:
+        """The filter covering ``m``'s fingerprints: the committed one,
+        else one built from the landed history (None: nothing landed)."""
         from clickhouse_mysql_data_reader_spark.operators.membership import (
             build_bloom,
         )
 
-        if self.bloom_bits is None:
-            return
-        self._sync_bloom_params(spark)
-        if self.read_bloom(spark) is not None or not self.exists(spark):
-            return
-        payload = build_bloom(
+        if m["bloom"] is not None:
+            return self._get(spark, m["bloom"])
+        if not self._has(m, "fingerprints"):
+            return None
+        return build_bloom(
             self.fingerprints(spark), "fp", self.bloom_bits, self.bloom_hashes
         )
-        self._write_bloom(spark, payload)
 
-    # ---- landed AllPairs prefixes (exact near-dup vs history) --------
-    # Correctness invariant: every landed doc's prefix rows are present
-    # whenever the doc's shingles are (write() lands prefixes in the
-    # same sequence; ensure_prefixes backfills a missing table from the
-    # landed shingles). Extra/duplicate prefix rows are harmless — the
-    # candidate join is distinct() and the metric verify (which reads
-    # the epoch-excluded SHINGLE table) settles every candidate — but a
-    # MISSING doc's prefix can silently miss a cross-history pair,
-    # which is exactly the guarantee the table exists to provide; hence
-    # the manifest check that rejects prefix-less writers.
+    def ensure_bloom(self, spark) -> None:
+        """Commit the filter built from the FULL landed fingerprint
+        history when enabled but absent (a pre-bloom state being
+        upgraded). One pass over the fingerprint table — paid once, not
+        per increment."""
+        if self.bloom_bits is None:
+            return
+        m = self._manifest(spark)
+        pins = self._checked_pins(m)
+        if m["bloom"] is None and self._has(m, "fingerprints"):
+            self._commit(spark, m, {}, pins, bloom=self._landed_bloom(spark, m))
+
+    # ---- backfills: enable a feature on an already-landed state -------
 
     def _prefix_frac(self) -> float | None:
         """The slice fraction the landed prefixes are derived with: the
@@ -2340,85 +2431,14 @@ class CurationState:
             fracs.append(1.0 - self.containment_threshold)
         return max(fracs) if fracs else None
 
-    def _sync_prefix_params(self, spark) -> None:
-        """Mirror of _sync_bloom_params for the prefix thresholds: the
-        first prefix-enabled user lands ``_prefix_params.json``
-        atomically; later instances must match. A separate manifest
-        (not _params.json) because — like the bloom — exact near-dup
-        can be enabled later in a state's life (``ensure_prefixes``
-        backfills the table from the landed shingles)."""
-        mine = {
-            "jaccard_exact_threshold": self.jaccard_exact_threshold,
-            "containment_threshold": self.containment_threshold,
-        }
-
-        def validate(landed: dict) -> None:
-            if (self.jaccard_exact_threshold, self.containment_threshold) == (
-                None,
-                None,
-            ):
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed exact-"
-                    f"near-dup prefixes ({landed}) but this instance was "
-                    "constructed without the thresholds — writes that skip "
-                    "the prefix append would leave landed docs invisible "
-                    "to every later exact/containment history probe "
-                    "(silently missed cross-batch duplicates); construct "
-                    "with the landed thresholds"
-                )
-            if (
-                landed.get("jaccard_exact_threshold"),
-                landed.get("containment_threshold"),
-            ) != (self.jaccard_exact_threshold, self.containment_threshold):
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed prefixes were derived with "
-                    f"{landed}; a looser landed fraction stays exact but a "
-                    "silent threshold change would land under-length "
-                    "prefixes for future batches — use the landed "
-                    "thresholds (or a fresh state for new ones)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_prefix_params.json",
-            mine if self._prefix_frac() is not None else None,
-            validate,
-        )
-
-    def prefixes_exist(self, spark) -> bool:
-        """True once a prefix batch has fully landed — probed separately
-        from ``exists()`` because the table only exists for
-        exact-near-dup states (and may be enabled later)."""
-        self._recover_crashed_compact(spark, ("prefixes",))
-        return self._table_landed(spark, "prefixes")
-
-    def prefixes(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, sh_h) prefix history, with the same
-        replayed-epoch exclusion as the doc tables. (A backfilled row
-        of an excluded epoch can surface here — tagged ("", -1) by
-        ``ensure_prefixes`` — but the candidates it generates die in
-        the metric verify, whose shingle read IS epoch-excluded.)"""
-        return self._read(spark, "prefixes", exclude_epoch, run_id)
-
     def ensure_prefixes(self, spark) -> None:
         """Backfill the prefix table from the FULL landed shingle
         history when exact near-dup is enabled on a state that landed
-        batches before (or a crashed write left shingles without
-        prefixes). One rarest-sort pass over the landed shingles — the
-        corpus-wide cost write() amortizes per batch, paid once here.
-        OFFLINE op like compact(): quiesce OTHER writers first
-        (``write()`` itself calls this before its own append, which is
-        the one legitimate concurrent caller).
-
-        Crash-safe via the compact() protocol: the backfill writes to a
-        ``prefixes__bf`` staging dir and RENAMES into place — a retry
-        after any crash deletes the stale staging dir and starts over
-        (the old mode('error') write wedged permanently on its own
-        leftovers, or worse, read a task-committed PARTIAL table as
-        landed and no-opped)."""
+        batches before. One rarest-sort pass over the landed shingles —
+        the corpus-wide cost write() amortizes per batch, paid once
+        here, as its own commit. ``write()`` calls it before deriving
+        its batch, so a prefix-enabled handle never lands prefixes for
+        new docs only."""
         from clickhouse_mysql_data_reader_spark.operators.dedup import (
             prefix_shingles,
         )
@@ -2426,173 +2446,64 @@ class CurationState:
         frac = self._prefix_frac()
         if frac is None:
             return
-        self._sync_prefix_params(spark)
-        if self.prefixes_exist(spark) or not self.exists(spark):
+        m = self._manifest(spark)
+        pins = self._checked_pins(m)
+        if self._has(m, "prefixes") or not self._has(m, *self._CORE):
             return
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("prefixes")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        if fs.exists(hp(final)):
-            # exists but not landed (prefixes_exist was False): only
-            # uncommitted leftovers — clear them or the rename nests
-            fs.delete(hp(final), True)
         rows = prefix_shingles(
             self.shingles(spark).dropDuplicates(["doc_id", "sh_h"]), frac
         )
-        # tag types must MATCH write()'s appends exactly (plain int
-        # _epoch): a long-typed backfill next to int-typed appends makes
-        # every later mergeSchema read fail with CANNOT_MERGE_SCHEMAS
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(f"ensure_prefixes: rename {staging} -> {final} failed")
+        self._commit(spark, m, {"prefixes": _tagged(rows)}, pins)
 
-    # ---- landed SRP bands + vectors (semantic near-dup vs history) ---
-    # Correctness invariant: every landed doc's band rows AND vector
-    # row are present whenever its fingerprints are (write() lands all
-    # tables per batch; a mid-sequence crash leaves docs missing from
-    # the embed tables — cross-history semantic pairs against those
-    # docs are then MISSED, loose like every other mid-sequence crash,
-    # recoverable by replaying with (run_id, epoch_id) tags). Extra/
-    # duplicate rows are harmless: candidates are distinct()'d and the
-    # exact-cosine verify settles every candidate.
-
-    def _sync_embed_params(self, spark) -> None:
-        """Mirror of _sync_bloom_params for the SRP geometry: the first
-        embed-enabled user lands ``_embed_params.json`` atomically;
-        later instances must match — bands derived with a different
-        (dim, bits, bands, seed) can NEVER collide with the landed
-        ones, i.e. silently missed semantic duplicates, not an error
-        any join would surface. A separate manifest (not _params.json)
-        because semantic dedup can be enabled later in a state's life
-        (via ``backfill_embeddings``)."""
-        mine = {
-            "embed_dim": self.embed_dim,
-            "embed_bits": self.embed_bits,
-            "embed_srp_bands": self.embed_srp_bands,
-            "embed_seed": self.embed_seed,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.embed_dim is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed semantic-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without embed_dim — writes that skip the "
-                    "srp_bands/embeddings appends would leave landed docs "
-                    "invisible to every later semantic history probe "
-                    "(silently missed cross-batch semantic duplicates); "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed SRP bands were derived with "
-                    f"{landed}; band values would never collide — use the "
-                    "landed geometry (or a fresh state for new ones)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_embed_params.json",
-            mine if self.embed_dim is not None else None,
-            validate,
-        )
-
-    def embed_landed(self, spark) -> bool:
-        """True once a semantic batch has fully landed in BOTH embed
-        tables — probed separately from ``exists()`` because the
-        tables only exist for embed-enabled states (and may be enabled
-        later via ``backfill_embeddings``)."""
-        self._recover_crashed_compact(spark, ("srp_bands", "embeddings"))
-        return self._table_landed(spark, "srp_bands") and self._table_landed(
-            spark, "embeddings"
-        )
-
-    def srp_bands(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, band_idx, band_val) SRP bucket history,
-        with the same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "srp_bands", exclude_epoch, run_id)
-
-    def embeddings(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, v: array<double>) vector history — the
-        exact-cosine verify side of the semantic probe."""
-        return self._read(spark, "embeddings", exclude_epoch, run_id)
-
-    def backfill_embeddings(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable semantic dedup on a state whose batches landed BEFORE
-        embed support: derive and land both embed tables from the
-        historical KEPT corpus, which the CALLER must supply with its
-        vector column (``embed_col``) — unlike ``ensure_prefixes``
-        there is nothing on disk to derive vectors from (the state
-        keeps keys, not content). OFFLINE op: quiesce writers first.
-        Crash-safe via the ensure_prefixes staging protocol (write to
-        ``__bf`` dirs, rename into place; a retry clears stale
-        leftovers). Rows are tagged ``("", -1)`` like any backfill —
-        epoch exclusion is settled by the exact verify, exactly as
-        documented on ``prefixes``."""
+    def _backfill(self, kept: DataFrame, feature: str, id_col: str, derive) -> None:
+        """Enable ``feature`` on a state whose batches landed before it:
+        derive its tables from the historical KEPT corpus the caller
+        supplies (the state keeps keys, not content or media bytes) and
+        commit them together. OFFLINE op: quiesce writers first. Rows
+        are tagged ``("", -1)``; epoch exclusion is settled by the exact
+        verify, as documented on ``prefixes``."""
         spark = kept.sparkSession
-        if self.embed_dim is None:
+        if self._pins()[feature] is None:
             raise ValueError(
-                "backfill_embeddings needs an embed-enabled state — "
-                "construct CurationState with embed_dim (and the rest of "
-                "the SRP geometry) first"
+                f"backfilling {feature} needs a {feature}-enabled state — "
+                f"construct CurationState with {self._FEATURES[feature][0]} "
+                "(and the rest of its parameters) first"
             )
-        self._sync_embed_params(spark)
-        if self.embed_landed(spark):
-            return
-        emb, srp = self._derive_embed(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        for name, rows in (("embeddings", emb), ("srp_bands", srp)):
-            final = self._path(name)
-            staging = final + "__bf"
-            if fs.exists(hp(staging)):
-                fs.delete(hp(staging), True)  # crashed earlier attempt
-            if fs.exists(hp(final)):
-                # A final dir can only come from a COMMITTED rename of
-                # a prior backfill attempt that crashed between the two
-                # renames (staging never becomes final otherwise), so
-                # this table is fully landed — embed_landed() is False
-                # only because its sibling is missing. Re-deriving is
-                # correct ONLY when the retry supplies the identical
-                # historical kept corpus; guard that instead of
-                # assuming it (a different corpus here would silently
-                # rewrite history with mismatched vectors).
-                landed_ids = spark.read.parquet(final).select("doc_id").distinct()
-                supplied = kept.select(F.col(id_col).alias("doc_id")).distinct()
-                mismatch = (
-                    landed_ids.exceptAll(supplied)
-                    .unionByName(supplied.exceptAll(landed_ids))
-                    .limit(1)
-                    .count()
-                )
-                if mismatch:
-                    raise ValueError(
-                        f"backfill_embeddings retry: landed {name} doc_ids "
-                        "differ from the supplied kept corpus — a retry "
-                        "must pass the SAME historical corpus as the "
-                        "crashed attempt (delete the landed "
-                        f"{final} first to backfill a different one)"
-                    )
-                fs.delete(hp(final), True)
-            rows.withColumns(
-                {"_epoch": F.lit(-1), "_run": F.lit("")}
-            ).write.mode("overwrite").parquet(staging)
-            if not fs.rename(hp(staging), hp(final)):
-                raise IOError(
-                    f"backfill_embeddings: rename {staging} -> {final} failed"
-                )
+        m = self._manifest(spark)
+        pins = self._checked_pins(m)
+        tables = self._FEATURES[feature][2]
+        if not self._has(m, *tables):
+            rows = derive(kept, id_col)
+            self._commit(
+                spark, m, {t: _tagged(df) for t, df in zip(tables, rows)}, pins
+            )
+
+    def backfill_embeddings(self, kept: DataFrame, id_col: str = "doc_id") -> None:
+        """``_backfill`` of both semantic tables; ``kept`` carries the
+        ``embed_col`` vectors (there is nothing on disk to derive them
+        from)."""
+        self._backfill(kept, "embed", id_col, self._derive_embed)
+
+    def backfill_image_fps(self, kept: DataFrame, id_col: str = "doc_id") -> None:
+        """``_backfill`` of ``image_fps``; ``kept`` carries ``image_col``."""
+        self._backfill(
+            kept, "image", id_col, lambda k, i: (self._derive_image(k, i),)
+        )
+
+    def backfill_audio_fps(self, kept: DataFrame, id_col: str = "doc_id") -> None:
+        """``_backfill`` of ``audio_fps``; ``kept`` carries ``audio_col``."""
+        self._backfill(
+            kept, "audio", id_col, lambda k, i: (self._derive_audio(k, i),)
+        )
+
+    def backfill_video_fps(self, kept: DataFrame, id_col: str = "doc_id") -> None:
+        """``_backfill`` of ``video_fps``; ``kept`` carries the clip and
+        duration columns."""
+        self._backfill(
+            kept, "video", id_col, lambda k, i: (self._derive_video(k, i),)
+        )
+
+    # ---- write side --------------------------------------------------
 
     def _derive_embed(self, kept: DataFrame, id_col: str):
         """(embeddings, srp_bands) rows for a kept batch — the same
@@ -2626,192 +2537,6 @@ class CurationState:
         ).withColumnRenamed("vid", "doc_id")
         return vecs, srp
 
-    def _sync_image_params(self, spark) -> None:
-        """Mirror of _sync_embed_params for the dHash derivation: the
-        first image-enabled user lands ``_image_params.json``; later
-        instances must match — fingerprints derived with a different
-        grid geometry or DECODER can never match the landed ones
-        (silently missed cross-batch image duplicates). A separate
-        manifest because image dedup can be enabled later in a state's
-        life (via ``backfill_image_fps``)."""
-        mine = {
-            "image_grid_w": self.image_grid_w,
-            "image_grid_h": self.image_grid_h,
-            "image_decoder": self.image_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.image_grid_w is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed image-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without image_grid_w — writes that skip "
-                    "the image_fps append would leave landed docs "
-                    "invisible to every later image history probe "
-                    "(silently missed cross-batch image duplicates); "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed image fingerprints were "
-                    f"derived with {landed}; fingerprints from different "
-                    "grids/decoders never match — use the landed "
-                    "geometry and decoder (or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_image_params.json",
-            mine if self.image_grid_w is not None else None,
-            validate,
-        )
-
-    def image_landed(self, spark) -> bool:
-        """True once an image batch has fully landed in ``image_fps``
-        — probed separately from ``exists()`` because the table only
-        exists for image-enabled states (and may be enabled later via
-        ``backfill_image_fps``)."""
-        self._recover_crashed_compact(spark, ("image_fps",))
-        return self._table_landed(spark, "image_fps")
-
-    def image_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, dhash) perceptual-fingerprint history,
-        with the same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "image_fps", exclude_epoch, run_id)
-
-    def backfill_image_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable image dedup on a state whose batches landed BEFORE
-        image support: derive and land ``image_fps`` from the
-        historical KEPT corpus, which the caller must supply with its
-        ``image_col`` (like ``backfill_embeddings`` — the state keeps
-        keys, not media bytes). OFFLINE op; crash-safe via the same
-        staging protocol (``__bf`` dir, rename commit; a retry clears
-        stale leftovers). Being ONE table, the between-renames crash
-        window of the embed backfill does not exist here — a landed
-        final dir means the backfill committed and the call is a
-        no-op via ``image_landed``."""
-        spark = kept.sparkSession
-        if self.image_grid_w is None:
-            raise ValueError(
-                "backfill_image_fps needs an image-enabled state — "
-                "construct CurationState with image_grid_w (and grid_h / "
-                "decoder) first"
-            )
-        self._sync_image_params(spark)
-        if self.image_landed(spark):
-            return
-        if self.image_col not in kept.columns:
-            raise ValueError(
-                "image-enabled CurationState needs the "
-                f"{self.image_col!r} binary column on the supplied "
-                f"historical corpus; got {kept.columns}"
-            )
-        rows = self._derive_image(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("image_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_image_fps: rename {staging} -> {final} failed"
-            )
-
-    def _sync_audio_params(self, spark) -> None:
-        """Mirror of _sync_image_params for the energy-contour
-        derivation: window count + decoder identity pinned in
-        ``_audio_params.json``."""
-        mine = {
-            "audio_n_windows": self.audio_n_windows,
-            "audio_decoder": self.audio_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.audio_n_windows is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed audio-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without audio_n_windows — writes that "
-                    "skip the audio_fps append would leave landed docs "
-                    "invisible to every later audio history probe; "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed audio fingerprints were "
-                    f"derived with {landed}; fingerprints from different "
-                    "window counts/decoders never match — use the landed "
-                    "geometry and decoder (or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_audio_params.json",
-            mine if self.audio_n_windows is not None else None,
-            validate,
-        )
-
-    def audio_landed(self, spark) -> bool:
-        """True once an audio batch has fully landed in ``audio_fps``
-        — ``image_landed``'s mirror."""
-        self._recover_crashed_compact(spark, ("audio_fps",))
-        return self._table_landed(spark, "audio_fps")
-
-    def audio_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, ahash) energy-contour history, with the
-        same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "audio_fps", exclude_epoch, run_id)
-
-    def backfill_audio_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable audio dedup on a state whose batches landed before
-        audio support — ``backfill_image_fps``'s mirror (one table, so
-        a landed final dir means a committed backfill; the caller
-        supplies the historical kept corpus with its clip column)."""
-        spark = kept.sparkSession
-        if self.audio_n_windows is None:
-            raise ValueError(
-                "backfill_audio_fps needs an audio-enabled state — "
-                "construct CurationState with audio_n_windows (and the "
-                "decoder) first"
-            )
-        self._sync_audio_params(spark)
-        if self.audio_landed(spark):
-            return
-        if self.audio_col not in kept.columns:
-            raise ValueError(
-                "audio-enabled CurationState needs the "
-                f"{self.audio_col!r} binary column on the supplied "
-                f"historical corpus; got {kept.columns}"
-            )
-        rows = self._derive_audio(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("audio_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_audio_fps: rename {staging} -> {final} failed"
-            )
-
     def _derive_audio(self, kept: DataFrame, id_col: str) -> DataFrame:
         """(doc_id, ahash) rows for a kept batch — the same
         ``_audio_sigs`` derivation the edge stages probe with."""
@@ -2825,88 +2550,6 @@ class CurationState:
             kept, id_col, self.audio_col, self.audio_n_windows,
             self.audio_decode_fn,
         )
-
-    def _sync_video_params(self, spark) -> None:
-        """Mirror of _sync_image_params for the frame-set derivation:
-        sampling interval, grid geometry and decoder identity pinned
-        in ``_video_params.json`` (frames sampled at a different
-        cadence or thumbnail grid can never match the landed ones)."""
-        mine = {
-            "video_every_ms": self.video_every_ms,
-            "video_grid_w": self.video_grid_w,
-            "video_grid_h": self.video_grid_h,
-            "video_decoder": self.video_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.video_every_ms is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed video-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without video_every_ms — writes that "
-                    "skip the video_fps append would leave landed docs "
-                    "invisible to every later video history probe; "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed video fingerprints were "
-                    f"derived with {landed}; frames sampled differently "
-                    "never match — use the landed geometry and decoder "
-                    "(or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_video_params.json",
-            mine if self.video_every_ms is not None else None,
-            validate,
-        )
-
-    def video_landed(self, spark) -> bool:
-        """True once a video batch has fully landed in ``video_fps``."""
-        self._recover_crashed_compact(spark, ("video_fps",))
-        return self._table_landed(spark, "video_fps")
-
-    def video_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, fhash) sampled-frame history, with the
-        same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "video_fps", exclude_epoch, run_id)
-
-    def backfill_video_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable video dedup on a state whose batches landed before
-        video support — ``backfill_image_fps``'s mirror; the caller
-        supplies the historical kept corpus with its clip AND duration
-        columns."""
-        spark = kept.sparkSession
-        if self.video_every_ms is None:
-            raise ValueError(
-                "backfill_video_fps needs a video-enabled state — "
-                "construct CurationState with video_every_ms (and the "
-                "grid/decoder) first"
-            )
-        self._sync_video_params(spark)
-        if self.video_landed(spark):
-            return
-        rows = self._derive_video(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("video_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_video_fps: rename {staging} -> {final} failed"
-            )
 
     def _derive_video(self, kept: DataFrame, id_col: str) -> DataFrame:
         """(doc_id, fhash) rows for a kept batch — the same
@@ -2981,432 +2624,175 @@ class CurationState:
         )
         return fp, sh, bands, prefixes, emb, srp
 
-    def write(self, kept: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              mode: str = "append", epoch_id: int | None = None,
-              run_id: str | None = None,
-              image_sigs: DataFrame | None = None,
-              audio_sigs: DataFrame | None = None,
-              video_sigs: DataFrame | None = None) -> DataFrame:
-        """Derive and append the three state tables for a kept batch;
-        returns the CHECKPOINTED ``kept`` — callers must act on the
-        returned frame, not the original lazy plan, whose state reads
-        are a stale snapshot once this append lands (a re-list under
-        stage retry or cache eviction would see this batch's own rows
-        and anti-join it to empty).
+    def write(
+        self,
+        kept: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        epoch_id: int | None = None,
+        run_id: str | None = None,
+        image_sigs: DataFrame | None = None,
+        audio_sigs: DataFrame | None = None,
+        video_sigs: DataFrame | None = None,
+        line_fps: DataFrame | None = None,
+        split_comps: DataFrame | None = None,
+        split_fractions=None,
+    ) -> DataFrame:
+        """Land one kept batch in ONE commit: its rows in every enabled
+        doc table, the batch's surviving eligible-line fingerprints
+        ``line_fps`` (``dedup_lines``), and the split assignment of the
+        kept docs over their within-batch near-dup components
+        ``split_comps`` (pinning ``split_fractions``). A crash anywhere
+        leaves the state exactly as before or exactly as after, so a
+        plain retry (``epoch_id=None``) lands the batch exactly once;
+        ``(epoch_id, run_id)`` tag the rows for replayed-epoch
+        exclusion (see ``curate_stream``).
 
-        ``kept`` is materialized ONCE via ``localCheckpoint`` before
-        deriving: (a) the three writes then read the checkpointed
+        Returns the CHECKPOINTED ``kept``: it is materialized ONCE via
+        ``localCheckpoint`` so every table derives from the checkpointed
         blocks instead of re-executing the caller's full curation plan
-        (gates + dedup + LSH) three times, and (b) — the critical part
-        — the writes are SELF-REFERENTIAL when ``kept`` came from
-        ``curate_increment`` (its lineage READS these state paths, and
-        an append's per-task commits become visible mid-job, so an
-        un-truncated plan can observe its own partial output: observed
-        as duplicate state shingle rows driving a degenerate
-        divide-by-zero in the Jaccard verify). Lineage truncation
-        removes the state reads from the write jobs entirely. On a
-        real cluster prefer the ``curate_stream`` shape (state derived
-        from the durably landed epoch output) where executor loss
-        during the write must be survivable — localCheckpoint blocks
-        are executor-local.
+        (gates + dedup + LSH) per table — act on the returned frame. On
+        a real cluster prefer the ``curate_stream`` shape (state derived
+        from the durably landed epoch output) where executor loss during
+        the write must be survivable — localCheckpoint blocks are
+        executor-local.
 
-        Write order is fingerprints -> shingles -> bands on purpose,
-        but note what a mid-sequence crash actually orphans: rows in
-        the tables ALREADY written — i.e. a crash after the
-        fingerprints commit leaves docs with fingerprints but no
-        shingles/bands. Those orphans make the exact-dedup anti-join
-        STRICTER (the docs are known), never looser, so no duplicate is
-        admitted — but a plain batch retry of that same batch
-        (``epoch_id=None``) anti-joins against its own partial
-        fingerprint append and silently drops the whole batch. For
-        retryable batch appends, pass ``epoch_id``/``run_id`` (a batch
-        tag) so the replay can EXCLUDE its own crashed append's rows,
-        exactly as ``curate_stream`` does per epoch. ``exists``
-        additionally requires a committed write in all three dirs, so
-        a partial FIRST write reads as not-landed and the next attempt
-        bootstraps.
+        ``image_sigs``/``audio_sigs``/``video_sigs`` are the decode-once
+        seam: a caller that already fingerprinted the batch (
+        curate_increment's probe stage — a checkpointed frame) hands
+        the sigs over and only the kept subset lands; otherwise they
+        derive from the checkpointed batch. A prefix-enabled handle over
+        a prefix-less landed state backfills the prefixes first
+        (``ensure_prefixes``); the other optional features raise until
+        the caller backfills them (``backfill_*``).
         """
         from pyspark import StorageLevel
 
-        self.sync_params(kept.sparkSession)
-        self._sync_bloom_params(kept.sparkSession)
-        self._sync_prefix_params(kept.sparkSession)
-        self._sync_embed_params(kept.sparkSession)
-        self._sync_image_params(kept.sparkSession)
-        self._sync_audio_params(kept.sparkSession)
-        self._sync_video_params(kept.sparkSession)
-        if (
-            self.embed_dim is not None
-            and self.exists(kept.sparkSession)
-            and not self.embed_landed(kept.sparkSession)
-        ):
-            # an embed-enabled handle writing over a LEGACY embed-less
-            # state must backfill FIRST — the prefix argument above,
-            # but NOT auto-runnable here: unlike prefixes (derivable
-            # from the landed shingles) there is nothing on disk to
-            # derive vectors from, so the caller must supply the
-            # historical kept corpus. Appending only this batch would
-            # make embed_landed() true with older docs invisible to
-            # every semantic history probe (silently missed cross-batch
-            # semantic duplicates, not an error any join would surface).
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed srp_bands/embeddings — run "
-                "backfill_embeddings(historical_kept_corpus) once "
-                "(offline) before embed-enabled appends"
-            )
-        if (
-            self.image_grid_w is not None
-            and self.exists(kept.sparkSession)
-            and not self.image_landed(kept.sparkSession)
-        ):
-            # the embed argument verbatim: appending only this batch's
-            # fingerprints would make image_landed() true with older
-            # docs invisible to every image history probe
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed image_fps — run backfill_image_fps("
-                "historical_kept_corpus) once (offline) before "
-                "image-enabled appends"
-            )
-        if (
-            self.audio_n_windows is not None
-            and self.exists(kept.sparkSession)
-            and not self.audio_landed(kept.sparkSession)
-        ):
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed audio_fps — run backfill_audio_fps("
-                "historical_kept_corpus) once (offline) before "
-                "audio-enabled appends"
-            )
-        if (
-            self.video_every_ms is not None
-            and self.exists(kept.sparkSession)
-            and not self.video_landed(kept.sparkSession)
-        ):
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed video_fps — run backfill_video_fps("
-                "historical_kept_corpus) once (offline) before "
-                "video-enabled appends"
-            )
-        if self._prefix_frac() is not None:
-            # a prefix-enabled handle writing over a LEGACY prefix-less
-            # state must backfill the landed history FIRST: appending
-            # only this batch's prefixes would make prefixes_exist()
-            # true with older docs invisible to the landed-prefix probe
-            # direction — silently missed cross-history duplicates
-            # (no-op when prefixes already exist or nothing is landed)
-            self.ensure_prefixes(kept.sparkSession)
+        spark = kept.sparkSession
+        self.ensure_prefixes(spark)
+        m = self._manifest(spark)
+        pins = self._checked_pins(
+            m, None if split_comps is None else _split_pin(split_fractions)
+        )
+        self._require_tables(m, [f for f, pin in self._pins().items() if pin])
         kept = kept.localCheckpoint()
-        etag = F.lit(-1 if epoch_id is None else int(epoch_id)).alias("_epoch")
-        rtag = F.lit(run_id or "").alias("_run")
         fp, sh, bands, prefixes, emb, srp = self._derive(kept, text_col, id_col)
-        img = None
-        if self.image_grid_w is not None:
-            # ``image_sigs`` is the decode-once seam: a caller that
-            # already fingerprinted the batch (curate_increment's probe
-            # stage — a checkpointed frame with NO state read in its
-            # plan) hands the sigs over and only the kept subset lands;
-            # otherwise derive from the checkpointed kept batch.
-            img = (
-                image_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if image_sigs is not None
-                else self._derive_image(kept, id_col)
-            )
+        ids = kept.select(F.col(id_col).alias("doc_id"))
+
+        def media(enabled, sigs, derive):
+            if enabled is None:
+                return None
+            if sigs is not None:
+                return sigs.join(ids, "doc_id", "left_semi")
+            return derive(kept, id_col)
+
+        frames = {
+            "fingerprints": fp,
+            "shingles": sh,
+            "bands": bands,
+            "prefixes": prefixes,
+            "embeddings": emb,
+            "srp_bands": srp,
+            "image_fps": media(self.image_grid_w, image_sigs, self._derive_image),
+            "audio_fps": media(self.audio_n_windows, audio_sigs, self._derive_audio),
+            "video_fps": media(self.video_every_ms, video_sigs, self._derive_video),
+            "line_fps": None if line_fps is None else line_fps.select("line_fp"),
+            "splits": None
+            if split_comps is None
+            else _split_assignment_frame(
+                kept, split_comps, split_fractions, id_col
+            ).select(F.col(id_col).alias("doc_id"), "component", "split"),
+        }
+        bloom = None
         if self.bloom_bits is not None:
-            # BEFORE the fingerprints append (see the bloom invariant
-            # note above): a crash between bloom and fingerprints adds
-            # false positives only. ensure_bloom first so a pre-bloom
-            # history is folded in before this batch's bits.
+            import numpy as np
+
             from clickhouse_mysql_data_reader_spark.operators.membership import (
                 build_bloom,
             )
 
-            self.ensure_bloom(kept.sparkSession)
-            batch_bits = build_bloom(fp, "fp", self.bloom_bits, self.bloom_hashes)
-            # prior bits are OR-ed in for EVERY mode, overwrite included:
-            # the bloom lands before the data, so during the crash window
-            # the landed fingerprints may still be the OLD corpus — a
-            # batch-only bloom would then report definite-miss for landed
-            # keys (false negatives, silent duplicate admission). Keeping
-            # the old bits preserves bloom ⊇ landed-fps across both crash
-            # outcomes; the cost is staleness-shaped false positives,
-            # which the exact join removes. An overwrite that wants a
-            # tight filter should delete the bloom file afterwards and
-            # let ensure_bloom rebuild from the landed table.
-            prior = self.read_bloom(kept.sparkSession)
+            bits = np.frombuffer(
+                build_bloom(fp, "fp", self.bloom_bits, self.bloom_hashes), np.uint8
+            )
+            prior = self._landed_bloom(spark, m)
             if prior is not None:
-                import numpy as _np
-
-                batch_bits = bytes(
-                    _np.frombuffer(batch_bits, dtype=_np.uint8)
-                    | _np.frombuffer(prior, dtype=_np.uint8)
-                )
-            self._write_bloom(kept.sparkSession, batch_bits)
-        if emb is not None:
-            # BEFORE the fingerprints append, like the bloom bits: a
-            # crash after these commits leaves embed rows for docs the
-            # doc tables never landed — semantic probes get STRICTER
-            # (extra candidates the exact-cosine verify still settles),
-            # never looser, whereas the reverse order would leave
-            # landed docs invisible to every later semantic history
-            # probe. A plain batch retry of a crash in this window sees
-            # its own partial embed append and drops the whole batch as
-            # self-dups — same documented remedy as fingerprints: pass
-            # (epoch_id, run_id) for retryable appends.
-            emb.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("embeddings"))
-            srp.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("srp_bands"))
-        aud = None
-        if self.audio_n_windows is not None:
-            aud = (
-                audio_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if audio_sigs is not None
-                else self._derive_audio(kept, id_col)
-            )
-        if img is not None:
-            # BEFORE the fingerprints append, the embed-tables argument
-            # verbatim: orphaned image fps make later probes STRICTER
-            # (extra candidates the exact Hamming verify settles), never
-            # looser; retryable appends pass (epoch_id, run_id)
-            img.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("image_fps"))
-        if aud is not None:
-            # same ordering argument as the image fps
-            aud.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("audio_fps"))
-        vid = None
-        if self.video_every_ms is not None:
-            vid = (
-                video_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if video_sigs is not None
-                else self._derive_video(kept, id_col)
-            )
-            # same ordering argument as the image/audio fps
-            vid.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("video_fps"))
+                bits = bits | np.frombuffer(prior, np.uint8)
+            bloom = bits.tobytes()
         sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            fp.withColumns({"_epoch": etag, "_run": rtag}).write.mode(mode).parquet(
-                self._path("fingerprints")
+            self._commit(
+                spark,
+                m,
+                {
+                    n: _tagged(df, epoch_id, run_id)
+                    for n, df in frames.items()
+                    if df is not None
+                },
+                pins,
+                bloom=bloom,
             )
-            sh.withColumns({"_epoch": etag, "_run": rtag}).write.mode(mode).parquet(
-                self._path("shingles")
-            )
-            bands.withColumns({"_epoch": etag, "_run": rtag}).write.mode(mode).parquet(
-                self._path("bands")
-            )
-            if prefixes is not None:
-                # Crash window: a failure after the shingle commit but
-                # before this one leaves the batch's docs without
-                # prefix rows — cross-history pairs where the CRASHED
-                # doc is the smaller side can then be missed by later
-                # exact probes (the other side, batch-prefix vs landed
-                # shingles, still fires). Same remedy as every other
-                # mid-sequence crash documented above: retry with
-                # (run_id, epoch_id) tags so the replay excludes and
-                # re-appends its own rows.
-                prefixes.withColumns(
-                    {"_epoch": etag, "_run": rtag}
-                ).write.mode(mode).parquet(self._path("prefixes"))
         finally:
             sh.unpersist()
         return kept
 
-    # One parquet file-set lands per epoch append; a long-running stream
-    # therefore grows thousands of small files per state table, and the
-    # mergeSchema read pays a footer read per file. compact() is the
+    # One generation lands per commit; a long-running stream therefore
+    # grows thousands of small files per state table. compact() is the
     # maintenance remedy — ClickHouse merges parts for exactly this
     # reason (the reference's server does it implicitly; here it is an
     # explicit offline op).
-    _HOMOGENEOUS_MARKER = "_tags_homogeneous"
-
     def compact(self, spark, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
-        """Rewrite each state table into size-targeted files, preserving
-        every row INCLUDING its ``(_run, _epoch)`` tags (NULL tags from
-        legacy layouts stay NULL — normalizing them to the batch tag
+        """Rewrite every state table into size-targeted files of ONE
+        new generation, committed as the tables' only generation (the
+        superseded ones are garbage-collected). Every row is preserved
+        INCLUDING its ``(_run, _epoch)`` tags (NULL tags of imported
+        legacy rows stay NULL — normalizing them to the batch tag
         ``("", -1)`` would make them excludable by a replay that never
-        wrote them). Replayed-epoch exclusion therefore works unchanged
-        post-compact.
+        wrote them), so replayed-epoch exclusion works unchanged. A
+        crash before the commit leaves the uncompacted snapshot. Needs
+        no parameters: a handle built from the state dir alone works.
 
         OFFLINE op: quiesce writers first (or run it from inside a
         foreachBatch epoch body, where the stream quiesces itself —
-        ``curate_stream(compact_every=...)``). The swap is
-        rename(table -> table__gc) / rename(tmp -> table) /
-        delete(table__gc); no state is ever half-written, but a crash
-        BETWEEN the two renames leaves the table dir missing with
-        ``__gc`` holding the only copy — every entry point
-        (``exists``/``_read``/``compact``) first rolls that back via
-        ``_recover_crashed_compact``, so the next read or compact sees
-        the original table again. A ``__tmp`` leftover is always
-        deletable (the pre-rename copy is still live); ``__gc`` is
-        deleted only when the table dir exists (i.e. the swap
-        completed and only the final delete was lost).
-
-        Also drops the mergeSchema cost from ``_read``: compacted files
-        are schema-homogeneous (tags present everywhere), recorded with
-        a ``_tags_homogeneous`` marker that ``_read`` checks —
-        subsequent ``write()`` appends always carry the tag columns, so
-        homogeneity persists once established.
+        ``curate_stream(compact_every=...)``).
 
         Returns {table: {"files_before": n, "files_after": m}}.
         """
-        jvm, fs = self._fs(spark)
-
-        def hpath(p: str):
-            return jvm.org.apache.hadoop.fs.Path(p)
-
-        def data_files(dir_path: str) -> list:
-            if not fs.exists(hpath(dir_path)):
-                return []
-            return [
-                st
-                for st in fs.listStatus(hpath(dir_path))
-                if not st.getPath().getName().startswith(("_", "."))
-            ]
-
-        report: dict = {}
-        for name in self._TABLES:
-            table = self._path(name)
-            tmp, gc = table + "__tmp", table + "__gc"
-            # crash-window rollback FIRST: if the table dir is missing,
-            # __gc is the only copy — deleting it would destroy the
-            # state permanently
-            self._recover_crashed_compact(spark, (name,))
-            if fs.exists(hpath(tmp)):
-                fs.delete(hpath(tmp), True)
-            if fs.exists(hpath(gc)) and fs.exists(hpath(table)):
-                fs.delete(hpath(gc), True)
-            before = data_files(table)
-            if not before:
-                continue
-            total_bytes = sum(st.getLen() for st in before)
-            n_out = max(1, -(-total_bytes // int(target_file_bytes)))
-            df = spark.read.option("mergeSchema", "true").parquet(table)
-            for tag, typ in (("_epoch", "long"), ("_run", "string")):
-                if tag not in df.columns:
-                    df = df.withColumn(tag, F.lit(None).cast(typ))
-            df.repartition(int(n_out)).write.mode("error").parquet(tmp)
-            if not fs.rename(hpath(table), hpath(gc)):
-                raise IOError(f"compact: rename {table} -> {gc} failed")
-            if not fs.rename(hpath(tmp), hpath(table)):
-                # roll the original back so the table never vanishes
-                fs.rename(hpath(gc), hpath(table))
-                raise IOError(f"compact: rename {tmp} -> {table} failed")
-            fs.delete(hpath(gc), True)
-            fs.create(hpath(f"{table}/{self._HOMOGENEOUS_MARKER}"), True).close()
-            report[name] = {
-                "files_before": len(before),
-                "files_after": len(data_files(table)),
-            }
-        return report
-
-    def _read(
-        self,
-        spark,
-        name: str,
-        exclude_epoch: int | None,
-        run_id: str | None,
-    ) -> DataFrame:
-        # mergeSchema: a dir can mix tag-bearing files with files from
-        # an older layout; without it the picked footer decides whether
-        # the tag columns even surface. Post-compact the dir is marked
-        # schema-homogeneous and the per-file footer reads are skipped.
-        self._recover_crashed_compact(spark, (name,))
-        jvm, fs = self._fs(spark)
-        homogeneous = fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{self._path(name)}/{self._HOMOGENEOUS_MARKER}"
-            )
-        )
-        reader = spark.read
-        if not homogeneous:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self._path(name))
-        if exclude_epoch is not None and "_epoch" in df.columns:
-            # eqNullSafe: rows from tag-less files surface as NULL under
-            # the merged schema — a null-hostile `!=` would silently
-            # drop that entire history from every dedup join
-            cond = F.col("_epoch").eqNullSafe(int(exclude_epoch))
-            if "_run" in df.columns:
-                cond = cond & F.col("_run").eqNullSafe(run_id or "")
-            elif run_id:
-                # legacy rows can never belong to a named run
-                cond = F.lit(False)
-            df = df.filter(~cond)
-        return df.drop("_epoch", "_run")
-
-    def fingerprints(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        return self._read(spark, "fingerprints", exclude_epoch, run_id)
-
-    def shingles(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        return self._read(spark, "shingles", exclude_epoch, run_id)
-
-    def bands(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        return self._read(spark, "bands", exclude_epoch, run_id)
+        m = self._manifest(spark)
+        if not m["tables"]:
+            return {}
+        before = {n: len(self._data_files(spark, r)) for n, r in m["tables"].items()}
+        new = self._rewrite(spark, m, target_file_bytes)
+        return {
+            n: {"files_before": before[n], "files_after": len(self._data_files(spark, r))}
+            for n, r in new["tables"].items()
+        }
 
     def growth_report(self, spark) -> dict:
         """Per-table state-growth report: {table: {rows, docs?,
-        segments?, bytes, files}} for every LANDED sidecar table —
+        segments, bytes, files}} for every LANDED sidecar table —
         the number an operator of a daily-batch pipeline actually
         watches (state must grow with the KEPT corpus and nothing
         else, and a file count racing ahead of rows says `compact()`
-        is due). `segments` counts distinct (_run, _epoch) append tags
-        where present. One bounded aggregate per table over the raw
-        files (tags included — this is the only reader that WANTS
-        them); filesystem size via one ContentSummary call per table.
+        is due). `segments` counts distinct (_run, _epoch) append tags.
+        One bounded aggregate per table over the raw files (tags
+        included — this is the only reader that WANTS them); filesystem
+        size via one ContentSummary call per generation dir.
         """
-        jvm, fs = self._fs(spark)
+        hp, fs = self._fs(spark)
         report: dict = {}
-        for name in self._TABLES:
-            if not self._table_landed(spark, name):
-                continue
-            self._recover_crashed_compact(spark, (name,))
-            cs = fs.getContentSummary(
-                jvm.org.apache.hadoop.fs.Path(self._path(name))
-            )
-            df = spark.read.option("mergeSchema", "true").parquet(self._path(name))
-            aggs = [F.count(F.lit(1)).alias("rows")]
+        for name, rels in self._manifest(spark)["tables"].items():
+            sizes = [fs.getContentSummary(hp(r)) for r in rels]
+            df = spark.read.parquet(*[self._path(r) for r in rels])
+            aggs = [
+                F.count(F.lit(1)).alias("rows"),
+                F.countDistinct("_run", "_epoch").alias("segments"),
+            ]
             if "doc_id" in df.columns:
                 aggs.append(F.countDistinct("doc_id").alias("docs"))
-            if "_epoch" in df.columns:
-                seg = (
-                    F.countDistinct("_run", "_epoch")
-                    if "_run" in df.columns
-                    else F.countDistinct("_epoch")
-                )
-                aggs.append(seg.alias("segments"))
-            row = df.agg(*aggs).collect()[0].asDict()
             report[name] = {
-                **row,
-                "bytes": int(cs.getLength()),
-                "files": int(cs.getFileCount()),
+                **df.agg(*aggs).collect()[0].asDict(),
+                "bytes": sum(int(c.getLength()) for c in sizes),
+                "files": sum(int(c.getFileCount()) for c in sizes),
             }
         return report
 
@@ -3428,6 +2814,7 @@ class CurationState:
         landed longs (the video identity adds a bounded per-clip
         sort). Modalities this state never landed are simply absent.
         """
+        m = self._manifest(spark)
         parts = []
 
         def _rate_row(keyed: DataFrame, modality: str) -> DataFrame:
@@ -3450,7 +2837,7 @@ class CurationState:
             ("audio", "audio_fps", self.audio_fps, "ahash"),
         )
         for modality, table, reader, col in flat:
-            if not self._table_landed(spark, table):
+            if not self._has(m, table):
                 continue
             keyed = (
                 reader(spark)
@@ -3458,7 +2845,7 @@ class CurationState:
                 .dropDuplicates(["doc_id", "_k"])
             )
             parts.append(_rate_row(keyed, modality))
-        if self._table_landed(spark, "video_fps"):
+        if self._has(m, "video_fps"):
             fset = (
                 self.video_fps(spark)
                 .select("doc_id", "fhash")
@@ -3544,12 +2931,14 @@ def curate_increment(
     state appends from every history join and tags this batch's
     appends — see ``curate_stream``.
 
-    ``line_fps_out``: pass a dict to take ownership of the batch's
-    line-fingerprint landing (``dedup_lines`` only) — the frame to
-    append lands in ``line_fps_out["line_fps"]`` and this function
-    will NOT append it itself, regardless of ``update_state``.
-    ``curation_epoch_apply`` uses this to defer the append until
-    after its epoch output commits.
+    ``line_fps_out``/``splits_out``: pass dicts to take ownership of
+    the batch's line-fingerprint landing (``dedup_lines``: the frame
+    lands in ``line_fps_out["line_fps"]``) and split landing
+    (``split_fractions``: the within-batch component frame lands in
+    ``splits_out["comps"]``); this function then leaves them out of
+    its own state commit. ``curation_epoch_apply`` and the CLI pass
+    both to ``CurationState.write`` over their landed output, in one
+    commit.
 
     ``benchmark``: decontamination in the batch stage order (after the
     near-dup merge, same ``contamination_mode`` semantics as batch
@@ -3759,63 +3148,27 @@ def curate_increment(
                 f"batch; missing {missing_vid} in {new_docs.columns}"
             )
     spark = new_docs.sparkSession
-    if state.exists(spark):
-        # also validate against the ON-DISK parameters: the ctor-vs-cfg
-        # check above cannot catch a session that reconstructs the
-        # state handle with the wrong values
-        state.sync_params(spark)
-        state._sync_prefix_params(spark)
-        if (cfg.near_dup_exact or cfg.near_dup_containment is not None) and (
-            not state.prefixes_exist(spark)
-        ):
-            raise ValueError(
-                "exact/containment near-dup vs history needs the landed "
-                "prefix table, which this state has not written — run "
-                "state.ensure_prefixes(spark) once (offline; one "
-                "rarest-sort pass over the landed shingles) to backfill, "
-                "then increments maintain it per batch"
+    # also validate against the ON-DISK pins: the ctor-vs-cfg checks
+    # above cannot catch a session that reconstructs the state handle
+    # with the wrong values
+    m = state._manifest(spark)
+    state._checked_pins(
+        m, None if cfg.split_fractions is None else _split_pin(cfg.split_fractions)
+    )
+    state._require_tables(
+        m,
+        [
+            feature
+            for feature, enabled in (
+                ("prefix", cfg.near_dup_exact or cfg.near_dup_containment is not None),
+                ("embed", cfg.embed_near_cos is not None),
+                ("image", cfg.image_near_hamming is not None),
+                ("audio", cfg.audio_near_hamming is not None),
+                ("video", cfg.video_min_matching is not None),
             )
-        if cfg.embed_near_cos is not None:
-            state._sync_embed_params(spark)
-            if not state.embed_landed(spark):
-                raise ValueError(
-                    "semantic near-dup vs history needs the landed "
-                    "srp_bands/embeddings tables, which this state has "
-                    "not written — run state.backfill_embeddings("
-                    "historical_kept_corpus) once (offline; the caller "
-                    "supplies the kept corpus with its vector column — "
-                    "the state keeps keys, not content), then increments "
-                    "maintain them per batch"
-                )
-        if cfg.image_near_hamming is not None:
-            state._sync_image_params(spark)
-            if not state.image_landed(spark):
-                raise ValueError(
-                    "image near-dup vs history needs the landed "
-                    "image_fps table, which this state has not written — "
-                    "run state.backfill_image_fps(historical_kept_corpus) "
-                    "once (offline; the caller supplies the kept corpus "
-                    "with its image column — the state keeps keys, not "
-                    "media bytes), then increments maintain it per batch"
-                )
-        if cfg.audio_near_hamming is not None:
-            state._sync_audio_params(spark)
-            if not state.audio_landed(spark):
-                raise ValueError(
-                    "audio near-dup vs history needs the landed "
-                    "audio_fps table, which this state has not written — "
-                    "run state.backfill_audio_fps(historical_kept_corpus) "
-                    "once (offline), then increments maintain it per batch"
-                )
-        if cfg.video_min_matching is not None:
-            state._sync_video_params(spark)
-            if not state.video_landed(spark):
-                raise ValueError(
-                    "video near-dup vs history needs the landed "
-                    "video_fps table, which this state has not written — "
-                    "run state.backfill_video_fps(historical_kept_corpus) "
-                    "once (offline), then increments maintain it per batch"
-                )
+            if enabled
+        ],
+    )
 
     # --- stage 0 (optional): incremental corpus-level line dedup ------
     # The C4 line pass in daily-batch form (operators/text.py
@@ -3836,7 +3189,7 @@ def curate_increment(
 
         landed_lines = (
             state.line_fps(spark, exclude_epoch=epoch_id, run_id=run_id)
-            if state.line_fps_exist(spark)
+            if state._has(m, "line_fps")
             else None
         )
         cleaned, _ = line_dedup_increment(
@@ -3847,12 +3200,9 @@ def curate_increment(
             min_line_chars=cfg.line_dedup_min_chars,
             sep=cfg.line_dedup_sep,
         )
-        # localCheckpoint: (a) the cleaned text feeds every gate and
-        # both dedup families — untruncated, each consumer re-runs the
-        # line explode/join machinery from the scan; (b) it cuts the
-        # landed line_fps READ out of the lineage, so the append below
-        # can never observe its own partial output (the same
-        # self-referential-write argument as CurationState.write).
+        # localCheckpoint: the cleaned text feeds every gate and both
+        # dedup families — untruncated, each consumer re-runs the line
+        # explode/join machinery from the scan.
         cleaned = cleaned.localCheckpoint()
         new_docs = new_docs.drop(text_col).join(
             cleaned.select(id_col, text_col), id_col
@@ -3873,24 +3223,14 @@ def curate_increment(
 
     if line_fps_out is not None and new_line_fps is not None:
         # caller takes ownership of the landing: curation_epoch_apply
-        # appends these rows only AFTER its epoch output commits, so an
-        # abandoned epoch (output write failed, never replayed) cannot
-        # leave line state claiming keeper status for lines no landed
-        # doc contains. The frame derives from the localCheckpoint'ed
-        # cleaned text — no state read in its plan, safe to append.
+        # lands these rows in the same commit as its epoch's doc state,
+        # after its epoch output is written, so an abandoned epoch
+        # (output write failed, never replayed) cannot leave line state
+        # claiming keeper status for lines no landed doc contains. The
+        # frame derives from the localCheckpoint'ed cleaned text.
         line_fps_out["line_fps"] = new_line_fps
 
-    def _land_line_fps() -> None:
-        # AFTER the doc-state write on purpose: a crash between the two
-        # leaves docs landed without their line fps — future batches
-        # then keep duplicate copies of this batch's lines (looser,
-        # recoverable by replaying with epoch tags), whereas the
-        # reverse order would let a plain batch retry see its own
-        # crashed line append and gut every doc in the batch.
-        if update_state and new_line_fps is not None and line_fps_out is None:
-            state.append_line_fps(new_line_fps, epoch_id=epoch_id, run_id=run_id)
-
-    def _land_splits(kept_ckpt: DataFrame, comps_frame: DataFrame) -> None:
+    def _land(kept: DataFrame, comps: DataFrame, **sigs) -> DataFrame:
         # Incremental leakage-safe split: every kept doc's assignment
         # hashes its WITHIN-BATCH near-dup component (all edge types;
         # singletons hash their own id) and lands immutably — stable
@@ -3904,38 +3244,25 @@ def curate_increment(
         # (parity pinned by test; the dedup path's documented
         # transitive-chain-through-dropped-docs delta applies to the
         # survivor SET itself, not to the assignment arithmetic).
-        # AFTER the doc-state write, the line_fps ordering argument:
-        # a crash between the two leaves docs landed without split
-        # rows (replay with epoch tags, or backfill with one
-        # append_splits of a batch-mode assignment); the reverse order
-        # would land splits for docs that never landed. The assignment
-        # derives from the CHECKPOINTED kept frame + within-batch
-        # components (no state read in the plan), so the append cannot
-        # observe its own output.
-        if cfg.split_fractions is None:
-            return
-        if splits_out is not None:
-            # deferred-landing seam (the line_fps_out pattern): hand
-            # the within-batch component frame to the caller, who
-            # assigns over its durably LANDED output and appends after
-            # that output commits — so an abandoned epoch cannot land
-            # splits for docs no output contains. comps' plan reads no
-            # state tables (within-batch edges over checkpointed
-            # frames), so the later append is self-reference-safe.
-            splits_out["comps"] = comps_frame
-            return
-        if update_state:
-            assign = _split_assignment_frame(
-                kept_ckpt, comps_frame, cfg.split_fractions, id_col
-            )
-            state.append_splits(
-                assign.select(
-                    F.col(id_col).alias("doc_id"), "component", "split"
-                ),
-                cfg.split_fractions,
-                epoch_id=epoch_id,
-                run_id=run_id,
-            )
+        # comps' plan reads no state tables (within-batch edges over
+        # checkpointed frames).
+        split_comps = comps if cfg.split_fractions is not None else None
+        if splits_out is not None and split_comps is not None:
+            # deferred-landing seam (the line_fps_out pattern): the
+            # caller assigns over its durably LANDED output and commits
+            # the assignment with that output's doc state
+            splits_out["comps"] = split_comps
+        if not update_state:
+            return kept
+        # act on the frame write() returns: it is checkpointed, so the
+        # result does not re-run the curation plan
+        return state.write(
+            kept, text_col=text_col, id_col=id_col, epoch_id=epoch_id,
+            run_id=run_id,
+            line_fps=new_line_fps if line_fps_out is None else None,
+            split_comps=split_comps if splits_out is None else None,
+            split_fractions=cfg.split_fractions, **sigs,
+        )
 
     _, exact = _row_stages(new_docs, cfg, text_col, id_col)
 
@@ -4024,14 +3351,8 @@ def curate_increment(
         drop0 = _near_dup_drop_ids(comps0, boiled0, cfg, text_col, id_col)
         kept = boiled0.join(drop0, id_col, "left_anti")
         kept = _decontamination_stage(kept, benchmark, cfg, text_col, id_col)
-        if update_state:
-            kept = state.write(kept, text_col=text_col, id_col=id_col,
-                               mode="append", epoch_id=epoch_id, run_id=run_id,
-                               image_sigs=sigs_img0, audio_sigs=sigs_aud0,
-                               video_sigs=fset_vid0)
-        _land_line_fps()
-        _land_splits(kept, comps0)
-        return kept
+        return _land(kept, comps0, image_sigs=sigs_img0, audio_sigs=sigs_aud0,
+                     video_sigs=fset_vid0)
 
     # --- exact dedup vs history (anti-join on fingerprint) ------------
     with_fp = exact.withColumn("_fp", content_fingerprint(F.col(text_col)))
@@ -4097,10 +3418,7 @@ def curate_increment(
     # the within-batch Jaccard verify, and the union feeding the
     # history Jaccard), and connected_components executes eagerly
     # below — truncating here makes the expensive gates+shingling
-    # chain run once instead of once per consumer. This also freezes
-    # the state-fingerprint anti-join snapshot the shingles derive
-    # from, the same mid-increment-consistency argument as
-    # CurationState.write's checkpoint. Since round 15 the
+    # chain run once instead of once per consumer. Since round 15 the
     # materialization itself is submitted through util.overlap_jobs
     # together with the other independent per-batch checkpoints
     # (vectors, media fingerprints) below — UNLESS the boilerplate
@@ -4163,8 +3481,7 @@ def curate_increment(
     # driver threads (FIFO back-fill). DEPENDENT materializations are
     # chained INSIDE one callable and never split across two. Each
     # job's per-frame rationale is unchanged from rounds 10-14:
-    # - sh_new: three consumers + the self-referential-append argument
-    #   (see the comment above sh_new_plan);
+    # - sh_new: three consumers (see the comment above sh_new_plan);
     # - sorted arrays: the rarest-first relation backs up to three
     #   prefix slices (within-batch jaccard/containment + the
     #   cross-history batch prefixes) — one freq agg + collect, not
@@ -4510,16 +3827,8 @@ def curate_increment(
         .join(drop_hist, id_col, "left_anti")
     )
     kept = _decontamination_stage(kept, benchmark, cfg, text_col, id_col)
-    if update_state:
-        # act on the frame write() returns: it is checkpointed, so the
-        # result cannot re-read the state this call just appended to
-        kept = state.write(kept, text_col=text_col, id_col=id_col,
-                           mode="append", epoch_id=epoch_id, run_id=run_id,
-                           image_sigs=sigs_img_new, audio_sigs=sigs_aud_new,
-                           video_sigs=fset_vid_new)
-    _land_line_fps()
-    _land_splits(kept, comps)
-    return kept
+    return _land(kept, comps, image_sigs=sigs_img_new, audio_sigs=sigs_aud_new,
+                 video_sigs=fset_vid_new)
 
 
 def curate_stream(
@@ -4554,12 +3863,12 @@ def curate_stream(
       the previously-written survivors;
     - the epoch OUTPUT is written first (overwrite — a replay rewrites
       the identical survivor set, curation being a pure function of
-      content and pre-epoch history), and the state append derives from
+      content and pre-epoch history), and the state commit derives from
       the LANDED output files, so the full curation plan executes once
-      per epoch (the three state writes re-scan the small landed
-      parquet, not the plan) and a crash before the state append leaves
-      an output the replay reproduces byte-identically;
-    - a replayed state append leaves duplicate rows for the epoch —
+      per epoch (the state tables re-scan the small landed parquet, not
+      the plan) and a crash before the state commit leaves an output
+      the replay reproduces byte-identically;
+    - a replay after the state commit leaves duplicate rows for the epoch —
       harmless: its own epoch excludes them, later epochs consume the
       state through anti-/semi-joins (multiplicity-insensitive) and a
       post-semi-join dropDuplicates on the Jaccard path;
@@ -4618,13 +3927,12 @@ def curation_epoch_apply(
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # with dedup_lines on, take ownership of the batch's line
-        # fingerprints: curate_increment's own landing is keyed to
-        # update_state (False here), and the epoch contract wants them
-        # appended only after the epoch output commits — mirroring the
-        # landed-docs-then-state ordering below
-        fps_out: dict | None = {} if cfg.dedup_lines else None
-        sp_out: dict | None = {} if cfg.split_fractions is not None else None
+        # take ownership of the batch's line fingerprints and split
+        # components (curate_increment's own landing is keyed to
+        # update_state, False here): they commit with the doc state
+        # below, after the epoch output is written
+        fps_out: dict = {}
+        sp_out: dict = {}
         kept = curate_increment(
             batch_df,
             state,
@@ -4648,43 +3956,17 @@ def curation_epoch_apply(
             sub = ""
         epoch_path = f"{out_dir}/{sub}epoch={epoch_id}"
         kept.write.mode("overwrite").parquet(epoch_path)
-        landed = spark.read.parquet(epoch_path)
-        state.write(landed, text_col=text_col, id_col=id_col, mode="append",
-                    epoch_id=epoch_id, run_id=run_id)
-        if fps_out and fps_out.get("line_fps") is not None:
-            # last of the three commits (output -> doc state -> line
-            # fps): any crash window leaves at worst MISSING line fps
-            # (later batches keep duplicate copies of this batch's
-            # lines — loose, and the replay re-appends them), never
-            # line fps for docs that don't exist
-            state.append_line_fps(
-                fps_out["line_fps"], epoch_id=epoch_id, run_id=run_id
-            )
-        if sp_out and sp_out.get("comps") is not None:
-            # split assignments over the LANDED epoch output (not the
-            # lazy plan), appended after the doc-state commit like the
-            # line fps: a crash window leaves at worst missing split
-            # rows (the replay re-appends identical ones), never split
-            # rows for docs that never landed
-            assign = _split_assignment_frame(
-                landed, sp_out["comps"], cfg.split_fractions, id_col
-            )
-            state.append_splits(
-                assign.select(
-                    F.col(id_col).alias("doc_id"), "component", "split"
-                ),
-                cfg.split_fractions,
-                epoch_id=epoch_id,
-                run_id=run_id,
-            )
+        # ONE state commit derived from the LANDED output: doc tables,
+        # line fps and split assignment together
+        state.write(
+            spark.read.parquet(epoch_path), text_col=text_col, id_col=id_col,
+            epoch_id=epoch_id, run_id=run_id, line_fps=fps_out.get("line_fps"),
+            split_comps=sp_out.get("comps"), split_fractions=cfg.split_fractions,
+        )
         # post-append maintenance: epochs of one query are serialized,
-        # so no writer is active here. A crash between compact()'s two
-        # renames leaves the table only under __gc; the replayed
-        # epoch's first state READ rolls it back
-        # (_recover_crashed_compact runs on every exists/_read/compact
-        # entry), then the replay re-appends + re-compacts normally.
-        # (epoch + 1) so compact_every=N fires after epochs N-1,
-        # 2N-1, ... — i.e. every N epochs counting from the first.
+        # so no writer is active here. (epoch + 1) so compact_every=N
+        # fires after epochs N-1, 2N-1, ... — every N epochs counting
+        # from the first.
         if compact_every and (epoch_id + 1) % compact_every == 0:
             state.compact(spark)
 

@@ -275,20 +275,6 @@ def image_near_dup_pairs(
     )
 
 
-def real_audio_decoder(
-    content: bytes, kind: str, n_windows: int = 49
-) -> list[int]:
-    """Placeholder for the real per-window energy extractor
-    (torchaudio/ffmpeg: decode -> resample -> split into ``n_windows``
-    equal windows -> quantized RMS energy per window); audio libraries
-    are not in this container — inject via the ``decode_fn`` seam
-    exactly like ``real_decoder``/``real_pixel_decoder``."""
-    raise NotImplementedError(
-        "audio decoding requires an audio library not present in this "
-        "container; inject a decode_fn into audio_energy_hash()"
-    )
-
-
 AHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -388,19 +374,6 @@ def audio_near_dup_pairs(
         hamming_max=hamming_max,
         id_col="media_id",
         sig_col="ahash",
-    )
-
-
-def real_frame_decoder(
-    content: bytes, n_frames: int, grid_w: int = 7, grid_h: int = 8
-) -> list[list[int]]:
-    """Placeholder for the real frame sampler (pyav/ffmpeg: one pass
-    over the stream, grab ``n_frames`` evenly-spaced frames, each
-    resized to a grid_w x grid_h grayscale thumbnail); video libraries
-    are not in this container — inject via the ``decode_fn`` seam."""
-    raise NotImplementedError(
-        "frame decoding requires a video library not present in this "
-        "container; inject a decode_fn into video_frame_hashes()"
     )
 
 

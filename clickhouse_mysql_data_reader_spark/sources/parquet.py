@@ -107,12 +107,3 @@ def load_tables(
         if os.path.exists(path):
             out[name] = load_table(spark, sf_dir, name)
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (mirrors the DuckDB oracle's
-    pre-registered views) so operators can be expressed in SQL."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

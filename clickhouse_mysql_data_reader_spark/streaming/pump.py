@@ -120,33 +120,6 @@ def parse_cdc_envelope(raw: DataFrame, payload: T.StructType) -> DataFrame:
     ).select("_e.*")
 
 
-def read_cdc_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    payload: T.StructType,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Kafka CDC source: same downstream plan as ``read_cdc_stream``,
-    different transport. Requires the spark-sql-kafka package on the
-    cluster (not in this container — the option dict and the decode are
-    covered by unit tests; this composition is the one-liner)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .options(
-            **kafka_cdc_options(
-                bootstrap_servers,
-                topic,
-                starting_offsets=starting_offsets,
-                max_offsets_per_trigger=max_offsets_per_trigger,
-            )
-        )
-        .load()
-    )
-    return parse_cdc_envelope(raw, payload)
-
-
 PART_COL = "_part"
 MANIFEST = "MANIFEST.json"
 

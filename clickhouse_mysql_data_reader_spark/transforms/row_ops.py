@@ -3,20 +3,14 @@
 The reference applies these per-row in Python loops
 (converter/chwriteconverter.py, csvwriteconverter.py, csvreadconverter.py);
 here each is a whole-column Catalyst expression — vectorized, codegen'd,
-and pushdown-friendly. The custom-converter plug-in (T8,
-util.py:40-48 class_from_file) becomes a registry of
-``DataFrame -> DataFrame`` callables.
+and pushdown-friendly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-Transform = Callable[[DataFrame], DataFrame]
 
 
 def skip_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -61,31 +55,6 @@ def filter_tables(df: DataFrame, table_col: str, tables: list[str] | None = None
     for p in prefixes or []:
         cond = cond | F.col(table_col).startswith(p)
     return df.filter(cond)
-
-
-class TransformRegistry:
-    """T8 — user-pluggable transform chain, the Spark-shaped version of
-    the reference's runtime-loaded converter class (config.py:339-349).
-    Prefer native expressions in registered callables; pandas UDFs only
-    when unavoidable."""
-
-    def __init__(self) -> None:
-        self._transforms: dict[str, Transform] = {}
-
-    def register(self, name: str, fn: Transform) -> None:
-        self._transforms[name] = fn
-
-    def apply(self, df: DataFrame, names: list[str] | None = None) -> DataFrame:
-        for name in names if names is not None else list(self._transforms):
-            df = self._transforms[name](df)
-        return df
-
-
-def parse_date_column(df: DataFrame, col: str, fmt: str = "yyyy-MM-dd") -> DataFrame:
-    """The reference's example custom converter parses a `day` string to
-    date via strptime (clickhouse_mysql_converter/chwritedataconverter.py:7-15);
-    native equivalent."""
-    return df.withColumn(col, F.to_date(F.col(col), fmt))
 
 
 def _merge_json_types(a, b):

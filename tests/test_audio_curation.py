@@ -119,7 +119,7 @@ def test_curate_increment_audio_bootstrap_and_vs_history(spark, tmp_path):
     state = _astate(tmp_path)
     kept1 = {r["doc_id"] for r in curate_increment(b1, state, cfg=cfg).collect()}
     assert kept1 == {1, 3}
-    assert state.audio_landed(spark)
+    assert state.landed(spark, "audio_fps")
     fps = {r["doc_id"] for r in state.audio_fps(spark).select("doc_id").collect()}
     assert fps == {1, 3}
     kept2 = {r["doc_id"] for r in curate_increment(b2, state, cfg=cfg).collect()}
@@ -200,7 +200,7 @@ def test_audio_and_image_edges_compose(spark, tmp_path):
     state = CurationState.from_config(cfg, f"{tmp_path}/both")
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == {1}
-    assert state.image_landed(spark) and state.audio_landed(spark)
+    assert state.landed(spark, "image_fps", "audio_fps")
     img_fps = {r["doc_id"] for r in state.image_fps(spark).collect()}
     aud_fps = {r["doc_id"] for r in state.audio_fps(spark).collect()}
     assert img_fps == {1} and aud_fps == set()  # kept doc 1 has image, no audio

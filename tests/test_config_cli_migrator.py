@@ -560,7 +560,7 @@ def test_cli_curate_data_increment_embed_and_retry(spark, tmp_path, capsys):
     --curation-epoch/--curation-run-id reproduces the kept corpus
     instead of overwriting dst with an EMPTY one (state lands AFTER
     the dst write, tagged so the replay excludes its own append)."""
-    import os
+    from clickhouse_mysql_data_reader_spark.curation import CurationState
 
     b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
     _write_docs_vec(spark, b1, [(1, "web", _CUR_A, [1.0, 0.0, 0.0, 0.0])])
@@ -588,8 +588,7 @@ def test_cli_curate_data_increment_embed_and_retry(spark, tmp_path, capsys):
     rep1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep1["mode"] == "increment" and rep1["kept_rows"] == 1
     # the embed-enabled state landed both semantic tables
-    assert os.path.isdir(f"{state}/srp_bands")
-    assert os.path.isdir(f"{state}/embeddings")
+    assert CurationState(state).landed(spark, "srp_bands", "embeddings")
 
     out2 = str(tmp_path / "out2")
     tags = ("--curation-epoch", "7", "--curation-run-id", "nightly")
@@ -820,7 +819,7 @@ def test_cli_curate_data_audio_edge_json(spark, tmp_path, capsys):
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert kept == {1, 3}  # audio near-twin 2 merged into 1, min_id keeps
     state = CurationState(state_dir, audio_n_windows=49)
-    assert state.audio_landed(spark)
+    assert state.landed(spark, "audio_fps")
     fps = {r["doc_id"] for r in state.audio_fps(spark).collect()}
     assert fps == {1}  # only the clip-bearing keeper has a fingerprint
 
@@ -872,7 +871,7 @@ def test_cli_curate_data_video_edge_json(spark, tmp_path, capsys):
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert kept == {1, 3}  # 2 shares 2 of 3 frames with 1 -> merged
     state = CurationState(state_dir, video_every_ms=1000)
-    assert state.video_landed(spark)
+    assert state.landed(spark, "video_fps")
     per_doc = {
         r["doc_id"]: r["count"]
         for r in state.video_fps(spark).groupBy("doc_id").count().collect()
@@ -921,9 +920,9 @@ def test_cli_curate_data_incremental_split_lands_in_state(
 ):
     """split_fractions + --curation-state: the increment verb lands
     the assignments in the state's splits table (reported as
-    splits_table) and a second daily batch extends it without touching
-    batch-1 rows — the round-13 incremental leakage-safe split through
-    the CLI path."""
+    split_rows, counted per split) and a second daily batch extends it
+    without touching batch-1 rows — the round-13 incremental
+    leakage-safe split through the CLI path."""
     from clickhouse_mysql_data_reader_spark.curation import CurationState
 
     ccfg = tmp_path / "curation_inc_split.json"
@@ -952,7 +951,11 @@ def test_cli_curate_data_incremental_split_lands_in_state(
             "--curation-epoch", str(i),
         ]), spark) == 0
         rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert rep["splits_table"] == state_dir + "/splits"
+        landed = CurationState(state_dir).split_assignments(spark)
+        assert rep["split_rows"] == {
+            r["split"]: r["count"] for r in landed.groupBy("split").count().collect()
+        }
+        assert sum(rep["split_rows"].values()) == landed.count() > 0
     kept_all = set()
     for out in outs:
         kept_all |= {r["doc_id"] for r in spark.read.parquet(out).collect()}

@@ -1014,7 +1014,7 @@ def test_curate_stream_line_dedup_lands_and_replays(spark, tmp_path):
     apply_fn = curation_epoch_apply(state, out, cfg=cfg)
 
     apply_fn(_mk_docs(spark, [(1, "web", GOOD + "\n" + banner)]), 0)
-    assert state.line_fps_exist(spark), "epoch landed its line fps"
+    assert state.landed(spark, "line_fps"), "epoch landed its line fps"
     ep0 = {r["doc_id"]: r["text"] for r in spark.read.parquet(f"{out}/epoch=0").collect()}
     assert banner in ep0[1]
 
@@ -1070,13 +1070,11 @@ def test_curate_stream_crash_before_state_append_replays_clean(spark, tmp_path):
     assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == {1, 12}
 
 
-def test_state_partial_write_is_not_landed(spark, tmp_path):
-    """``exists`` requires a committed _SUCCESS in ALL three tables, so
-    the reachable crash windows of the fingerprints->shingles->bands
-    write order (fingerprints landed, later tables missing — or a
-    table's dir created by the committer with no committed files) read
-    as NOT landed and the next attempt bootstraps."""
-    import os
+def test_state_partial_write_is_not_landed(spark, tmp_path, monkeypatch):
+    """Files of an uncommitted generation are invisible: a first write
+    that crashes after its fingerprint table (before the manifest
+    commit) reads as NOT landed, and the next attempt bootstraps."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from clickhouse_mysql_data_reader_spark.curation import (
         CurationState,
@@ -1084,16 +1082,20 @@ def test_state_partial_write_is_not_landed(spark, tmp_path):
     )
 
     state = CurationState(str(tmp_path / "state"))
-    # crash window A: fingerprints committed, shingles/bands never ran
-    spark.createDataFrame(
-        [(99, "ff", -1, "")], "doc_id long, fp string, _epoch long, _run string"
-    ).write.parquet(state._path("fingerprints"))
-    assert not state.exists(spark)
-    # crash window B: a later table's dir exists but holds no commit
-    # (the committer creates the dir with only _temporary before data)
-    os.makedirs(state._path("shingles") + "/_temporary", exist_ok=True)
-    os.makedirs(state._path("bands"), exist_ok=True)
-    assert not state.exists(spark)
+    real = DataFrameWriter.parquet
+
+    def crash(self, *a, **kw):
+        real(self, *a, **kw)
+        raise RuntimeError("crash after the fingerprint table")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError, match="crash after"):
+            curate_increment(
+                _mk_docs(spark, [(1, "web", GOOD)]), state, cfg=CurationConfig()
+            )
+    assert os.listdir(tmp_path / "state")  # files were written ...
+    assert not state.exists(spark)  # ... but never committed
     kept = curate_increment(
         _mk_docs(spark, [(1, "web", GOOD)]), state, cfg=CurationConfig()
     )
@@ -1158,17 +1160,14 @@ def test_state_legacy_untagged_rows_survive_exclusion(spark, tmp_path):
 
 def test_state_compact_shrinks_files_preserves_rows_and_exclusion(spark, tmp_path):
     """compact() rewrites each state table into few size-targeted files
-    while preserving every row WITH its (_run, _epoch) tags — including
-    NULL tags on legacy-layout rows — so a replayed-epoch exclusion
-    returns the identical result post-compact, and the homogeneous
-    marker drops the mergeSchema footer reads."""
-    import os
-
+    of one generation while preserving every row WITH its (_run,
+    _epoch) tags — including NULL tags on imported legacy rows — so a
+    replayed-epoch exclusion returns the identical result post-compact."""
     from clickhouse_mysql_data_reader_spark.curation import CurationState
 
     state = CurationState(str(tmp_path / "state"))
-    # a legacy tag-less file-set plus several tagged epoch appends ->
-    # worst-case heterogeneous dir
+    # a legacy tag-less file-set (imported on first open) plus several
+    # tagged epoch appends -> worst-case heterogeneous history
     spark.createDataFrame(
         [(100, "legacy-fp")], "doc_id long, fp string"
     ).write.parquet(state._path("fingerprints"))
@@ -1179,8 +1178,11 @@ def test_state_compact_shrinks_files_preserves_rows_and_exclusion(spark, tmp_pat
             run_id="run-a",
         )
 
+    def paths(name):
+        return [state._path(r) for r in state._manifest(spark)["tables"][name]]
+
     def raw(name):
-        df = spark.read.option("mergeSchema", "true").parquet(state._path(name))
+        df = spark.read.parquet(*paths(name))
         rows = (tuple(r) for r in df.select(sorted(df.columns)).collect())
         # legacy rows carry NULL tags; None doesn't order against values
         return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
@@ -1188,7 +1190,8 @@ def test_state_compact_shrinks_files_preserves_rows_and_exclusion(spark, tmp_pat
     def files(name):
         return [
             f
-            for f in os.listdir(state._path(name))
+            for p in paths(name)
+            for f in os.listdir(p)
             if not f.startswith(("_", "."))
         ]
 
@@ -1203,6 +1206,7 @@ def test_state_compact_shrinks_files_preserves_rows_and_exclusion(spark, tmp_pat
 
     for n in ("fingerprints", "shingles", "bands"):
         assert rep[n]["files_after"] < rep[n]["files_before"], rep
+        assert len(paths(n)) == 1, "one generation per table after compaction"
         assert len(files(n)) == rep[n]["files_after"]
         assert len(files(n)) < before_files[n]
         assert raw(n) == before_rows[n], f"{n} content changed under compaction"
@@ -1214,31 +1218,33 @@ def test_state_compact_shrinks_files_preserves_rows_and_exclusion(spark, tmp_pat
     )
     assert excl_after == excl_before
     assert 100 in excl_after and not {10, 11} & set(excl_after)
-    # appends after compaction stay visible (homogeneous marker only
-    # skips mergeSchema; tagged appends keep the schema uniform)
+    # appends after compaction stay visible
     state.write(_mk_docs(spark, [(55, "web", GOOD + " post-compact")]), epoch_id=9, run_id="run-a")
     assert 55 in {r["doc_id"] for r in state.fingerprints(spark).collect()}
 
 
 def test_state_exists_without_success_markers(spark, tmp_path):
-    """Success markers are commonly disabled on object-store committers;
-    exists() must fall back to probing committed data files — otherwise
-    every increment silently bootstraps and history dedup stops."""
-    import os
-
+    """The manifest is the only commit record: with the committers'
+    success markers absent (commonly disabled on object-store
+    committers) a committed state still reads as landed, and a
+    generation written without a manifest commit does not."""
     from clickhouse_mysql_data_reader_spark.curation import CurationState
 
     state = CurationState(str(tmp_path / "state"))
     state.write(_mk_docs(spark, [(1, "web", GOOD)]))
-    assert state.exists(spark)
-    for n in ("fingerprints", "shingles", "bands"):
-        os.remove(os.path.join(state._path(n), "_SUCCESS"))
-    assert state.exists(spark), "data files present must read as landed"
+    for root, _, names in os.walk(tmp_path / "state"):
+        for f in names:
+            if f.startswith("_SUCCESS"):
+                os.remove(os.path.join(root, f))
+    assert state.exists(spark), "a committed state must read as landed"
+    assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == {1}
 
-    # a crashed v1 first write leaves only _temporary: NOT landed
+    # generation files without a manifest version: NOT landed
     crashed = CurationState(str(tmp_path / "crashed"))
     for n in ("fingerprints", "shingles", "bands"):
-        os.makedirs(os.path.join(crashed._path(n), "_temporary"))
+        spark.createDataFrame([(1,)], "doc_id long").write.parquet(
+            crashed._path(f"gen-000001/{n}")
+        )
     assert not crashed.exists(spark)
 
 
@@ -1248,8 +1254,6 @@ def test_state_bloom_prefilter_matches_plain_path(spark, tmp_path):
     without the prefilter (exactness for any fill level), cross-batch
     exact duplicates still dropped, and the filter file is maintained
     across writes."""
-    import os
-
     from clickhouse_mysql_data_reader_spark.curation import (
         CurationState,
         curate_increment,
@@ -1282,7 +1286,6 @@ def test_state_bloom_prefilter_matches_plain_path(spark, tmp_path):
         r["doc_id"] for r in curate_increment(b2, bloomy, cfg).collect()
     )
     assert kept_bloom == kept_plain == [11]
-    assert os.path.exists(os.path.join(str(tmp_path / "bloomy"), "_bloom.bin"))
     # the filter genuinely contains the landed fingerprints
     from pyspark.sql import functions as F2
 
@@ -1291,6 +1294,7 @@ def test_state_bloom_prefilter_matches_plain_path(spark, tmp_path):
     )
 
     bloom = bloomy.read_bloom(spark)
+    assert bloom is not None
     hits = (
         bloomy.fingerprints(spark)
         .withColumn(
@@ -1326,9 +1330,7 @@ def test_state_bloom_bootstrap_and_sizing_guards(spark, tmp_path):
     assert kept.count() == 0
 
     with pytest.raises(ValueError, match="landed sizing"):
-        CurationState(str(tmp_path / "st"), bloom_bits=1 << 10)._sync_bloom_params(
-            spark
-        )
+        CurationState(str(tmp_path / "st"), bloom_bits=1 << 10).ensure_bloom(spark)
     with pytest.raises(ValueError, match="without bloom_bits"):
         CurationState(str(tmp_path / "st")).write(
             _mk_docs(spark, [(5, "web", "whatever text here")])
@@ -1336,7 +1338,7 @@ def test_state_bloom_bootstrap_and_sizing_guards(spark, tmp_path):
 
 
 def test_state_params_manifest_guards_reconstruction(spark, tmp_path):
-    """The landed _params.json is the on-disk truth: a session that
+    """The manifest's pinned parameters are the on-disk truth: a session that
     reconstructs CurationState with different parameters (and a cfg
     consistent with THOSE, so the in-memory guard passes) must fail
     loudly instead of silently finding zero cross-history near-dups."""
@@ -1429,7 +1431,7 @@ def test_curate_stream_two_batches(spark, tmp_path):
 @pytest.mark.slow
 def test_curate_stream_auto_compacts_and_dedup_survives(spark, tmp_path):
     """compact_every=1: state is compacted after every epoch (inside the
-    serialized foreachBatch body), the homogeneous marker lands, and the
+    serialized foreachBatch body) into one generation per table, and the
     NEXT epoch's cross-batch dedup reads the compacted state correctly."""
     import os
     import time as _time
@@ -1475,64 +1477,16 @@ def test_curate_stream_auto_compacts_and_dedup_survives(spark, tmp_path):
     now = _time.time()
     _land("b1", [(1, "web", GOOD)], now - 100)
     _run_available()
-    # compaction ran: every state table carries the homogeneous marker
+    # compaction ran: every state table is one generation
+    tables = state._manifest(spark)["tables"]
     for tbl in ("fingerprints", "shingles", "bands"):
-        marker = os.path.join(
-            str(tmp_path / "state"), tbl, CurationState._HOMOGENEOUS_MARKER
-        )
-        assert os.path.exists(marker), f"missing marker for {tbl}"
+        assert len(tables[tbl]) == 1, tables
 
     _land("b2", [(10, "web", GOOD)], now - 50)  # exact dup of doc 1
     _run_available()
     # the dup was dropped against the COMPACTED state
     assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == {1}
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1}
-
-
-def test_compact_crash_between_renames_recovers(spark, tmp_path):
-    """Simulate the compact() crash window: table dir renamed to __gc,
-    second rename never happened. Every entry point must roll the state
-    back instead of bootstrapping (exists), dying (read), or deleting
-    the only copy as a leftover (compact)."""
-    import shutil
-
-    from clickhouse_mysql_data_reader_spark.curation import (
-        CurationConfig,
-        CurationState,
-        curate_increment,
-    )
-
-    state = CurationState(str(tmp_path / "state"))
-    docs = spark.createDataFrame(
-        [(1, "web", GOOD)], "doc_id long, source string, text string"
-    )
-    curate_increment(docs, state, CurationConfig(near_dup_jaccard=0.5))
-    state.compact(spark)
-    before = {r["doc_id"] for r in state.fingerprints(spark).collect()}
-    assert before == {1}
-
-    # crash window: first rename done, second never happened
-    fp_dir = str(tmp_path / "state" / "fingerprints")
-    shutil.move(fp_dir, fp_dir + "__gc")
-    assert not os.path.exists(fp_dir)
-
-    # exists() recovers instead of reporting no history
-    assert state.exists(spark)
-    assert os.path.exists(fp_dir) and not os.path.exists(fp_dir + "__gc")
-    assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == before
-
-    # same for a compact() arriving first after the crash
-    shutil.move(fp_dir, fp_dir + "__gc")
-    report = state.compact(spark)
-    assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == before
-    assert "fingerprints" in report
-
-    # completed-swap leftover (__gc AND table both present): the
-    # leftover is the stale copy and IS deleted
-    shutil.copytree(fp_dir, fp_dir + "__gc")
-    state.compact(spark)
-    assert not os.path.exists(fp_dir + "__gc")
-    assert {r["doc_id"] for r in state.fingerprints(spark).collect()} == before
 
 
 @pytest.mark.slow
@@ -1917,7 +1871,7 @@ def test_curate_increment_line_dedup_matches_batch(spark, tmp_path):
     inc1 = {r["doc_id"]: r["text"] for r in curate_increment(batch1, state, cfg=cfg).collect()}
     assert set(inc1) == {1, 2}
     assert banner in inc1[1] and banner not in inc1[2]
-    assert state.line_fps_exist(spark), "line state landed with the batch"
+    assert state.landed(spark, "line_fps"), "line state landed with the batch"
 
     inc2 = {r["doc_id"]: r["text"] for r in curate_increment(batch2, state, cfg=cfg).collect()}
     assert set(inc2) == {11, 12}, "banner-only doc guts to empty and fails"
@@ -2069,13 +2023,13 @@ def test_state_growth_report_tracks_appends_and_compaction(spark, tmp_path):
     assert r3["fingerprints"]["files"] <= r2["fingerprints"]["files"]
 
 
-def test_prefix_backfill_on_legacy_state_and_crash_recovery(spark, tmp_path):
+def test_prefix_backfill_on_legacy_state_and_crash_recovery(spark, tmp_path, monkeypatch):
     """(1) A prefix-enabled handle writing over a LEGACY prefix-less
     state must backfill the landed history before appending, or older
     docs stay invisible to the landed-prefix probe direction.
-    (2) ensure_prefixes must recover from its own crashed attempt
-    (staging leftovers) instead of wedging on mode('error')."""
-    import os
+    (2) A backfill that crashed before its commit leaves no prefixes
+    and does not wedge the next attempt."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from clickhouse_mysql_data_reader_spark.curation import CurationState
 
@@ -2088,15 +2042,23 @@ def test_prefix_backfill_on_legacy_state_and_crash_recovery(spark, tmp_path):
     legacy.write(docs1)
 
     upgraded = CurationState(sd, jaccard_exact_threshold=0.8)
-    # simulate a crashed earlier backfill attempt: stale staging dir
-    os.makedirs(sd + "/prefixes__bf/_temporary", exist_ok=True)
     docs2 = spark.createDataFrame(
         [(i, f"epsilon zeta eta theta doc {i} " * 4) for i in range(10, 13)],
         "doc_id long, text string",
     )
+    real = DataFrameWriter.parquet
+
+    def crash(self, *a, **kw):
+        real(self, *a, **kw)
+        raise RuntimeError("crash after the backfilled prefix table")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError, match="crash after"):
+            upgraded.write(docs2)
+    assert not upgraded.landed(spark, "prefixes")
     upgraded.write(docs2)
 
-    assert not os.path.exists(sd + "/prefixes__bf")  # staging cleaned up
     pref_docs = {
         r["doc_id"] for r in upgraded.prefixes(spark).select("doc_id").distinct().collect()
     }

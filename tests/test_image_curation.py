@@ -172,7 +172,7 @@ def test_curate_increment_image_bootstrap_parity_and_state(spark, tmp_path):
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == batch_kept == {1, 3, 4}
 
-    assert state.image_landed(spark)
+    assert state.landed(spark, "image_fps")
     fps_docs = {
         r["doc_id"] for r in state.image_fps(spark).select("doc_id").collect()
     }

@@ -168,7 +168,7 @@ def test_curate_increment_semantic_bootstrap_parity_and_state(spark, tmp_path):
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == batch_kept == {1, 3, 4}
 
-    assert state.embed_landed(spark)
+    assert state.landed(spark, "embeddings", "srp_bands")
     emb_docs = {r["doc_id"] for r in state.embeddings(spark).select("doc_id").collect()}
     srp_docs = {
         r["doc_id"] for r in state.srp_bands(spark).select("doc_id").distinct().collect()
@@ -351,12 +351,12 @@ def test_semantic_two_batch_parity_min_id(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_backfill_embeddings_retry_guard(spark, tmp_path):
-    """A crash BETWEEN backfill's two renames leaves the first table
-    fully landed (the rename is the commit). A retry with the SAME
-    historical corpus re-derives and lands both tables; a retry with a
-    DIFFERENT corpus must be refused — re-deriving would silently
-    rewrite history with mismatched vectors (round-10 advice item)."""
+def test_backfill_embeddings_commits_both_tables_at_once(spark, tmp_path, monkeypatch):
+    """The backfill lands embeddings AND srp_bands in one commit: a
+    crash after the first table's files leaves neither visible, and the
+    retry lands both, after which the probe drops a semantic dup."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     legacy_dir = f"{tmp_path}/legacy"
     plain = CurationState(legacy_dir)
     hist = _mk(spark, [(1, "web", _T_A, _V_AB), (2, "books", _T_C, _V_C)])
@@ -364,25 +364,22 @@ def test_backfill_embeddings_retry_guard(spark, tmp_path):
                      cfg=CurationConfig(near_dup_jaccard=0.9))
 
     upgraded = CurationState(legacy_dir, **_GEO)
-    upgraded.backfill_embeddings(hist)
-    # simulate the mid-sequence crash: srp_bands (the SECOND rename)
-    # never landed, embeddings did
-    import shutil
+    real = DataFrameWriter.parquet
 
-    shutil.rmtree(f"{legacy_dir}/srp_bands")
-    assert not upgraded.embed_landed(spark)
+    def crash(self, *a, **kw):
+        real(self, *a, **kw)
+        raise RuntimeError("crash after the embeddings table")
 
-    # retry with a DIFFERENT corpus: refused before anything is deleted
-    other = _mk(spark, [(9, "web", _T_D, _V_D)])
-    with pytest.raises(ValueError, match="same historical corpus|SAME historical"):
-        CurationState(legacy_dir, **_GEO).backfill_embeddings(other)
-    # the landed table survived the refused retry
-    assert {r["doc_id"] for r in spark.read.parquet(
-        f"{legacy_dir}/embeddings").collect()} == {1, 2}
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError, match="crash after"):
+            upgraded.backfill_embeddings(hist)
+    assert not upgraded.landed(spark, "embeddings")
+    assert not upgraded.landed(spark, "srp_bands")
 
-    # retry with the SAME corpus: lands both tables, probe works
     CurationState(legacy_dir, **_GEO).backfill_embeddings(hist)
-    assert upgraded.embed_landed(spark)
+    assert upgraded.landed(spark, "embeddings", "srp_bands")
+    assert {r["doc_id"] for r in upgraded.embeddings(spark).collect()} == {1, 2}
     kept = {
         r["doc_id"]
         for r in curate_increment(

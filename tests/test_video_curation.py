@@ -126,7 +126,7 @@ def test_curate_increment_video_bootstrap_and_vs_history(spark, tmp_path):
     state = _vstate(tmp_path)
     kept1 = {r["doc_id"] for r in curate_increment(b1, state, cfg=cfg).collect()}
     assert kept1 == {1, 3}
-    assert state.video_landed(spark)
+    assert state.landed(spark, "video_fps")
     fps = state.video_fps(spark)
     per_doc = {
         r["doc_id"]: r["count"]
