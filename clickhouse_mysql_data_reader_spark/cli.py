@@ -29,21 +29,14 @@ from pyspark.sql import SparkSession
 
 from clickhouse_mysql_data_reader_spark.config import AppConfig, parse_config
 from clickhouse_mysql_data_reader_spark.migrator import Migrator
-
-
-def _get_spark(cfg: AppConfig) -> SparkSession:
-    spark = (
-        SparkSession.builder.appName("clickhouse-mysql-spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel(cfg.log_level)
-    return spark
+from clickhouse_mysql_data_reader_spark.session import get_spark
 
 
 def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
     verb = cfg.verb()  # validates exactly-one
-    spark = spark or _get_spark(cfg)
+    if spark is None:
+        spark = get_spark(app_name="clickhouse-mysql-spark")
+        spark.sparkContext.setLogLevel(cfg.log_level)
 
     if verb in ("create-table-sql", "create-table-json-template"):
         mig = Migrator(spark, cfg)

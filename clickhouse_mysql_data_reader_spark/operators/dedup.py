@@ -125,7 +125,9 @@ def shingle_table(
     ``id_col`` BEFORE tokenizing, so every shingle of a doc is born
     co-located and doc-keyed consumers meet an already-satisfied
     ClusteredDistribution: the distinct becomes a LOCAL aggregate (the
-    shingle relation itself never crosses an exchange). Byte math at
+    shingle relation itself never crosses an exchange). The co-location
+    survives AQE coalescing a persisted copy to fewer partitions: merged
+    hash partitions still cluster by doc. Byte math at
     scale: the repartition moves the raw text once (~5 B/token), where
     the default path's distinct exchange moves the (doc_id, sh_h)
     pairs (~16 B/token) — strictly fewer shuffled bytes for

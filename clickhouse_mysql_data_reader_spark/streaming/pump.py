@@ -263,11 +263,11 @@ class SnapshotStore:
         os.makedirs(tdir, exist_ok=True)
         manifest = self._load_manifest(tdir) or {"version": 0, "partitions": {}, "schema": None}
 
-        part_expr = F.expr(self.partition_expr) if self.partition_expr else F.lit("all")
-        changes = changes.withColumn(PART_COL, part_expr.cast("string"))
-        touched = sorted(
-            r[PART_COL] for r in changes.select(PART_COL).distinct().collect()
-        )
+        if self.partition_expr:
+            part_expr = F.expr(self.partition_expr).cast("string")
+            touched = sorted(r[0] for r in changes.select(part_expr).distinct().collect())
+        else:  # one partition: no job needed to learn which one is touched
+            part_expr, touched = F.lit("all"), ["all"]
         base_paths = [
             os.path.join(tdir, manifest["partitions"][pv])
             for pv in touched
@@ -284,7 +284,7 @@ class SnapshotStore:
         gen_dir = os.path.join(tdir, gen)
         if os.path.exists(gen_dir):  # orphan from a crashed attempt: not in
             shutil.rmtree(gen_dir)   # the manifest, safe to clear for retry
-        out = merged.withColumn(PART_COL, part_expr.cast("string"))
+        out = merged.withColumn(PART_COL, part_expr)
         # the single data write of this commit (the old store wrote twice)
         out.write.partitionBy(PART_COL).parquet(gen_dir)
 

@@ -7,7 +7,12 @@ acceptance method (docs/manual.md:436-443, count reconciliation).
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
+import textwrap
 
+import pyspark
 import pytest
 
 from clickhouse_mysql_data_reader_spark.cli import run
@@ -273,6 +278,51 @@ def test_migrate_to_csv_roundtrip(spark, tmp_path):
 
 
 # -- cli: verbs end-to-end --------------------------------------------------
+
+
+def test_cli_main_session_keeps_submit_master_and_package_settings(tmp_path):
+    """main() without a session builds it through session.get_spark: it
+    carries the package's SQL settings, applies --log-level, and keeps
+    the --master spark-submit was launched with (no local[N] default
+    forced on it)."""
+    from clickhouse_mysql_data_reader_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+
+    probe = tmp_path / "probe.py"
+    probe.write_text(textwrap.dedent(f"""
+        import json
+        from pyspark.sql import SparkSession
+        from clickhouse_mysql_data_reader_spark.cli import main
+        rc = main(["--create-table-json-template", "--src-parquet-dir", {SF!r},
+                   "--src-tables", "region", "--log-level", "ERROR"])
+        s = SparkSession.getActiveSession()
+        root = s._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+        keys = ["spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "spark.sql.shuffle.partitions", "spark.sql.session.timeZone"]
+        print(json.dumps({{"rc": rc, "master": s.sparkContext.master,
+                          "log": root.getLevel().toString(),
+                          **{{k: s.conf.get(k) for k in keys}}}}))
+    """))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYSPARK_PYTHON": sys.executable,
+        "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+    }
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    proc = subprocess.run(
+        [submit, "--master", "local[1]", "--driver-memory", "1g", str(probe)],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got == {
+        "rc": 0,
+        "master": "local[1]",
+        "log": "ERROR",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.session.timeZone": "UTC",
+    }
 
 
 def test_cli_migrate_table_exit_code_and_report(spark, tmp_path, capsys):

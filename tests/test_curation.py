@@ -804,6 +804,53 @@ def test_curate_increment_against_state(spark, tmp_path):
     assert kept3.count() == 0
 
 
+def test_two_batch_increment_matches_batch_smoke(spark, tmp_path):
+    """Fast twin of the slow two-batch parity batteries: a bootstrap
+    batch, then one increment against its landed history, keep exactly
+    what batch curate() keeps over the concatenation (ids in batch
+    order) — exact and near dups both within a batch and across the
+    history joins."""
+    from clickhouse_mysql_data_reader_spark.curation import (
+        CurationState,
+        curate_increment,
+    )
+
+    sea = ("call it what you want but the story of the sea is the story "
+           "of the men who sailed it for the love of the wind")
+    feast = ("a fresh account of the harvest feast held in the village "
+             "square when the rains finally came to the valley")
+    mill = ("the old mill turned again after the rains and the miller sang "
+            "as the wheel groaned back into its slow and steady work")
+    maps = ("maps of the coast were drawn again that year because the "
+            "storm had moved the sand and cut a new channel through the bar")
+    tail = " told once more"
+    batch1 = _mk_docs(spark, [
+        (1, "web", GOOD),
+        (2, "books", sea),
+        (3, "web", feast),
+        (4, "web", feast),          # exact dup within the batch
+        (5, "web", GOOD + tail),    # near dup within the batch
+    ])
+    batch2 = _mk_docs(spark, [
+        (10, "web", GOOD),          # exact dup of history
+        (11, "books", sea + tail),  # near dup of history
+        (12, "web", mill),
+        (13, "web", mill + tail),   # near dup within the batch
+        (14, "web", maps),
+        (15, "web", maps),          # exact dup within the batch
+    ])
+    cfg = CurationConfig(near_dup_jaccard=0.5)
+
+    state = CurationState(str(tmp_path / "st"))
+    kept = {r["doc_id"] for r in curate_increment(batch1, state, cfg=cfg).collect()}
+    kept |= {r["doc_id"] for r in curate_increment(batch2, state, cfg=cfg).collect()}
+
+    both = curate(batch1.unionByName(batch2), cfg=cfg)
+    batch_kept = {r["doc_id"] for r in both.after_near_dedup.collect()}
+    both.unpersist()
+    assert kept == batch_kept == {1, 2, 3, 12, 14}
+
+
 def test_curate_pii_redaction_preserves_case(spark):
     """Redaction mutates ONLY the redacted spans: original-case text
     survives, and mixed-case emails are still caught (case-insensitive

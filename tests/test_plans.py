@@ -88,6 +88,32 @@ def test_no_cached_relations_leak_after_jaccard_queries(spark, sf_dir):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
+def test_cached_doc_keyed_shingles_coalesce_and_stay_colocated(spark):
+    """AQE may coalesce the final stage of a cached plan (session
+    factory): a persisted batch-sized shingle relation shrinks below the
+    shuffle width, and its coalesced hash partitioning still satisfies
+    a doc-keyed groupBy — no exchange outside the cached relation."""
+    from pyspark import StorageLevel
+
+    from clickhouse_mysql_data_reader_spark.operators.dedup import shingle_table
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} tells of the quick brown fox near hill {i % 7}") for i in range(100)],
+        "doc_id long, text string",
+    )
+    sh = shingle_table(docs, "text", "doc_id", partition_by_id=True).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        sh.count()
+        assert sh.rdd.getNumPartitions() < int(spark.conf.get("spark.sql.shuffle.partitions"))
+        plan = _formatted(sh.groupBy("doc_id").count())
+        outer = plan.split("InMemoryRelation", 1)[0]
+        assert "InMemoryTableScan" in outer and "Exchange" not in outer, plan
+    finally:
+        sh.unpersist()
+
+
 @pytest.mark.usefixtures("spark")
 def test_bucketed_join_has_no_exchange(spark):
     tag = uuid.uuid4().hex[:8]

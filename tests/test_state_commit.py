@@ -14,6 +14,7 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from clickhouse_mysql_data_reader_spark.curation import (
@@ -206,3 +207,23 @@ def test_backfill_crash_lands_nothing_then_retry_lands_all(spark, tmp_path, monk
     upgraded.ensure_prefixes(spark)
     docs = {r["doc_id"] for r in upgraded.prefixes(spark).select("doc_id").collect()}
     assert docs == {1, 2, 5}
+
+
+def test_small_write_lands_each_table_in_few_files(spark, tmp_path):
+    """A batch-sized commit lands each table of its generation in a file
+    or two, not one file per shuffle partition: the session lets AQE
+    coalesce the cached shingle relation the doc tables derive from."""
+    docs = spark.range(0, 100, numPartitions=2).select(
+        F.col("id").alias("doc_id"),
+        F.lit("web").alias("source"),
+        F.format_string(
+            "doc %d tells of the %d rivers and hills of the north", "id", F.col("id") % 7
+        ).alias("text"),
+    )
+    state = _state(tmp_path / "st")
+    state.write(docs)
+    tables = state._manifest(spark)["tables"]
+    for t in CurationState._CORE:
+        [rel] = tables[t]
+        n_files = len(list((tmp_path / "st" / rel).glob("*.parquet")))
+        assert 1 <= n_files <= 2, (t, n_files)
