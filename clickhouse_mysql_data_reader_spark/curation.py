@@ -23,6 +23,7 @@ import json
 import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,7 +55,6 @@ from clickhouse_mysql_data_reader_spark.operators.text import (
     gate_columns,
     token_count,
 )
-from clickhouse_mysql_data_reader_spark.util import overlap_jobs
 
 
 @dataclass(frozen=True)
@@ -144,14 +144,12 @@ class CurationConfig:
     # headers/footers/licence text). Works in batch `curate()` AND in
     # `curate_increment`, where frequencies = batch counts + landed
     # kept-corpus counts at the batch's shingle keys (the
-    # ngram_boilerplate ``extra_counts`` seam — see curate_increment
+    # ngram_boilerplate ``extra_counts`` seam — see _near_dup_stage
     # for the exact parity contract). Shares the near-dup stage's
-    # shingle PLAN and
-    # curate() persists that plan (MEMORY_AND_DISK) while the gate is
-    # on — the shingle subtree has three consumers (fragment counts,
-    # coverage join-back, MinHash) and would otherwise re-evaluate per
-    # consumer. Call ``CurationResult.unpersist()`` after the terminal
-    # action to release it. None = off.
+    # cached shingle table (fragment counts, coverage join-back,
+    # MinHash); curate() also caches the post-gate shingle table. Call
+    # ``CurationResult.unpersist()`` after the terminal action to
+    # release them. None = off.
     max_boiler_frac: float | None = None
     boiler_min_docs: int = 5
     # opt-in corpus-level LINE dedup (operators/text.py line_dedup, the
@@ -453,6 +451,11 @@ class CurationConfig:
         )
 
     def __post_init__(self) -> None:
+        if self.near_dup_keeper not in ("min_id", "longest"):
+            raise ValueError(
+                f"unknown near_dup_keeper {self.near_dup_keeper!r}: "
+                "expected 'min_id' or 'longest'"
+            )
         # See the near_dup_keeper comment: containment edges exist to
         # merge truncated copies into their originals so "longest" can
         # keep the untruncated one — under "min_id" the truncated copy
@@ -575,9 +578,10 @@ class CurationResult:
     # split keyed on the pipeline's own near-dup components
     split_assignments: DataFrame | None = None
     stage_frames: dict[str, DataFrame] = field(default_factory=dict)
-    # frames curate() persisted on the caller's behalf (currently: the
-    # shared shingle frame when the boilerplate gate is on). The CALLER
-    # owns the lifecycle — call unpersist() after the terminal action.
+    # frames curate() persisted on the caller's behalf (the exact-dedup
+    # survivors and every multi-consumer frame of the near-dup stage).
+    # The CALLER owns the lifecycle — call unpersist() after the
+    # terminal action.
     persisted_frames: list[DataFrame] = field(default_factory=list)
 
     def stage_counts(self) -> dict[str, int]:
@@ -802,13 +806,12 @@ def _near_dup_drop_ids(
     id_col: str,
 ) -> DataFrame:
     """Non-keeper member ids of each near-dup component under the
-    configured keeper policy — shared by batch ``curate`` and BOTH
-    ``curate_increment`` component stages (bootstrap and within-batch),
-    so the policies cannot drift. Every component member must appear in
-    ``survivors`` (it does: components are built from the post-gate
-    shingle table of the same frame). Both branches are one map-side-
-    combinable aggregate on the component key plus one join back —
-    never a window."""
+    configured keeper policy (``CurationConfig`` validates the name) —
+    the keeper election of ``_near_dup_stage``. Every component member
+    must appear in ``survivors`` (it does: components are built from
+    the post-gate shingle table of the same frame). Both branches are
+    one map-side-combinable aggregate on the component key plus one
+    join back — never a window."""
     if cfg.near_dup_keeper == "longest":
         from clickhouse_mysql_data_reader_spark.operators.graph import (
             component_keepers,
@@ -826,15 +829,10 @@ def _near_dup_drop_ids(
             .filter(~F.col("is_keeper"))
             .select(F.col("doc_id").alias(id_col))
         )
-    if cfg.near_dup_keeper == "min_id":
-        return (
-            comps.join(component_summary(comps), "component")
-            .filter(F.col("doc_id") != F.col("keeper_id"))
-            .select(F.col("doc_id").alias(id_col))
-        )
-    raise ValueError(
-        f"unknown near_dup_keeper {cfg.near_dup_keeper!r}: "
-        "expected 'min_id' or 'longest'"
+    return (
+        comps.join(component_summary(comps), "component")
+        .filter(F.col("doc_id") != F.col("keeper_id"))
+        .select(F.col("doc_id").alias(id_col))
     )
 
 
@@ -845,15 +843,13 @@ def _near_dup_edge_set(
     sorted_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Within-relation near-dup EDGES under cfg's candidate policy —
-    shared by batch ``curate``, the increment BOOTSTRAP, and the
-    increment's WITHIN-BATCH stage, so the three cannot drift on what
-    counts as a duplicate pair: Jaccard edges from banded MinHash-LSH
-    (default) or the exact AllPairs prefix filter (``near_dup_exact``),
-    optionally unioned with exact containment edges
-    (``near_dup_containment``). ``sigs``: precomputed MinHash
-    signatures (the increment lands bands from the same frame — don't
-    aggregate twice); ``sorted_arrays``: the shared rarest-first
-    relation when the caller persists it for multiple prefix slices."""
+    the lexical edge types of ``_near_dup_stage``: Jaccard edges from
+    banded MinHash-LSH (default) or the exact AllPairs prefix filter
+    (``near_dup_exact``), optionally unioned with exact containment
+    edges (``near_dup_containment``). ``sigs``: precomputed MinHash
+    signatures (the increment bands the same frame — don't aggregate
+    twice); ``sorted_arrays``: the shared rarest-first relation the
+    stage caches for multiple prefix slices."""
     if cfg.near_dup_exact:
         cands = jaccard_prefix_candidates(
             sh, min_jaccard=cfg.near_dup_jaccard, sorted_arrays=sorted_arrays
@@ -887,8 +883,8 @@ def _cos_verified(
     (vid, v) vector relations — the same ``round(cosine, 6) >=
     threshold`` decision as operators/similarity.py
     ``near_dup_pairs_srp`` (equality pinned by test), factored out so
-    the within-batch and vs-history verifies of ``curate_increment``
-    share one formula with the batch path. Banding can only LOSE
+    the within-batch verify of ``_near_dup_stage`` and the vs-history
+    verify of ``curate_increment`` share one formula. Banding can only LOSE
     pairs; every emitted edge passed the exact test. Norms are
     precomputed per ROW (operators/similarity.py cosine_n — the folds
     are interpreted, so per-pair work is the single dot fold;
@@ -934,16 +930,15 @@ def _semantic_edge_set(
 ) -> DataFrame:
     """Within-relation SEMANTIC (embedding-cosine) near-dup edges under
     cfg's SRP geometry — the third edge type ``embed_near_cos``
-    enables, shared by batch ``curate``, the increment BOOTSTRAP, and
-    the increment's within-batch stage so the three cannot drift on
-    what counts as a semantic duplicate. Candidates from SRP-LSH band
-    collisions (operators/similarity.py ``srp_band_table`` — Charikar
-    2002 sign-random-projection; md5-derived hyperplanes, so bands are
-    session-independent), verified with the exact rounded cosine.
-    Result equals ``near_dup_pairs_srp(...).select(doc_a, doc_b)``
-    (pinned by test); the optional ``vecs``/``bands`` args let the
-    increment reuse its checkpointed projections instead of re-running
-    the gate plan per consumer. 100 TB shape: candidates scale with
+    enables, the semantic edge type of ``_near_dup_stage``. Candidates
+    from SRP-LSH band collisions (operators/similarity.py
+    ``srp_band_table`` — Charikar 2002 sign-random-projection;
+    md5-derived hyperplanes, so bands are session-independent),
+    verified with the exact rounded cosine. Result equals
+    ``near_dup_pairs_srp(...).select(doc_a, doc_b)`` (pinned by test);
+    the optional ``vecs``/``bands`` args let the stage reuse its cached
+    projections instead of re-running the gate plan per consumer.
+    100 TB shape: candidates scale with
     sum(|band bucket|^2), never |corpus|^2 — same banding bound as the
     MinHash-LSH stage."""
     from clickhouse_mysql_data_reader_spark.operators.similarity import (
@@ -1029,9 +1024,9 @@ def _image_sigs(
     decode_fn: Callable | None,
 ) -> DataFrame:
     """(doc_id, dhash) perceptual fingerprints for the image-bearing
-    rows of a corpus frame — shared by batch ``curate``, both
-    ``curate_increment`` stages, and ``CurationState._derive`` so the
-    four can never fingerprint differently. NULL-image rows are
+    rows of a corpus frame — shared by ``_near_dup_stage`` and
+    ``CurationState._derive`` so the two can never fingerprint
+    differently. NULL-image rows are
     excluded BEFORE the decode: under the deterministic fake every
     NULL would hash to the same 'image' and the whole imageless corpus
     would collapse into one bogus near-dup component."""
@@ -1175,17 +1170,13 @@ def _video_edge_set(fset: DataFrame, cfg: CurationConfig) -> DataFrame:
 
 def _video_hot_frames(
     fset_new: DataFrame, hist: DataFrame, cfg: CurationConfig
-) -> DataFrame | None:
+) -> DataFrame:
     """Frame hashes whose document frequency over the UNION of the
     batch's and the landed frame sets exceeds ``cfg.video_max_frame_df``
     — the increment-time form of the stop-frame guard (black frames,
     studio logos). The union is distinct-per-(doc, frame) first so a
     replayed epoch (whose docs already landed) cannot double-count its
-    own frames' df. One narrow aggregate over longs; returns ``None``
-    when no cap is configured. Both inputs must already be
-    (doc_id, fhash)-distinct."""
-    if cfg.video_max_frame_df is None:
-        return None
+    own frames' df. One narrow aggregate over longs."""
     return (
         fset_new.select("doc_id", "fhash")
         .unionByName(hist.select("doc_id", "fhash"))
@@ -1201,7 +1192,7 @@ def _video_hist_drop(
     fset_new: DataFrame,
     hist_fps: DataFrame,
     cfg: CurationConfig,
-    hot: DataFrame | None = None,
+    hot: DataFrame | None,
 ) -> DataFrame:
     """Batch docs that are video near-dups of HISTORY: frame-level
     equi-join of the batch's distinct frame hashes against the landed
@@ -1220,16 +1211,14 @@ def _video_hist_drop(
     logo) must not (a) make this equi-join quadratic in its history-side
     df, nor (b) count toward ``video_min_matching`` when the batch-curate
     of the same corpus would have dropped it before pairing
-    (``_video_hot_frames``). ``hot=`` lets the increment pass its
-    already-checkpointed hot set so the union aggregate runs once per
-    batch."""
+    (``_video_hot_frames``). ``hot`` is that set as ``_near_dup_stage``
+    cached it (None when no cap is configured), so the union aggregate
+    runs once per batch."""
     hist = hist_fps.select("doc_id", "fhash").dropDuplicates(
         ["doc_id", "fhash"]
     )
     new = fset_new.select("doc_id", "fhash")
-    if cfg.video_max_frame_df is not None:
-        if hot is None:
-            hot = _video_hot_frames(new, hist, cfg)
+    if hot is not None:
         new = new.join(hot, "fhash", "left_anti")
         hist = hist.join(hot, "fhash", "left_anti")
     return (
@@ -1341,6 +1330,227 @@ def _decontamination_stage(
     )
 
 
+def _require_columns(docs: DataFrame, cfg: CurationConfig, where: str) -> None:
+    """Raise when ``docs`` lacks a column an enabled modality edge type
+    reads — a schema check, no job runs. ``where`` names the frame in
+    the message ("corpus", "batch")."""
+    for knob, value, cols in (
+        ("embed_near_cos", cfg.embed_near_cos,
+         ((cfg.embed_col, f"embedding array<float/double>, length {cfg.embed_dim}"),)),
+        ("image_near_hamming", cfg.image_near_hamming,
+         ((cfg.image_col, "binary image, NULL for imageless rows"),)),
+        ("audio_near_hamming", cfg.audio_near_hamming,
+         ((cfg.audio_col, "binary audio clip, NULL for clipless rows"),)),
+        ("video_min_matching", cfg.video_min_matching,
+         ((cfg.video_col, "binary video clip"),
+          (cfg.video_duration_col, "BIGINT clip length in ms"))),
+    ):
+        missing = [f"{c!r} ({what})" for c, what in cols if c not in docs.columns]
+        if value is not None and missing:
+            raise ValueError(
+                f"{knob}={value} needs {' and '.join(missing)} on the "
+                f"{where}; got {docs.columns}"
+            )
+
+
+class _NearDup(NamedTuple):
+    """The frames ``_near_dup_stage`` built that its callers still read
+    (None where the config leaves that part off)."""
+
+    survivors: DataFrame  # docs left after the boilerplate gate
+    sh: DataFrame  # their shingle table
+    sigs: DataFrame | None  # MinHash signatures (None under near_dup_exact)
+    sorted_arrays: DataFrame | None  # rarest-first arrays (prefix paths)
+    vecs: DataFrame | None  # (vid, v)
+    srp_bands: DataFrame | None
+    image_sigs: DataFrame | None
+    audio_sigs: DataFrame | None
+    video_sigs: DataFrame | None
+    hot_frames: DataFrame | None  # stop frames over batch + history
+    comps: DataFrame
+    drop_ids: DataFrame  # non-keeper component members
+
+
+def _near_dup_stage(
+    exact: DataFrame,
+    cfg: CurationConfig,
+    text_col: str,
+    id_col: str,
+    keep: Callable[[DataFrame], DataFrame],
+    hist: tuple[DataFrame, DataFrame | None] | None = None,
+) -> _NearDup:
+    """The within-relation near-dup stage over the exact-dedup
+    survivors: the corpus-level boilerplate gate (optional), then every
+    edge type the config enables — Jaccard/containment, semantic,
+    image, audio, video — unioned into one ``connected_components``
+    pass and resolved by the keeper policy. Batch ``curate``, the
+    ``curate_increment`` bootstrap and the increment's within-batch
+    stage all run this one function, so they cannot drift on what
+    counts as a duplicate.
+
+    ``keep`` is the caller's cache: batch ``curate`` persists and
+    registers the frame for ``CurationResult.unpersist``, the increment
+    paths ``localCheckpoint`` (batch-sized frames). The caching rule:
+    every frame with more than one consumer goes through ``keep``,
+    because without it each consumer re-runs the gates from the scan
+    (and the Python decode UDFs, whose subtrees Spark never reuses
+    across join sides):
+
+    - the shingle table: MinHash signatures, the verify core's three
+      reads (sizes and both join sides), the boilerplate gate's
+      fragment counts and coverage join-back, the prefix paths'
+      frequency agg, prefix build and probe side, and in the increment
+      the history verify;
+    - the post-boilerplate shingle table: the same consumers without
+      the gate;
+    - the rarest-first sorted arrays whenever a prefix path is on: one
+      frequency agg and per-doc collect behind every prefix slice
+      (within-relation Jaccard and containment, the increment's
+      cross-history batch prefixes);
+    - the vectors and the SRP bands: both sides of the within-relation
+      verify plus the increment's history probes;
+    - each media fingerprint frame (image, audio, video, hot video
+      frames): both sides of the self-join, the history probe and the
+      state write through the sigs seam, so the decode runs once per
+      batch.
+
+    The materializations run one after another.
+
+    ``hist`` is None for batch and bootstrap. The increment's history
+    branch passes ``(landed shingles, landed video fingerprints or
+    None)``, two lazy state reads and the only history this stage
+    sees. The shingles add the landed kept corpus's doc frequencies at
+    the batch's shingle keys to the boilerplate gate (the
+    ``ngram_boilerplate`` ``extra_counts`` seam). KNOWN DELTA vs
+    batch-over-concatenation: history holds only docs that SURVIVED
+    curation, so incremental frequencies can run slightly lower and the
+    gate errs toward keeping; parity holds whenever a fragment's landed
+    frequency already clears ``boiler_min_docs`` (pinned by test). The
+    video fingerprints make the stop-frame document frequency span the
+    batch UNION history (``_video_hot_frames``): a frame rare in a
+    small increment but ubiquitous in the landed clips (black frame,
+    studio logo) would otherwise pair batch clips batch-curate never
+    pairs and blow up the history probe's equi-join. The hot set is
+    tiny; the RAW frame set still lands in state (later batches need
+    the true df)."""
+    hist_sh, hist_vid = hist if hist is not None else (None, None)
+    sh = keep(shingle_table(exact, text_col, id_col, partition_by_id=True))
+    survivors = exact
+    if cfg.max_boiler_frac is not None:
+        # BEFORE the merge: templated docs would otherwise form giant
+        # near-dup components (every doc sharing the template is a
+        # candidate pair)
+        from clickhouse_mysql_data_reader_spark.operators.text import (
+            ngram_boilerplate,
+        )
+
+        landed_counts = None
+        if hist_sh is not None:
+            # state.shingles is per-doc distinct, so count(1) per sh_h
+            # IS the doc frequency; dropDuplicates guards replayed-epoch
+            # double appends. One column-pruned scan keyed by the
+            # batch's shingles — the corpus text is never re-read.
+            landed_counts = (
+                hist_sh.join(sh.select("sh_h").distinct(), "sh_h", "left_semi")
+                .dropDuplicates(["doc_id", "sh_h"])
+                .groupBy("sh_h")
+                .agg(F.count(F.lit(1)).alias("n_docs"))
+            )
+        cov = ngram_boilerplate(
+            exact, text_col, id_col, min_docs=cfg.boiler_min_docs, shingles=sh,
+            extra_counts=landed_counts,
+        )
+        boiler = cov.filter(F.col("boiler_frac") > cfg.max_boiler_frac).select(
+            F.col("doc_id").alias(id_col)
+        )
+        survivors = exact.join(boiler, id_col, "left_anti")
+        sh = keep(
+            sh.join(boiler.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti")
+        )
+
+    # candidate policy: banded MinHash-LSH (probabilistic recall,
+    # cheapest) or the exact AllPairs prefix filter (near_dup_exact);
+    # containment edges exist because banded LSH under-recalls
+    # truncated copies (collision probability tracks JACCARD, low by
+    # construction for short-inside-long)
+    sorted_arr = None
+    if cfg.near_dup_exact or cfg.near_dup_containment is not None:
+        from clickhouse_mysql_data_reader_spark.operators.dedup import (
+            rarest_sorted_shingles,
+        )
+
+        sorted_arr = keep(rarest_sorted_shingles(sh))
+    sigs = None
+    if not cfg.near_dup_exact:
+        sigs = minhash_signatures(sh, num_hashes=cfg.minhash_k)
+    edges = _near_dup_edge_set(sh, cfg, sigs=sigs, sorted_arrays=sorted_arr)
+    # every further edge type is computed over the same post-boilerplate
+    # survivors and unions into the ONE components pass, so e.g. a
+    # paraphrase chain and a truncation chain touching one doc merge;
+    # each distinct() shuffles only the pair relation
+    vecs = srp = None
+    if cfg.embed_near_cos is not None:
+        # semantic: SRP-LSH banding + exact-cosine verify (SemDeDup,
+        # Abbas et al. 2023 — paraphrases no shingle metric sees)
+        from clickhouse_mysql_data_reader_spark.operators.similarity import (
+            as_double_array,
+            srp_band_table,
+        )
+
+        vecs = keep(
+            survivors.select(
+                F.col(id_col).alias("vid"), as_double_array(cfg.embed_col).alias("v")
+            )
+        )
+        srp = keep(
+            srp_band_table(
+                vecs,
+                cfg.embed_dim,
+                n_bits=cfg.embed_bits,
+                n_bands=cfg.embed_srp_bands,
+                id_col="vid",
+                vec_col="v",
+                seed=cfg.embed_seed,
+            )
+        )
+        edges = edges.unionByName(
+            _semantic_edge_set(survivors, cfg, id_col, vecs=vecs, bands=srp)
+        ).distinct()
+    img = aud = vid = hot = None
+    if cfg.image_near_hamming is not None:
+        # image dHash: Manku pigeonhole banding over the decode seam
+        img = keep(
+            _image_sigs(
+                survivors, id_col, cfg.image_col, cfg.image_grid_w,
+                cfg.image_grid_h, cfg.image_decode_fn,
+            )
+        )
+        edges = edges.unionByName(_image_edge_set(img, cfg)).distinct()
+    if cfg.audio_near_hamming is not None:
+        # audio energy contour: the image edge's mirror
+        aud = keep(
+            _audio_sigs(
+                survivors, id_col, cfg.audio_col, cfg.audio_n_windows,
+                cfg.audio_decode_fn,
+            )
+        )
+        edges = edges.unionByName(_audio_edge_set(aud, cfg)).distinct()
+    if cfg.video_min_matching is not None:
+        # video: the frame SET is the fingerprint, so the edge is an
+        # equi-join on the frame hash + a per-pair match count
+        vid = keep(_video_sigs(survivors, id_col, cfg))
+        pairable = vid
+        if hist_vid is not None and cfg.video_max_frame_df is not None:
+            hot = keep(_video_hot_frames(vid, hist_vid, cfg))
+            pairable = vid.join(hot, "fhash", "left_anti")
+        edges = edges.unionByName(_video_edge_set(pairable, cfg)).distinct()
+    comps = connected_components(edges)
+    return _NearDup(
+        survivors, sh, sigs, sorted_arr, vecs, srp, img, aud, vid, hot, comps,
+        _near_dup_drop_ids(comps, survivors, cfg, text_col, id_col),
+    )
+
+
 def curate(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
@@ -1358,33 +1568,7 @@ def curate(
     corpus doc that is a near-verbatim copy of a benchmark doc is
     removed so eval answers don't leak into training.
     """
-    if cfg.embed_near_cos is not None and cfg.embed_col not in docs.columns:
-        raise ValueError(
-            f"embed_near_cos={cfg.embed_near_cos} needs an "
-            f"{cfg.embed_col!r} column (array<float/double>, length "
-            f"{cfg.embed_dim}) on the corpus; got {docs.columns}"
-        )
-    if cfg.image_near_hamming is not None and cfg.image_col not in docs.columns:
-        raise ValueError(
-            f"image_near_hamming={cfg.image_near_hamming} needs an "
-            f"{cfg.image_col!r} binary column on the corpus (NULL for "
-            f"imageless rows); got {docs.columns}"
-        )
-    if cfg.audio_near_hamming is not None and cfg.audio_col not in docs.columns:
-        raise ValueError(
-            f"audio_near_hamming={cfg.audio_near_hamming} needs an "
-            f"{cfg.audio_col!r} binary column on the corpus (NULL for "
-            f"clipless rows); got {docs.columns}"
-        )
-    if cfg.video_min_matching is not None and (
-        cfg.video_col not in docs.columns
-        or cfg.video_duration_col not in docs.columns
-    ):
-        raise ValueError(
-            f"video_min_matching={cfg.video_min_matching} needs "
-            f"{cfg.video_col!r} (binary) and {cfg.video_duration_col!r} "
-            f"(BIGINT ms) columns on the corpus; got {docs.columns}"
-        )
+    _require_columns(docs, cfg, "corpus")
     if cfg.dedup_lines:
         # stage 0 (optional): corpus-level line dedup BEFORE the gates —
         # gates then score the cleaned text, and a doc whose every line
@@ -1405,159 +1589,24 @@ def curate(
     from pyspark import StorageLevel
 
     persisted: list[DataFrame] = []
-    # Persist the post-gates survivors ONCE (round 15; previously only
-    # under dedup_lines): `exact` forks into the shingle
-    # materialization, the vector/media edge frames, the keeper
+
+    def keep(df: DataFrame) -> DataFrame:
+        # spill-safe; the caller releases it via CurationResult.unpersist()
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(df)
+        return df
+
+    # Persist the post-gates survivors ONCE: `exact` forks into the
+    # shingle materialization, the vector/media edge frames, the keeper
     # election's text reads and the boiled -> packed chain — without a
     # cache the row gates (and with dedup_lines the three line
-    # shuffles) re-run from the scan per consumer. Spill-safe,
-    # released by the caller via CurationResult.unpersist() like the
-    # shingle frame.
-    exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.append(exact)
+    # shuffles) re-run from the scan per consumer.
+    exact = keep(exact)
 
-    # --- stage 3b: corpus-level boilerplate gate (optional) -----------
-    # BEFORE near-dup: templated docs would otherwise form giant
-    # near-dup components (every doc sharing the template is a
-    # candidate pair). Shares the shingle PLAN with the LSH stage — but
-    # a shared plan is not a shared evaluation: the shingle relation
-    # ALWAYS has multiple consumers — MinHash signatures plus the
-    # verify core's three reads (sizes + both join sides) in every
-    # config, the boilerplate gate's fragment counts + coverage
-    # join-back when on, and the prefix-filter paths (containment edge
-    # type and/or exact Jaccard candidates) add four more (frequency
-    # agg, prefix build, probe side, verify core). One unconditional
-    # persist (the r15 ADVICE collapse of two exhaustive branches);
-    # caller-owned lifecycle via CurationResult.persisted_frames /
-    # .unpersist(), same contract as jaccard_pairs' storage parameter.
-    sh = shingle_table(exact, text_col, id_col, partition_by_id=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    persisted.append(sh)
-    boiled = exact
-    prefix_paths_on = cfg.near_dup_containment is not None or cfg.near_dup_exact
-    if cfg.max_boiler_frac is not None:
-        from clickhouse_mysql_data_reader_spark.operators.text import (
-            ngram_boilerplate,
-        )
-
-        cov = ngram_boilerplate(
-            exact, text_col, id_col, min_docs=cfg.boiler_min_docs, shingles=sh
-        )
-        boiler_drop = cov.filter(
-            F.col("boiler_frac") > cfg.max_boiler_frac
-        ).select(F.col("doc_id").alias(id_col))
-        boiled = exact.join(boiler_drop, id_col, "left_anti")
-        sh = sh.join(
-            boiler_drop.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti"
-        )
-        if prefix_paths_on:
-            # the POST-filter sh now feeds the same 4-6 prefix/verify
-            # consumers; only the pre-filter frame is cached above, so
-            # without this each consumer re-runs the coverage subtree
-            # plus the anti-join shuffle
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(sh)
-
-    # --- stage 4: near-dup merge (candidates -> Jaccard -> components)
-    # candidate generation: banded MinHash-LSH (probabilistic recall,
-    # cheapest) or the exact AllPairs prefix filter (near_dup_exact —
-    # provably no missed pair); both feed the same exact Jaccard verify
-    sorted_arr = None
-    if cfg.near_dup_exact and cfg.near_dup_containment is not None:
-        from pyspark import StorageLevel
-
-        from clickhouse_mysql_data_reader_spark.operators.dedup import (
-            rarest_sorted_shingles,
-        )
-
-        # both prefix forms slice the SAME rarest-first array — compute
-        # its two heavy shuffles (frequency agg + per-doc collect) once
-        sorted_arr = rarest_sorted_shingles(sh).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        persisted.append(sorted_arr)
-    # candidate policy + optional containment edge type: the shared
-    # helper (also the increments' within-batch stage). Containment
-    # edges exist because banded LSH under-recalls truncated-copy
-    # pairs (collision probability tracks JACCARD, low by construction
-    # for short-inside-long); the union feeds one components pass and
-    # distinct() only shuffles the pair relation, many orders smaller
-    # than the corpus.
-    edges = _near_dup_edge_set(sh, cfg, sorted_arrays=sorted_arr)
-    if cfg.embed_near_cos is not None:
-        # THIRD edge type: embedding-cosine (semantic) near-dups via
-        # SRP-LSH banding + exact-cosine verify — paraphrases and
-        # rewrites no shingle metric can see (SemDeDup, Abbas et al.
-        # 2023 run this AFTER lexical dedup; here the edge types union
-        # into ONE components pass, so a paraphrase chain and a
-        # truncation chain touching the same doc merge). Computed over
-        # the post-boilerplate survivors, same relation the lexical
-        # edges see. The (id, vector) frame has three consumers (band
-        # table + both verify joins) — persist it so the gate chain
-        # upstream of `boiled` runs once, not three times (the shingle
-        # frame's discipline; caller-owned release via unpersist()).
-        from pyspark import StorageLevel
-
-        from clickhouse_mysql_data_reader_spark.operators.similarity import (
-            as_double_array,
-        )
-
-        vecs_sem = boiled.select(
-            F.col(id_col).alias("vid"), as_double_array(cfg.embed_col).alias("v")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(vecs_sem)
-        edges = edges.unionByName(
-            _semantic_edge_set(boiled, cfg, id_col, vecs=vecs_sem)
-        ).distinct()
-    if cfg.image_near_hamming is not None:
-        # FOURTH edge type: image perceptual-hash near-dups — dHash
-        # over the injectable decode seam, Manku pigeonhole banding
-        # (the text simhash machinery on the image modality). Computed
-        # over the post-boilerplate survivors like every other edge
-        # type. The fingerprint frame is PERSISTED: the banding
-        # self-join consumes it on both sides and Spark plans a lazy
-        # mapInPandas decode subtree per side (no ReusedExchange for
-        # Python subtrees) — the cache makes the decode run once, the
-        # image_near_dup_pairs ``sigs=`` discipline inside the
-        # pipeline. Caller-owned release via unpersist(), like the
-        # shingle/vector frames.
-        from pyspark import StorageLevel
-
-        sigs_img = _image_sigs(
-            boiled, id_col, cfg.image_col, cfg.image_grid_w,
-            cfg.image_grid_h, cfg.image_decode_fn,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(sigs_img)
-        edges = edges.unionByName(_image_edge_set(sigs_img, cfg)).distinct()
-    if cfg.audio_near_hamming is not None:
-        # FIFTH edge type: audio energy-contour near-dups — the image
-        # stanza's exact mirror (same persist-the-fingerprints
-        # decode-once discipline, same banding machinery over the
-        # energy-hash longs)
-        from pyspark import StorageLevel
-
-        sigs_aud = _audio_sigs(
-            boiled, id_col, cfg.audio_col, cfg.audio_n_windows,
-            cfg.audio_decode_fn,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(sigs_aud)
-        edges = edges.unionByName(_audio_edge_set(sigs_aud, cfg)).distinct()
-    if cfg.video_min_matching is not None:
-        # SIXTH edge type: video sampled-frame matching — the frame
-        # SET is the fingerprint (shingle-table shape), so the edge is
-        # an equi-join on the frame hash + a per-pair match count, not
-        # banding; same persist-the-fingerprints decode-once discipline
-        from pyspark import StorageLevel
-
-        fset_vid = _video_sigs(boiled, id_col, cfg).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        persisted.append(fset_vid)
-        edges = edges.unionByName(_video_edge_set(fset_vid, cfg)).distinct()
-    comps = connected_components(edges)
-    drop_ids = _near_dup_drop_ids(comps, boiled, cfg, text_col, id_col)
-    deduped = boiled.join(drop_ids, id_col, "left_anti")
+    # --- stages 3b + 4: boilerplate gate, near-dup merge ---------------
+    nd = _near_dup_stage(exact, cfg, text_col, id_col, keep)
+    boiled, comps = nd.survivors, nd.comps
+    deduped = boiled.join(nd.drop_ids, id_col, "left_anti")
 
     # --- stage 5: decontamination vs the benchmark --------------------
     clean = _decontamination_stage(deduped, benchmark, cfg, text_col, id_col)
@@ -2964,11 +3013,6 @@ def curate_increment(
             f"(minhash_k={state.minhash_k}, lsh_bands={state.lsh_bands}); "
             "derive the batch's signatures with the state's parameters"
         )
-    if cfg.near_dup_keeper not in ("min_id", "longest"):
-        raise ValueError(
-            f"unknown near_dup_keeper {cfg.near_dup_keeper!r}: "
-            "expected 'min_id' or 'longest'"
-        )
     if cfg.quality_calibrate_pctile is not None:
         # corpus-relative by construction: a within-batch percent_rank
         # would make the keep set depend on batch boundaries (the same
@@ -3043,12 +3087,6 @@ def curate_increment(
                 "derived with different geometries never collide "
                 "(silently missed semantic duplicates)"
             )
-        if cfg.embed_col not in new_docs.columns:
-            raise ValueError(
-                f"embed_near_cos={cfg.embed_near_cos} needs an "
-                f"{cfg.embed_col!r} column (array<float/double>, length "
-                f"{cfg.embed_dim}) on the batch; got {new_docs.columns}"
-            )
     if cfg.image_near_hamming is not None:
         # the embed-geometry argument on the image modality:
         # fingerprints derived with a different grid or decoder can
@@ -3075,12 +3113,6 @@ def curate_increment(
                 f"{theirs_img}; fingerprints from different grids/"
                 "decoders never match (silently missed image duplicates)"
             )
-        if cfg.image_col not in new_docs.columns:
-            raise ValueError(
-                f"image_near_hamming={cfg.image_near_hamming} needs an "
-                f"{cfg.image_col!r} binary column on the batch; got "
-                f"{new_docs.columns}"
-            )
     if cfg.audio_near_hamming is not None:
         # the image-geometry argument on the audio modality
         mine_aud = (
@@ -3102,12 +3134,6 @@ def curate_increment(
                 f"{theirs_aud}; fingerprints from different window "
                 "counts/decoders never match (silently missed audio "
                 "duplicates)"
-            )
-        if cfg.audio_col not in new_docs.columns:
-            raise ValueError(
-                f"audio_near_hamming={cfg.audio_near_hamming} needs an "
-                f"{cfg.audio_col!r} binary column on the batch; got "
-                f"{new_docs.columns}"
             )
     if cfg.video_min_matching is not None:
         mine_vid = (
@@ -3136,17 +3162,7 @@ def curate_increment(
                 "differently never match (silently missed video "
                 "duplicates)"
             )
-        missing_vid = [
-            c for c in (cfg.video_col, cfg.video_duration_col)
-            if c not in new_docs.columns
-        ]
-        if missing_vid:
-            raise ValueError(
-                f"video_min_matching={cfg.video_min_matching} needs "
-                f"{cfg.video_col!r} (binary) and "
-                f"{cfg.video_duration_col!r} (BIGINT ms) columns on the "
-                f"batch; missing {missing_vid} in {new_docs.columns}"
-            )
+    _require_columns(new_docs, cfg, "batch")
     spark = new_docs.sparkSession
     # also validate against the ON-DISK pins: the ctor-vs-cfg checks
     # above cannot catch a session that reconstructs the state handle
@@ -3267,92 +3283,16 @@ def curate_increment(
     _, exact = _row_stages(new_docs, cfg, text_col, id_col)
 
     if not state.exists(spark):
-        # bootstrap: no history yet — within-batch curation only.
-        # localCheckpoint: the shingle table feeds signatures, the
-        # Jaccard verify AND (via components' edge materialization)
-        # runs eagerly anyway — without truncation each consumer
-        # re-executes the gates+shingling chain from the scan
-        sh0 = shingle_table(
-            exact, text_col, id_col, partition_by_id=True
-        ).localCheckpoint()
-        # boilerplate gate, bootstrap form: batch one IS the corpus so
-        # far, so within-batch frequencies are exactly what batch
-        # curate() over the (one-batch) concatenation would measure
-        boiled0 = exact
-        if cfg.max_boiler_frac is not None:
-            from clickhouse_mysql_data_reader_spark.operators.text import (
-                ngram_boilerplate,
-            )
-
-            cov0 = ngram_boilerplate(
-                exact, text_col, id_col, min_docs=cfg.boiler_min_docs, shingles=sh0
-            )
-            bdrop0 = cov0.filter(
-                F.col("boiler_frac") > cfg.max_boiler_frac
-            ).select(F.col("doc_id").alias(id_col))
-            boiled0 = exact.join(bdrop0, id_col, "left_anti")
-            sh0 = sh0.join(
-                bdrop0.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti"
-            )
-        # same candidate policy + containment edge type as batch
-        # curate() via the shared helper — batch one IS the corpus so
-        # far, so the bootstrap's survivor set equals a batch run over
-        # the (one-batch) concatenation under any cfg (parity-pinned).
-        # sorted_arrays is left to recompute per slice off the
-        # checkpointed sh0: a batch-sized freq agg + collect, not the
-        # corpus-scale pass batch mode persists.
-        edges0 = _near_dup_edge_set(sh0, cfg)
-        if cfg.embed_near_cos is not None:
-            # third (semantic) edge type, same union as batch curate();
-            # localCheckpoint the batch-sized vector frame (three
-            # consumers — the bootstrap's established discipline)
-            from clickhouse_mysql_data_reader_spark.operators.similarity import (
-                as_double_array,
-            )
-
-            vecs0 = boiled0.select(
-                F.col(id_col).alias("vid"),
-                as_double_array(cfg.embed_col).alias("v"),
-            ).localCheckpoint()
-            edges0 = edges0.unionByName(
-                _semantic_edge_set(boiled0, cfg, id_col, vecs=vecs0)
-            ).distinct()
-        sigs_img0 = None
-        if cfg.image_near_hamming is not None:
-            # fourth (image) edge type, same union as batch curate();
-            # localCheckpoint so the decode runs once (the self-join
-            # consumes both sides AND the state write lands the kept
-            # subset through the image_sigs seam)
-            sigs_img0 = _image_sigs(
-                boiled0, id_col, cfg.image_col, cfg.image_grid_w,
-                cfg.image_grid_h, cfg.image_decode_fn,
-            ).localCheckpoint()
-            edges0 = edges0.unionByName(
-                _image_edge_set(sigs_img0, cfg)
-            ).distinct()
-        sigs_aud0 = None
-        if cfg.audio_near_hamming is not None:
-            # fifth (audio) edge type — the image stanza's mirror
-            sigs_aud0 = _audio_sigs(
-                boiled0, id_col, cfg.audio_col, cfg.audio_n_windows,
-                cfg.audio_decode_fn,
-            ).localCheckpoint()
-            edges0 = edges0.unionByName(
-                _audio_edge_set(sigs_aud0, cfg)
-            ).distinct()
-        fset_vid0 = None
-        if cfg.video_min_matching is not None:
-            # sixth (video) edge type — set-valued fingerprints
-            fset_vid0 = _video_sigs(boiled0, id_col, cfg).localCheckpoint()
-            edges0 = edges0.unionByName(
-                _video_edge_set(fset_vid0, cfg)
-            ).distinct()
-        comps0 = connected_components(edges0)
-        drop0 = _near_dup_drop_ids(comps0, boiled0, cfg, text_col, id_col)
-        kept = boiled0.join(drop0, id_col, "left_anti")
+        # bootstrap: no history yet — batch one IS the corpus so far, so
+        # the within-batch stage equals batch curate() over the
+        # (one-batch) concatenation under any cfg (parity-pinned)
+        nd = _near_dup_stage(
+            exact, cfg, text_col, id_col, lambda df: df.localCheckpoint()
+        )
+        kept = nd.survivors.join(nd.drop_ids, id_col, "left_anti")
         kept = _decontamination_stage(kept, benchmark, cfg, text_col, id_col)
-        return _land(kept, comps0, image_sigs=sigs_img0, audio_sigs=sigs_aud0,
-                     video_sigs=fset_vid0)
+        return _land(kept, nd.comps, image_sigs=nd.image_sigs,
+                     audio_sigs=nd.audio_sigs, video_sigs=nd.video_sigs)
 
     # --- exact dedup vs history (anti-join on fingerprint) ------------
     with_fp = exact.withColumn("_fp", content_fingerprint(F.col(text_col)))
@@ -3380,7 +3320,7 @@ def curate_increment(
         # upstream plan (gates + PII scrub + exact-dedup window + the
         # Arrow probe UDF) — doubling the scan-stage work of the very
         # path the bloom exists to make cheap. Batch-sized frame, same
-        # discipline as sh_new below.
+        # discipline as the near-dup stage's frames below.
         tagged = with_fp.withColumn(
             "_maybe",
             might_contain(bloom, state.bloom_bits, state.bloom_hashes, F.col("_fp")),
@@ -3398,7 +3338,7 @@ def curate_increment(
     else:
         vs_hist = with_fp.join(hist_fp, "_fp", "left_anti").drop("_fp")
 
-    # round 15: materialize the gates + history-anti-join result ONCE.
+    # Materialize the gates + history-anti-join result ONCE.
     # vs_hist feeds every downstream consumer — the shingle table, the
     # vector/media fingerprint frames, the keeper election's text
     # reads and the final kept anti-joins — and each consumer
@@ -3407,218 +3347,24 @@ def curate_increment(
     # increment in the semantic config, profiled). Batch-sized, the
     # same storage class as the dedup_lines `cleaned` checkpoint; it
     # also freezes the state-fingerprint snapshot for every consumer
-    # at once (the sh_new mid-increment-consistency argument, now one
-    # level up).
+    # at once.
     vs_hist = vs_hist.localCheckpoint()
 
-    # --- near-dup within batch AND vs history -------------------------
-    from clickhouse_mysql_data_reader_spark.operators.dedup import band_table
-
-    # localCheckpoint: sh_new has THREE consumers (signatures/bands,
-    # the within-batch Jaccard verify, and the union feeding the
-    # history Jaccard), and connected_components executes eagerly
-    # below — truncating here makes the expensive gates+shingling
-    # chain run once instead of once per consumer. Since round 15 the
-    # materialization itself is submitted through util.overlap_jobs
-    # together with the other independent per-batch checkpoints
-    # (vectors, media fingerprints) below — UNLESS the boilerplate
-    # gate is on, which rewrites vs_hist from sh_new and so forces the
-    # shingle job to land first, alone.
-    sh_new_plan = shingle_table(vs_hist, text_col, id_col, partition_by_id=True)
-    sh_new = None
-    if cfg.max_boiler_frac is not None:
-        sh_new = sh_new_plan.localCheckpoint()
-
-    # --- boilerplate gate vs history + batch (optional) ---------------
-    # Same position as batch curate() (after exact dedup, before the
-    # near-dup stage); doc-frequencies = this batch's counts + the
-    # landed KEPT corpus's counts at the batch's shingle keys only
-    # (state.shingles is per-doc distinct, so count(1) per sh_h IS the
-    # doc frequency; dropDuplicates guards replayed-epoch double
-    # appends). Per-batch cost: one column-pruned scan of the state
-    # shingle table keyed by the batch's shingles — the corpus text is
-    # never re-read. KNOWN DELTA vs batch-over-concatenation: history
-    # contributes only docs that SURVIVED curation (batch mode counts
-    # pre-near-dup docs, including ones later dropped), so incremental
-    # frequencies can run slightly lower — the gate errs toward
-    # keeping. Parity holds whenever the fragment's landed frequency
-    # already clears boiler_min_docs (pinned by test).
-    if cfg.max_boiler_frac is not None:
-        from clickhouse_mysql_data_reader_spark.operators.text import (
-            ngram_boilerplate,
-        )
-
-        hist_counts = (
-            state.shingles(spark, exclude_epoch=epoch_id, run_id=run_id)
-            .join(sh_new.select("sh_h").distinct(), "sh_h", "left_semi")
-            .dropDuplicates(["doc_id", "sh_h"])
-            .groupBy("sh_h")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-        )
-        cov = ngram_boilerplate(
-            vs_hist,
-            text_col,
-            id_col,
-            min_docs=cfg.boiler_min_docs,
-            shingles=sh_new,
-            extra_counts=hist_counts,
-        )
-        bdrop = cov.filter(F.col("boiler_frac") > cfg.max_boiler_frac).select(
-            F.col("doc_id").alias(id_col)
-        )
-        vs_hist = vs_hist.join(bdrop, id_col, "left_anti")
-        sh_new = sh_new.join(
-            bdrop.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti"
-        )
-
-    # --- per-batch materializations, OVERLAPPED (round 15) -------------
-    # Every eager localCheckpoint below is an independent Spark job
-    # over the same batch: shingles (+ the rarest-sorted arrays that
-    # back the prefix slices), vectors -> SRP bands, image/audio
-    # fingerprints, video frame sets (-> hot-frame guard). Landing
-    # them sequentially left the cluster idle through each job's
-    # straggler tail; util.overlap_jobs submits them concurrently from
-    # driver threads (FIFO back-fill). DEPENDENT materializations are
-    # chained INSIDE one callable and never split across two. Each
-    # job's per-frame rationale is unchanged from rounds 10-14:
-    # - sh_new: three consumers (see the comment above sh_new_plan);
-    # - sorted arrays: the rarest-first relation backs up to three
-    #   prefix slices (within-batch jaccard/containment + the
-    #   cross-history batch prefixes) — one freq agg + collect, not
-    #   one per slice;
-    # - vecs/SRP bands: batch-sized, three consumers each (both sides
-    #   of the within-batch verify + the history probes), and the
-    #   checkpoint cuts the state reads upstream in vs_hist out of the
-    #   write lineage;
-    # - image/audio fingerprints: FOUR consumers (both sides of the
-    #   within-batch banding self-join, the cross-history probe, the
-    #   state write through the sigs seam) — the Arrow decode runs
-    #   ONCE per batch;
-    # - video frame sets: same, plus the hot-frame stop guard, whose
-    #   df must see batch UNION history (a frame rare in a small
-    #   increment but ubiquitous in the landed clips — black frame,
-    #   studio logo — would otherwise pair batch clips batch-curate
-    #   would never pair AND explode the history probe's equi-join).
-    #   The hot set is tiny (only hashes above the cap); the RAW
-    #   fingerprint set still lands in state (future batches need the
-    #   true df).
-    exactish = cfg.near_dup_exact or cfg.near_dup_containment is not None
-    if exactish:
-        from clickhouse_mysql_data_reader_spark.operators.dedup import (
-            rarest_sorted_shingles,
-        )
-    _vh = vs_hist  # the (possibly boiler-filtered) frame the closures bind
-    jobs: dict = {}
-    if sh_new is None:
-
-        def _sh_job(p=sh_new_plan):
-            s = p.localCheckpoint()
-            sa = rarest_sorted_shingles(s).localCheckpoint() if exactish else None
-            return s, sa
-
-        jobs["sh"] = _sh_job
-    elif exactish:
-        # boiler path: sh_new landed before the gate and was filtered
-        # lazily; the sorted arrays derive from the FILTERED frame
-        jobs["sorted_arr"] = lambda s=sh_new: rarest_sorted_shingles(
-            s
-        ).localCheckpoint()
-    if cfg.embed_near_cos is not None:
-        from clickhouse_mysql_data_reader_spark.operators.similarity import (
-            as_double_array,
-            srp_band_table,
-        )
-
-        def _vec_job(vh=_vh):
-            v = vh.select(
-                F.col(id_col).alias("vid"),
-                as_double_array(cfg.embed_col).alias("v"),
-            ).localCheckpoint()
-            b = srp_band_table(
-                v,
-                cfg.embed_dim,
-                n_bits=cfg.embed_bits,
-                n_bands=cfg.embed_srp_bands,
-                id_col="vid",
-                vec_col="v",
-                seed=cfg.embed_seed,
-            ).localCheckpoint()
-            return v, b
-
-        jobs["vec"] = _vec_job
-    if cfg.image_near_hamming is not None:
-        jobs["img"] = lambda vh=_vh: _image_sigs(
-            vh, id_col, cfg.image_col, cfg.image_grid_w,
-            cfg.image_grid_h, cfg.image_decode_fn,
-        ).localCheckpoint()
-    if cfg.audio_near_hamming is not None:
-        jobs["aud"] = lambda vh=_vh: _audio_sigs(
-            vh, id_col, cfg.audio_col, cfg.audio_n_windows,
-            cfg.audio_decode_fn,
-        ).localCheckpoint()
-    if cfg.video_min_matching is not None:
-
-        def _vid_job(vh=_vh):
-            f = _video_sigs(vh, id_col, cfg).localCheckpoint()
-            hot = None
-            if cfg.video_max_frame_df is not None:
-                hist_v = (
-                    state.video_fps(spark, exclude_epoch=epoch_id, run_id=run_id)
-                    .select("doc_id", "fhash")
-                    .dropDuplicates(["doc_id", "fhash"])
-                )
-                hot = _video_hot_frames(f, hist_v, cfg).localCheckpoint()
-            return f, hot
-
-        jobs["vid"] = _vid_job
-
-    mats = overlap_jobs(jobs)
-    sorted_arr_new = None
-    if "sh" in mats:
-        sh_new, sorted_arr_new = mats["sh"]
-    elif "sorted_arr" in mats:
-        sorted_arr_new = mats["sorted_arr"]
-    vecs_new, bands_new_srp = mats.get("vec", (None, None))
-    sigs_img_new = mats.get("img")
-    sigs_aud_new = mats.get("aud")
-    fset_vid_new, hot_vid = mats.get("vid", (None, None))
-    fset_vid_pair = fset_vid_new
-    if hot_vid is not None:
-        fset_vid_pair = fset_vid_new.join(hot_vid, "fhash", "left_anti")
-
-    sigs_new = minhash_signatures(sh_new, num_hashes=cfg.minhash_k)
-    bands_new = band_table(sigs_new, num_hashes=cfg.minhash_k, bands=cfg.lsh_bands)
-    edges_in = _near_dup_edge_set(
-        sh_new, cfg, sigs=sigs_new, sorted_arrays=sorted_arr_new
+    # --- near-dup within batch, then vs history -----------------------
+    # The two lazy state reads the within-batch stage needs: landed
+    # shingles (boilerplate doc frequencies; also the history verify
+    # below) and landed video frames (stop-frame df).
+    hist_sh_full = state.shingles(spark, exclude_epoch=epoch_id, run_id=run_id)
+    hist_vid = (
+        state.video_fps(spark, exclude_epoch=epoch_id, run_id=run_id)
+        if cfg.video_min_matching is not None
+        else None
     )
-    if cfg.embed_near_cos is not None:
-        # third (semantic) edge type within the batch — the
-        # checkpointed vecs/bands reused so the gate plan does not
-        # re-execute per consumer
-        edges_in = edges_in.unionByName(
-            _semantic_edge_set(
-                vs_hist, cfg, id_col, vecs=vecs_new, bands=bands_new_srp
-            )
-        ).distinct()
-    if cfg.image_near_hamming is not None:
-        # fourth (image) edge type within the batch — the checkpointed
-        # fingerprints reused so the decode does not re-run per side
-        edges_in = edges_in.unionByName(
-            _image_edge_set(sigs_img_new, cfg)
-        ).distinct()
-    if cfg.audio_near_hamming is not None:
-        # fifth (audio) edge type within the batch
-        edges_in = edges_in.unionByName(
-            _audio_edge_set(sigs_aud_new, cfg)
-        ).distinct()
-    if cfg.video_min_matching is not None:
-        # sixth (video) edge type within the batch — over the
-        # hot-frame-guarded set (df computed vs batch UNION history)
-        edges_in = edges_in.unionByName(
-            _video_edge_set(fset_vid_pair, cfg)
-        ).distinct()
-    comps = connected_components(edges_in)
-    drop_in = _near_dup_drop_ids(comps, vs_hist, cfg, text_col, id_col)
+    nd = _near_dup_stage(
+        vs_hist, cfg, text_col, id_col, lambda df: df.localCheckpoint(),
+        hist=(hist_sh_full, hist_vid),
+    )
+    vs_hist, sh_new, comps = nd.survivors, nd.sh, nd.comps
 
     # vs history, Jaccard metric: candidates from the LSH bucket-join
     # (new bands vs state bands on (band_id, band_hash) — only
@@ -3628,8 +3374,7 @@ def curate_increment(
     # cross_prefix_candidates; provably no missed pair, the history
     # side streams and is never shuffled when AQE broadcasts the
     # batch-sized side).
-    hist_sh_full = state.shingles(spark, exclude_epoch=epoch_id, run_id=run_id)
-    if exactish:
+    if nd.sorted_arrays is not None:
         hist_prefixes = state.prefixes(spark, exclude_epoch=epoch_id, run_id=run_id)
     if cfg.near_dup_exact:
         frac_j = (1.0 - cfg.near_dup_jaccard) / (1.0 + cfg.near_dup_jaccard)
@@ -3637,10 +3382,13 @@ def curate_increment(
             sh_new,
             hist_sh_full,
             frac_j,
-            prefix_new=prefix_shingles(sh_new, frac_j, sorted_arrays=sorted_arr_new),
+            prefix_new=prefix_shingles(sh_new, frac_j, sorted_arrays=nd.sorted_arrays),
             prefix_hist=hist_prefixes,
         )
     else:
+        from clickhouse_mysql_data_reader_spark.operators.dedup import band_table
+
+        bands_new = band_table(nd.sigs, num_hashes=cfg.minhash_k, bands=cfg.lsh_bands)
         cands_hist = (
             bands_new.alias("n")
             .join(
@@ -3666,7 +3414,7 @@ def curate_increment(
             sh_new,
             hist_sh_full,
             frac_c,
-            prefix_new=prefix_shingles(sh_new, frac_c, sorted_arrays=sorted_arr_new),
+            prefix_new=prefix_shingles(sh_new, frac_c, sorted_arrays=nd.sorted_arrays),
             prefix_hist=hist_prefixes,
         )
     # dropDuplicates AFTER the semi-join cut (candidate docs only — tiny):
@@ -3709,7 +3457,7 @@ def curate_increment(
         # History always wins: the NEW doc drops.
         hist_srp = state.srp_bands(spark, exclude_epoch=epoch_id, run_id=run_id)
         sem_cands = (
-            bands_new_srp.alias("n")
+            nd.srp_bands.alias("n")
             .join(
                 hist_srp.alias("h"),
                 (F.col("n.band_idx") == F.col("h.band_idx"))
@@ -3733,7 +3481,7 @@ def curate_increment(
             .dropDuplicates(["doc_id"])
             .select(F.col("doc_id").alias("vid"), "v")
         )
-        sem_pairs = _cos_verified(sem_cands, vecs_new, hist_vecs, cfg.embed_near_cos)
+        sem_pairs = _cos_verified(sem_cands, nd.vecs, hist_vecs, cfg.embed_near_cos)
         drop_hist = drop_hist.unionByName(
             sem_pairs.select(F.col("doc_a").alias(id_col))
         )
@@ -3753,7 +3501,7 @@ def curate_increment(
         )
 
         img_pairs = simhash_near_pairs_cross(
-            sigs_img_new,
+            nd.image_sigs,
             state.image_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
             bits=cfg.image_grid_h * (cfg.image_grid_w - 1),
             hamming_max=cfg.image_near_hamming,
@@ -3772,7 +3520,7 @@ def curate_increment(
         )
 
         aud_pairs = simhash_near_pairs_cross(
-            sigs_aud_new,
+            nd.audio_sigs,
             state.audio_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
             bits=cfg.audio_n_windows - 1,
             hamming_max=cfg.audio_near_hamming,
@@ -3788,12 +3536,9 @@ def curate_increment(
         # match count — the set-intersection analogue of the banding
         # cross probes. History always wins: the NEW doc drops.
         drop_hist = drop_hist.unionByName(
-            _video_hist_drop(
-                fset_vid_new,
-                state.video_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
-                cfg,
-                hot=hot_vid,
-            ).select(F.col("doc_a").alias(id_col))
+            _video_hist_drop(nd.video_sigs, hist_vid, cfg, nd.hot_frames).select(
+                F.col("doc_a").alias(id_col)
+            )
         )
     drop_hist = drop_hist.distinct()
     # history-wins, TRANSITIVELY (round 14): a within-batch component
@@ -3823,12 +3568,12 @@ def curate_increment(
     ).distinct()
 
     kept = (
-        vs_hist.join(drop_in, id_col, "left_anti")
+        vs_hist.join(nd.drop_ids, id_col, "left_anti")
         .join(drop_hist, id_col, "left_anti")
     )
     kept = _decontamination_stage(kept, benchmark, cfg, text_col, id_col)
-    return _land(kept, comps, image_sigs=sigs_img_new, audio_sigs=sigs_aud_new,
-                 video_sigs=fset_vid_new)
+    return _land(kept, comps, image_sigs=nd.image_sigs, audio_sigs=nd.audio_sigs,
+                 video_sigs=nd.video_sigs)
 
 
 def curate_stream(

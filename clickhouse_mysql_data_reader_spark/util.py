@@ -169,32 +169,3 @@ def suggest_shuffle_partitions(
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n = -(-size // (target_mb * 1024 * 1024))  # ceil div
     return max(min_partitions, min(int(n), max_partitions))
-
-
-def overlap_jobs(jobs: dict, max_workers: int = 4) -> dict:
-    """Run INDEPENDENT Spark actions concurrently from driver threads
-    and return {key: result}.
-
-    Spark's scheduler happily runs several jobs at once inside one
-    application; actions are only sequential because driver code calls
-    them sequentially. A chain of eager ``localCheckpoint``s over
-    frames that do not depend on each other (the curate_increment
-    per-batch materializations: shingles, vectors, media fingerprints)
-    serializes jobs whose tails leave most executors idle — submitting
-    them from a small thread pool lets the next job's tasks back-fill
-    the slots the current job's stragglers free. FIFO scheduling (the
-    default) gives exactly that back-fill behaviour.
-
-    Each value in ``jobs`` is a zero-arg callable; DEPENDENT actions
-    must be chained inside one callable (e.g. vectors -> SRP bands),
-    never split across two. Exceptions propagate from result(); with
-    one job the pool is skipped entirely (no thread overhead on the
-    single-materialization configs).
-    """
-    if len(jobs) <= 1:
-        return {k: fn() for k, fn in jobs.items()}
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(jobs))) as pool:
-        futures = {k: pool.submit(fn) for k, fn in jobs.items()}
-        return {k: f.result() for k, f in futures.items()}

@@ -84,6 +84,8 @@ def test_curate_near_dup_keeper_longest(spark):
 
     with _pytest.raises(ValueError, match="unknown near_dup_keeper"):
         curate(docs, cfg=CurationConfig(near_dup_keeper="shortest"))
+    with _pytest.raises(ValueError, match="unknown near_dup_keeper"):
+        CurationConfig(near_dup_keeper="shortest")
 
     from clickhouse_mysql_data_reader_spark.curation import (
         CurationState,
@@ -273,16 +275,12 @@ def test_curate_increment_exact_containment_bootstrap_parity(spark, tmp_path):
     """Exact + containment near-dup in INCREMENTAL mode, bootstrap
     (history-free prefix-enabled state): the kept set must equal batch
     curate() under the identical cfg — the batch≡increment parity the
-    round-7 verdict asked to pin. Also checks the state landed the new
-    ``prefixes`` table for the kept docs."""
+    round-7 verdict asked to pin — with and without the boilerplate
+    gate (which here drops the truncated copy 2 before the merge). Also
+    checks the state landed the new ``prefixes`` table for the kept
+    docs."""
     from clickhouse_mysql_data_reader_spark.curation import curate_increment
 
-    cfg = CurationConfig(
-        near_dup_jaccard=0.5,
-        near_dup_exact=True,
-        near_dup_containment=0.9,
-        near_dup_keeper="longest",
-    )
     docs = _mk_docs(
         spark,
         [
@@ -292,20 +290,37 @@ def test_curate_increment_exact_containment_bootstrap_parity(spark, tmp_path):
             (7, "books", _INC_OTHER),
         ],
     )
-    batch = curate(docs, cfg=cfg)
-    batch_kept = {r["doc_id"] for r in batch.after_near_dedup.collect()}
-    batch.unpersist()
+    for name, boiler in (
+        ("plain", {}),
+        ("boiler", {"max_boiler_frac": 0.9, "boiler_min_docs": 3}),
+    ):
+        cfg = CurationConfig(
+            near_dup_jaccard=0.5,
+            near_dup_exact=True,
+            near_dup_containment=0.9,
+            near_dup_keeper="longest",
+            **boiler,
+        )
+        batch = curate(docs, cfg=cfg)
+        batch_kept = {r["doc_id"] for r in batch.after_near_dedup.collect()}
+        if boiler:
+            boiled = batch.stage_frames["after_boilerplate"].collect()
+            assert {r["doc_id"] for r in boiled} == {1, 3, 7}
+        batch.unpersist()
 
-    state = _prefix_state(
-        tmp_path, jaccard_exact_threshold=0.5, containment_threshold=0.9
-    )
-    inc_kept = {
-        r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()
-    }
-    assert inc_kept == batch_kept == {3, 7}
-    # the prefix table landed for exactly the kept docs
-    pfx_docs = {r["doc_id"] for r in state.prefixes(spark).select("doc_id").distinct().collect()}
-    assert pfx_docs == {3, 7}
+        state = _prefix_state(
+            tmp_path / name, jaccard_exact_threshold=0.5, containment_threshold=0.9
+        )
+        inc_kept = {
+            r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()
+        }
+        assert inc_kept == batch_kept == {3, 7}, name
+        # the prefix table landed for exactly the kept docs
+        pfx_docs = {
+            r["doc_id"]
+            for r in state.prefixes(spark).select("doc_id").distinct().collect()
+        }
+        assert pfx_docs == {3, 7}, name
 
 
 @pytest.mark.slow

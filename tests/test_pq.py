@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from clickhouse_mysql_data_reader_spark.operators.similarity import (
@@ -274,3 +275,67 @@ def test_pq_adc_exact_with_sparse_codebook_cells(spark):
         assert got[vid] == pytest.approx(want, abs=1e-6), vid
     # the nearest corpus point under ADC is the one encoded like the query
     assert min(got, key=got.get) == 2
+
+
+def _old_expression_ivfpq_topk(
+    corpus_codes, coarse_centroids, codebooks, queries, dim,
+    n_subspaces=4, n_probe=2, k=3,
+):
+    """The expression plan ivfpq_topk replaced: probe assignment as a
+    Spark window over the broadcast centroid cross-join, LUT as a
+    Catalyst literal expression — kept here as the equivalence
+    reference for the driver-built LUTs."""
+    from clickhouse_mysql_data_reader_spark.operators.similarity import (
+        _adc_fold,
+        _adc_lut,
+        _collect_codebooks,
+        as_double_array,
+        assign_cells_probes,
+    )
+
+    cbs = _collect_codebooks(codebooks)
+    bounds = _subspace_bounds(dim, n_subspaces)
+    probes = assign_cells_probes(
+        queries, coarse_centroids, n_probe, id_col="qid", vec_col="embedding"
+    ).select(F.col("vec_id").alias("qid"), "cell")
+    cent = coarse_centroids.select("cell", as_double_array("centroid").alias("_cent"))
+    qv = queries.select(F.col("qid").alias("qid"), as_double_array("embedding").alias("_qv"))
+    q_res = F.zip_with(F.col("_qv"), F.col("_cent"), lambda x, y: x - y)
+    probe_lut = F.broadcast(
+        probes.join(qv, "qid")
+        .join(cent, "cell")
+        .select("qid", "cell", _adc_lut(q_res, cbs, bounds).alias("_lut"))
+    )
+    scored = corpus_codes.join(probe_lut, "cell").select(
+        "qid",
+        "vec_id",
+        F.round(_adc_fold(F.col("_lut"), F.col("codes")), 6).alias("adc_dist"),
+    )
+    w = W.partitionBy("qid").orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def test_ivfpq_driver_lut_matches_expression_path(spark):
+    from clickhouse_mysql_data_reader_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_topk,
+    )
+
+    corpus = spark.createDataFrame(
+        [
+            (i, [float((i * 7) % 13), float((i * 3) % 11),
+                 float((i * 5) % 9), float(i % 4)])
+            for i in range(80)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cents, cbs, codes = ivfpq_index(corpus, dim=4, n_cells=3, n_subspaces=2, k_codes=4)
+    queries = spark.createDataFrame(
+        [(0, [0.3, 1.7, 2.2, 1.1]), (1, [6.0, 5.5, 0.4, 2.9])],
+        "qid long, embedding array<double>",
+    )
+    new = ivfpq_topk(codes, cents, cbs, queries, dim=4, n_subspaces=2, n_probe=2, k=3)
+    old = _old_expression_ivfpq_topk(
+        codes, cents, cbs, queries, dim=4, n_subspaces=2, n_probe=2, k=3
+    )
+    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
