@@ -221,8 +221,9 @@ def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
                 line_fps_out=fps_out, splits_out=sp_out,
             )
             kept.write.mode("overwrite").parquet(cfg.dst.parquet_dir)
+            landed = spark.read.parquet(cfg.dst.parquet_dir)
             state.write(
-                spark.read.parquet(cfg.dst.parquet_dir),
+                landed,
                 text_col=cfg.curate.text_col, id_col=cfg.curate.id_col,
                 epoch_id=cfg.curate.epoch_id, run_id=cfg.curate.run_id,
                 line_fps=fps_out.get("line_fps"),
@@ -247,8 +248,9 @@ def run(cfg: AppConfig, spark: SparkSession | None = None) -> int:
                 splits_dir = cfg.dst.parquet_dir.rstrip("/") + "_splits"
                 res.split_assignments.write.mode("overwrite").parquet(splits_dir)
             res.unpersist()
+            landed = spark.read.parquet(cfg.dst.parquet_dir)
             mode = "batch"
-        n_out = spark.read.parquet(cfg.dst.parquet_dir).count()
+        n_out = landed.count()
         report = {
             "verb": verb, "mode": mode, "input_rows": docs.count(),
             "kept_rows": n_out, "out_dir": cfg.dst.parquet_dir,

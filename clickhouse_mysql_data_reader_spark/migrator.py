@@ -12,7 +12,11 @@ Scale shape: each table is one distributed read -> one distributed
 write; the driver only touches table *names* and *counts*. Tables
 migrate sequentially (like the reference) but each lands with full
 executor parallelism — at 100 TB per-table parallelism is the lever,
-not cross-table overlap, because the source scan dominates.
+not cross-table overlap, because the source scan dominates. A
+month-partitioned table pays one shuffle at landing (``write_parquet``
+rebalances by month) and in return lands each month as a few
+size-bounded files instead of one file per write task per month, so
+every later scan of it opens that many fewer files.
 """
 
 from __future__ import annotations

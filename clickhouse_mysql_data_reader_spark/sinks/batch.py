@@ -38,6 +38,22 @@ def write_parquet(
     """K1-equivalent append sink. With ``date_col``, lays out monthly
     partitions — the same pruning contract as MergeTree's PARTITION BY.
 
+    Layout contract: each month lands as about ⌈month bytes / 64 MB⌉
+    files, not one file per write task per month. The partitioned
+    frame is rebalanced by month first (AQE's REBALANCE: a hash
+    exchange on ``_yyyymm`` whose partitions AQE splits when a month
+    exceeds the advisory size and merges when months are small), so a
+    write task holds whole months or one bounded slice of a big one.
+    MergeTree merges each month into a few large parts after the
+    insert; here the one shuffle at landing does it before. At 100 TB
+    a landed table is then ~|table| / 64 MB files instead of ~800k
+    input splits × months, and every scan of it opens and footer-reads
+    that many fewer files. REBALANCE needs AQE
+    (``spark.sql.adaptive.enabled``, on in ``session.get_spark``);
+    without it the hint is a plain hash repartition by month into
+    ``spark.sql.shuffle.partitions`` tasks — one file per month, however
+    large the month.
+
     ``replace_partitions=True`` (needs ``date_col``) makes a re-land
     IDEMPOTENT at partition granularity: dynamic partition-overwrite
     replaces ONLY the months present in ``df`` and leaves every other
@@ -49,22 +65,25 @@ def write_parquet(
     """
     if replace_partitions and not date_col:
         raise ValueError("write_parquet: replace_partitions needs date_col")
-    if replace_partitions:
-        df = with_month_partition(df, date_col)
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "STATIC")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(YYYYMM_COL).parquet(path)
-        finally:
-            spark.conf.set(conf_key, prev)
+    if not date_col:
+        df.write.mode(mode).parquet(path)
         return
-    writer = df.write.mode(mode)
-    if date_col:
-        df = with_month_partition(df, date_col)
-        writer = df.write.mode(mode).partitionBy(YYYYMM_COL)
-    writer.parquet(path)
+    writer = (
+        with_month_partition(df, date_col)
+        .hint("rebalance", YYYYMM_COL)
+        .write.partitionBy(YYYYMM_COL)
+    )
+    if not replace_partitions:
+        writer.mode(mode).parquet(path)
+        return
+    spark = df.sparkSession
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf_key, "STATIC")
+    spark.conf.set(conf_key, "dynamic")
+    try:
+        writer.mode("overwrite").parquet(path)
+    finally:
+        spark.conf.set(conf_key, prev)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -223,9 +223,12 @@ class SnapshotStore:
             want = set(partitions)
             parts = {pv: rel for pv, rel in parts.items() if pv in want}
         paths = [os.path.join(tdir, rel) for rel in parts.values()]
+        schema = T.StructType.fromJson(m["schema"])
         if not paths:  # every key deleted — empty frame with the landed schema
-            return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
-        return spark.read.parquet(*paths)
+            return spark.createDataFrame([], schema)
+        # the manifest records the schema: reading with it skips
+        # parquet's schema-inference job
+        return spark.read.schema(schema).parquet(*paths)
 
     def profile(self, spark: SparkSession, db: str, table: str) -> DataFrame | None:
         """Post-landing quality profile of the snapshot's CURRENT state
@@ -275,7 +278,9 @@ class SnapshotStore:
         ]
         change_cols = changes.select(*payload_cols, "op", *self.order_cols)
         if base_paths:
-            base = spark.read.parquet(*base_paths)
+            base = spark.read.schema(T.StructType.fromJson(manifest["schema"])).parquet(
+                *base_paths
+            )
             merged = apply_cdc_batch(base, change_cols, self.key_cols, self.order_cols)
         else:
             merged = cdc_final_state(change_cols, self.key_cols, self.order_cols, payload_cols)

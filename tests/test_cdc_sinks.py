@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 
@@ -104,11 +105,21 @@ def test_cdc_final_state_fold(spark):
     assert [tuple(r) for r in out.collect()] == [(1, "b")]
 
 
+def _files_per_month(path):
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(path, "_yyyymm=*"))
+    }
+
+
 def test_write_parquet_month_partitions(spark, sf_dir, tmp_path):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(200)
+    # spread over 4 write tasks: without the rebalance by month each
+    # task would land its own file in every month it holds rows for
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(200).repartition(4)
     write_parquet(orders, str(tmp_path / "o"), date_col="o_orderdate")
     dirs = glob.glob(str(tmp_path / "o" / "_yyyymm=*"))
     assert len(dirs) > 1  # monthly layout materialized
+    assert set(_files_per_month(str(tmp_path / "o")).values()) == {1}
     back = spark.read.parquet(str(tmp_path / "o"))
     assert back.count() == 200
     # partition pruning: filter on the partition col reads a subset of files
@@ -149,14 +160,20 @@ def test_write_parquet_replace_partitions_is_idempotent(spark, tmp_path):
     write_parquet(df1, p, date_col="d")
 
     # re-land ONLY February with corrected rows: January must survive
-    feb_fix = spark.createDataFrame(
-        [day("2018-02-03", "feb-FIXED"), day("2018-02-14", "feb-NEW")],
-        "d string, v string",
-    ).select(F.col("d").cast("date").alias("d"), "v")
+    feb_fix = (
+        spark.createDataFrame(
+            [day("2018-02-03", "feb-FIXED"), day("2018-02-14", "feb-NEW")],
+            "d string, v string",
+        )
+        .select(F.col("d").cast("date").alias("d"), "v")
+        .repartition(2)
+    )
     write_parquet(feb_fix, p, date_col="d", replace_partitions=True)
 
     got = {r["v"] for r in spark.read.parquet(p).collect()}
     assert got == {"jan-a", "jan-b", "feb-FIXED", "feb-NEW"}
+    # the re-landed month is one file, like a month landed by append
+    assert _files_per_month(p)["_yyyymm=201802"] == 1
 
     # re-running the same re-land changes nothing (idempotent)
     write_parquet(feb_fix, p, date_col="d", replace_partitions=True)

@@ -325,6 +325,26 @@ def test_cli_main_session_keeps_submit_master_and_package_settings(tmp_path):
     }
 
 
+def test_codegen_cache_outlives_a_pass_of_distinct_plans(spark):
+    """A query re-run after more than 100 other distinct plans (Spark's
+    default cache size) finds its generated classes still cached: the
+    re-run compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def probe():
+        spark.range(64).selectExpr("id % 7 AS k", "id * 3 AS v").groupBy("k").sum(
+            "v"
+        ).collect()
+
+    probe()
+    for i in range(150):
+        spark.range(8).selectExpr(f"id * {i + 2} + {i} AS x").collect()
+    before = compiles()
+    probe()
+    assert compiles() == before
+
+
 def test_cli_migrate_table_exit_code_and_report(spark, tmp_path, capsys):
     cfg = parse_config(
         [

@@ -175,6 +175,28 @@ def test_partition_pruned_read(spark, tmp_path):
     assert store.read(spark, "db", "t").count() == 3
 
 
+def test_read_uses_manifest_schema_without_a_job(spark, tmp_path):
+    """read() takes the schema the manifest records, so building the
+    frame starts no Spark job (no parquet schema inference)."""
+    store = _store(tmp_path)
+    store.apply(
+        spark, "db", "t",
+        _changes(spark, [
+            _rows("insert", 1, 1, "2018-01-05", "jan"),
+            _rows("insert", 2, 2, "2018-02-05", "feb"),
+        ]),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot_read", "build the read frame")
+    try:
+        df = store.read(spark, "db", "t")
+        assert sc.statusTracker().getJobIdsForGroup("snapshot_read") == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert df.columns == ["id", "day", "str"]
+    assert _state(spark, store) == {1: ("2018-01-05", "jan"), 2: ("2018-02-05", "feb")}
+
+
 def test_profile_and_validate_landed_state(spark, tmp_path):
     store = _store(tmp_path)
     assert store.profile(spark, "db", "t") is None  # nothing landed
