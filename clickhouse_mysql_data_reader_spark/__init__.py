@@ -5,7 +5,7 @@ A ground-up Spark-first re-expression of the capabilities of
 bulk-migration + binlog-CDC pipeline, see SURVEY.md):
 
 - pipeline surface  [A]: type mapping, DDL generation, JDBC/CSV/parquet
-  sources, row transforms, batch + merge sinks, CDC apply semantics
+  sources, row transforms, batch sinks, CDC apply semantics
   (``ReplacingMergeTree``-style last-write-wins), structured-streaming pump.
 - analytics surface [B]: the query operators the reference delegates to
   ClickHouse (joins, aggregates, windows, set ops, scalar/JSON functions),

@@ -3,8 +3,8 @@
 Same contract as the reference's TableProcessor name logic
 (tableprocessor.py:63-213) without copying its implementation:
 
-- ``create_full_table_name`` / ``parse_full_table_name`` — backtick-
-  quoted ``db.table`` handling (tableprocessor.py:146-213).
+- ``create_full_table_name`` — backtick-quoted ``db.table`` names
+  (tableprocessor.py:146-213).
 - prefix matching for ``log_*``-style fan-in discovery
   (``tables_match``, tableprocessor.py:118-144).
 - destination rename map + ``_all`` suffix for distributed mode
@@ -24,33 +24,6 @@ def quote_ident(name: str) -> str:
 
 def create_full_table_name(db: str | None, table: str) -> str:
     return f"{quote_ident(db)}.{quote_ident(table)}" if db else quote_ident(table)
-
-
-def parse_full_table_name(full_name: str) -> tuple[str | None, str]:
-    """Split ``db.table`` (either part optionally backtick-quoted)."""
-    s = full_name.strip()
-    parts: list[str] = []
-    buf = ""
-    in_q = False
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if ch == "`":
-            if in_q and i + 1 < len(s) and s[i + 1] == "`":
-                buf += "`"
-                i += 2
-                continue
-            in_q = not in_q
-        elif ch == "." and not in_q:
-            parts.append(buf)
-            buf = ""
-        else:
-            buf += ch
-        i += 1
-    parts.append(buf)
-    if len(parts) == 1:
-        return None, parts[0]
-    return parts[0], ".".join(parts[1:])
 
 
 def table_matches_prefix(table: str, prefixes: list[str]) -> bool:
@@ -78,6 +51,3 @@ class NameResolver:
         if self.distribute:
             table = f"{table}_all"
         return db, table
-
-    def resolve_full(self, src_db: str, src_table: str) -> str:
-        return create_full_table_name(*self.resolve(src_db, src_table))

@@ -309,9 +309,9 @@ class CurationConfig:
     # via a chunk bucket-join against the landed longs — the media
     # bytes of history are never re-read and the decode never re-runs.
     # Budget guidance: candidate pruning collapses at high budgets
-    # (48 bits at hamming 7 prunes only ~8.5x vs all-pairs) — check
-    # operators/dedup.py hamming_chunk_stats / max_hamming_budget
-    # before a large pass (<= 5 at the default 48 bits). None = off.
+    # (48 bits at hamming 7 prunes only ~8.5x vs all-pairs) — keep it
+    # <= 5 at the default 48 bits (operators/dedup.py
+    # simhash_near_pairs). None = off.
     image_near_hamming: int | None = None
     image_col: str = "image"
     image_grid_w: int = 7
@@ -334,7 +334,7 @@ class CurationConfig:
     # write() then lands (doc_id, ahash) in ``audio_fps`` and later
     # batches probe history via the chunk bucket-join — landed longs
     # only, clip bytes never re-read. Same budget guidance as the
-    # image edge (hamming_chunk_stats; <= 5 at the default 48 bits).
+    # image edge (<= 5 at the default 48 bits).
     # None = off.
     audio_near_hamming: int | None = None
     audio_col: str = "audio"
@@ -397,58 +397,14 @@ class CurationConfig:
     mixture_epochs: bool = False
     pack_budget: int = 128
     pack_shards: int = 8
-    # operators/dedup.py optimal_lsh_bands(minhash_k, near_dup_jaccard)
-    # picks the band count minimizing integrated S-curve error at the
-    # Jaccard threshold — a driver-side helper, deliberately not called
-    # implicitly (incremental states pin these values at first landing,
-    # so a silent re-derivation under a changed default would brick
-    # every existing state's parameter check)
+    # lsh_bands splits the minhash_k signature into bands of
+    # r = minhash_k / lsh_bands rows; a pair at Jaccard s becomes a
+    # candidate with probability 1 - (1 - s^r)^lsh_bands, so choose the
+    # bands to put that S-curve's step near near_dup_jaccard.
+    # Incremental states pin both values at first landing: choose them
+    # once, before the first batch lands
     minhash_k: int = 16
     lsh_bands: int = 4
-
-    @classmethod
-    def with_tuned_lsh(
-        cls, num_hashes: int = 16, fp_weight: float = 0.5, **kw
-    ) -> "CurationConfig":
-        """Config with ``lsh_bands`` chosen by the S-curve tuner
-        (operators/dedup.py ``optimal_lsh_bands``) for the config's own
-        ``near_dup_jaccard`` threshold — the principled alternative to
-        hand-picking the band count: the tuner minimizes the weighted
-        integral of false-positive mass (verify-stage cost) below the
-        threshold and false-negative mass (missed duplicates) above it
-        over the divisors of ``num_hashes``. ``fp_weight`` toward 1
-        when the exact-Jaccard verify is the cost center, toward 0 when
-        recall is the product requirement.
-
-        LANDED-STATE CAVEAT (why the tuner is never auto-applied): an
-        incremental/streaming ``CurationState`` pins (minhash_k,
-        lsh_bands) in its on-disk manifest at first write — band hashes
-        derived with different parameters can NEVER match the landed
-        ones, so re-tuning an EXISTING state's bands silently kills its
-        cross-history near-dup detection (the write path rejects the
-        mismatch loudly). Tune ONCE, before the first batch lands, and
-        construct every later ``CurationState`` with the same values:
-
-            cfg = CurationConfig.with_tuned_lsh(near_dup_jaccard=0.8)
-            state = CurationState(dir_, minhash_k=cfg.minhash_k,
-                                  lsh_bands=cfg.lsh_bands)
-        """
-        if "lsh_bands" in kw or "minhash_k" in kw:
-            raise ValueError(
-                "with_tuned_lsh picks lsh_bands (and minhash_k = "
-                "num_hashes) itself — pass num_hashes=/fp_weight= to "
-                "steer it, or construct CurationConfig directly"
-            )
-        from clickhouse_mysql_data_reader_spark.operators.dedup import (
-            optimal_lsh_bands,
-        )
-
-        threshold = kw.get("near_dup_jaccard", cls.near_dup_jaccard)
-        return cls(
-            minhash_k=num_hashes,
-            lsh_bands=optimal_lsh_bands(num_hashes, threshold, fp_weight),
-            **kw,
-        )
 
     def __post_init__(self) -> None:
         if self.near_dup_keeper not in ("min_id", "longest"):

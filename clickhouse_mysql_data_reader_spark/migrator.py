@@ -3,10 +3,11 @@
 (tablemigrator.py:121-178) composed from the engine's pieces:
 
 discover tables -> generate DDL -> execute it against the Spark
-catalog -> partitioned read -> column policy -> write -> count
-reconciliation.  Count reconciliation is the reference's own
-acceptance method (docs/manual.md:436-443: compare MySQL COUNT(*)
-with ClickHouse COUNT(*) after migration).
+catalog -> partitioned read -> column policy -> write (counting the
+source rows as they pass) -> count reconciliation.  Count
+reconciliation is the reference's own acceptance method
+(docs/manual.md:436-443: compare MySQL COUNT(*) with ClickHouse
+COUNT(*) after migration).
 
 Scale shape: each table is one distributed read -> one distributed
 write; the driver only touches table *names* and *counts*. Tables
@@ -24,7 +25,9 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from clickhouse_mysql_data_reader_spark.catalog.names import (
     NameResolver,
@@ -51,6 +54,18 @@ from clickhouse_mysql_data_reader_spark.transforms.row_ops import (
     empty_string_to_null,
     skip_columns,
 )
+
+
+def _observed_rows(obs: Observation, df: DataFrame) -> int:
+    """The row count ``obs`` observed while ``df`` was written. When a
+    scan stage comes back empty, AQE collapses the plan to an empty
+    relation and drops the observing node with it, so no metric
+    arrives (PySpark then fails to convert the empty metrics row);
+    count ``df`` instead — an empty source is one cheap job."""
+    try:
+        return obs.get["n"]
+    except Py4JJavaError:
+        return df.count()
 
 
 @dataclass
@@ -205,17 +220,24 @@ class Migrator:
                 src_rows=df.count(), dst_rows=0,
             )
 
-        src_rows = df.count()
+        # count the source rows in the scan that writes them: a separate
+        # count() would read the source a second time (a second full
+        # SELECT against JDBC), and the reconciled count belongs to the
+        # snapshot that actually landed
+        obs = Observation()
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if cfg.dst.file:
-            write_csv(df, cfg.dst.file)
+            write_csv(observed, cfg.dst.file)
             dst_rows = spark.read.option("header", True).csv(cfg.dst.file).count()
             return MigrationReport(
-                db, table, dst_db, dst_table, cfg.dst.file, ddl, src_rows, dst_rows
+                db, table, dst_db, dst_table, cfg.dst.file, ddl,
+                _observed_rows(obs, df), dst_rows,
             )
 
         if location is None:
             raise ValueError("no destination configured (dst-parquet-dir / dst-file)")
-        write_parquet(df, location, date_col=date_col)
+        write_parquet(observed, location, date_col=date_col)
+        src_rows = _observed_rows(obs, df)
 
         if ddl:
             # land the table in the catalog over the files just written,

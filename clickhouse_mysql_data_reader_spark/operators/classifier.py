@@ -73,7 +73,7 @@ def train_quality_classifier(
     """Fit logistic regression (full-batch gradient descent, zero init,
     L2 regularization) separating ``positive`` (quality reference) from
     ``negative`` (random crawl sample). Returns ``(weights, bias)`` for
-    ``score_quality``. Pure-python math on the bounded collected
+    ``quality_prob_col``. Pure-python math on the bounded collected
     matrices — deterministic, no numpy dependency in the hot loop
     needed (numpy is used for the matrix ops, which are deterministic
     elementwise/dot kernels)."""
@@ -122,42 +122,3 @@ def quality_prob_col(text: Column, weights: list[float], bias: float) -> Column:
         + F.lit(float(bias))
     )
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-def score_quality(
-    corpus: DataFrame,
-    weights: list[float],
-    bias: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, quality_prob): sigmoid(w . hashed_features + b) for every
-    corpus row. The weight vector is inlined as an array literal, so the
-    whole scorer is scan-stage expressions — zero shuffles, zero
-    Python, broadcast-free (literals travel inside the serialized
-    plan). Compose with a threshold filter, or with
-    ``sampling.weighted_sample_topk`` for the paper's
-    score-proportional resampling."""
-    from clickhouse_mysql_data_reader_spark.util import fan_out
-
-    return fan_out(corpus, bytes_per_task=128 * 1024).select(
-        F.col(id_col),
-        quality_prob_col(F.col(text_col), weights, bias).alias("quality_prob"),
-    )
-
-
-def quality_filter(
-    corpus: DataFrame,
-    weights: list[float],
-    bias: float,
-    threshold: float = 0.5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus rows whose classifier probability clears ``threshold`` —
-    original columns preserved. A plain ``filter`` on the inline score
-    expression: the whole gate rides the corpus scan, no join, no
-    shuffle, and the predicate sits directly above the source so column
-    pruning and scan reuse are unaffected."""
-    return corpus.filter(
-        quality_prob_col(F.col(text_col), weights, bias) >= F.lit(float(threshold))
-    )

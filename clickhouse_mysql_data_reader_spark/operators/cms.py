@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["cms_build", "cms_merge", "cms_estimate", "cms_heavy_hitters"]
+__all__ = ["cms_build", "cms_estimate", "cms_heavy_hitters"]
 
 
 def _bucket(item: Column, row_idx: int, width: int) -> Column:
@@ -93,19 +93,6 @@ def cms_build(
         )
         .agg(F.sum("w").alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the SAME (depth, width) geometry:
-    counts are additive per (row_idx, bucket). Geometry mismatch is the
-    caller's contract (same discipline as psi_baseline_merge — a landed
-    sketch should pin its geometry in the surrounding manifest)."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row_idx", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(

@@ -74,17 +74,6 @@ def shingles_from_tokens(tk, k: int = 3):
     ).otherwise(F.array(F.concat_ws(" ", tk)))
 
 
-def word_shingles(col, k: int = 3):
-    """k-word shingles of normalized text as an array column.
-
-    Built from pure SQL building blocks (split + sequence + transform)
-    so the DuckDB oracle can reproduce it token-for-token. Prefer
-    ``tokenize`` + ``shingles_from_tokens`` with a projection boundary
-    between them in hot paths (see shingle_table).
-    """
-    return shingles_from_tokens(tokenize(col), k)
-
-
 # MinHash constants: one md5 per shingle -> 60-bit int, then the i-th
 # hash function is the affine transform (A_i * h28 + B_i) mod MH_P.
 # h28 < 2^28 and A_i < 2^20 keep every product far below 2^63 — both
@@ -200,56 +189,6 @@ def band_table(
     return signatures.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("band")
     ).select("doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
-
-
-def optimal_lsh_bands(
-    num_hashes: int,
-    threshold: float,
-    fp_weight: float = 0.5,
-    _steps: int = 200,
-) -> int:
-    """Pick the band count minimizing the weighted integrated LSH
-    error at a target Jaccard ``threshold`` — the standard S-curve
-    analysis (Leskovec/Rajaraman/Ullman, "Mining of Massive Datasets"
-    ch. 3; same objective datasketch's public optimizer integrates).
-
-    For b bands of r = num_hashes // b rows, a pair with Jaccard s
-    collides with probability p(s) = 1 - (1 - s^r)^b. The false-positive
-    mass is the integral of p(s) below the threshold; the false-negative
-    mass is the integral of 1 - p(s) above it (midpoint quadrature,
-    ``_steps`` cells — plenty for a monotone smooth integrand picked
-    from <= num_hashes discrete candidates). ``fp_weight`` in [0, 1]
-    trades the two: weight FP high when the verify stage is the cost
-    center (every candidate pays an exact Jaccard), FN high when recall
-    is the product requirement (dedup misses poison training data).
-
-    Driver-side arithmetic over O(num_hashes * _steps) floats — use it
-    to choose ``lsh_bands``/``CurationConfig.lsh_bands`` BEFORE the job;
-    nothing here touches a DataFrame. Only divisors of num_hashes are
-    candidates (band_table needs equal-width bands)."""
-    if num_hashes < 1:
-        raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    if not (0.0 <= fp_weight <= 1.0):
-        raise ValueError(f"fp_weight must be in [0, 1], got {fp_weight}")
-    best_b, best_err = 1, float("inf")
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b:
-            continue
-        r = num_hashes // b
-        fp = fn = 0.0
-        for i in range(_steps):
-            s = (i + 0.5) / _steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        err = (fp_weight * fp + (1.0 - fp_weight) * fn) / _steps
-        if err < best_err:
-            best_b, best_err = b, err
-    return best_b
 
 
 def lsh_candidate_pairs(
@@ -811,93 +750,6 @@ def _simhash_chunks(
     )
 
 
-def hamming_chunk_stats(
-    bits: int,
-    hamming_max: int,
-    n_docs: int,
-    min_pruning: float = 32.0,
-) -> dict:
-    """Candidate-volume advisor for the Manku pigeonhole banding
-    (``simhash_near_pairs`` / ``simhash_near_pairs_cross``) — the
-    ``optimal_lsh_bands`` analogue for Hamming budgets. Run it BEFORE
-    a 100-TB pass: the banding splits ``bits`` into ``hamming_max + 1``
-    chunks, and a RANDOM (unrelated) pair collides on some chunk with
-
-        p = 1 - (1 - 2^-chunk_bits)^n_chunks
-          ~= n_chunks / 2^chunk_bits        (union bound, tight here)
-
-    so candidate generation prunes only ``1/p`` of the all-pairs cross
-    product. The budget drives this hard: at 48 bits, hamming_max 7
-    gives 8 chunks x 6 bits -> p ~= 8/64 (only ~8.5x pruning — a
-    near-cross-product at corpus scale), while hamming_max 5 gives
-    6 chunks x 8 bits -> ~43x, and the 64-bit Manku shape (hamming 3,
-    4 x 16 bits) prunes ~16000x. Correctness is never at stake — the
-    within-bucket Hamming verify is exact — only join volume.
-
-    Returns a dict with ``n_chunks``, ``chunk_bits``,
-    ``collision_prob`` (p above), ``expected_candidate_pairs``
-    (C(n_docs, 2) * p — an upper bound for real corpora, whose
-    fingerprints are not adversarially clustered), ``pruning_factor``
-    (1/p), and ``ok`` (pruning_factor >= min_pruning). Emits a
-    ``UserWarning`` when not ok, naming the largest budget that passes
-    (``max_hamming_budget``). Driver-side integer/float arithmetic —
-    touches no DataFrame."""
-    n_chunks = hamming_max + 1
-    if bits % n_chunks:
-        raise ValueError(f"bits={bits} not divisible into {n_chunks} chunks")
-    if n_docs < 0:
-        raise ValueError(f"n_docs must be >= 0, got {n_docs}")
-    cb = bits // n_chunks
-    p = 1.0 - (1.0 - 2.0**-cb) ** n_chunks
-    all_pairs = n_docs * (n_docs - 1) // 2
-    pruning = 1.0 / p if p > 0 else float("inf")
-    ok = pruning >= min_pruning
-    if not ok:
-        import warnings
-
-        best = max_hamming_budget(bits, min_pruning)
-        warnings.warn(
-            f"hamming_max={hamming_max} at {bits} bits yields "
-            f"{n_chunks} chunks of {cb} bits: only {pruning:.1f}x "
-            f"candidate pruning vs all-pairs (floor {min_pruning:g}x)."
-            + (
-                f" Largest budget meeting the floor: "
-                f"hamming_max={best}."
-                if best is not None
-                else " No divisible budget meets the floor at this "
-                "width — widen the fingerprint."
-            ),
-            UserWarning,
-            stacklevel=2,
-        )
-    return {
-        "n_chunks": n_chunks,
-        "chunk_bits": cb,
-        "collision_prob": p,
-        "expected_candidate_pairs": all_pairs * p,
-        "pruning_factor": pruning,
-        "ok": ok,
-    }
-
-
-def max_hamming_budget(bits: int, min_pruning: float = 32.0) -> int | None:
-    """Largest ``hamming_max`` whose pigeonhole banding at ``bits``
-    still prunes at least ``min_pruning``x vs all-pairs (and divides
-    the width evenly, as ``_simhash_chunks`` requires). At the repo's
-    48-bit image/audio fingerprints and the default 32x floor this is
-    5 (6 chunks x 8 bits, ~43x); at 64 bits it is 7 (8 x 8). None if
-    even hamming_max=0 misses the floor."""
-    best = None
-    for h in range(bits):
-        n_chunks = h + 1
-        if bits % n_chunks:
-            continue
-        p = 1.0 - (1.0 - 2.0 ** -(bits // n_chunks)) ** n_chunks
-        if p > 0 and 1.0 / p >= min_pruning:
-            best = h
-    return best
-
-
 def simhash_near_pairs(
     sigs: DataFrame,
     bits: int = 32,
@@ -924,9 +776,8 @@ def simhash_near_pairs(
     sizes stay near-uniform unless the corpus genuinely clusters.
     BUDGET MATTERS: p also bounds how much the banding prunes vs
     all-pairs (1/p), and at high budgets the chunks get thin — 48 bits
-    at hamming_max 7 prunes only ~8.5x. Run ``hamming_chunk_stats``
-    before a large pass and prefer budgets ``max_hamming_budget``
-    approves (<= 5 at 48 bits, <= 7 at 64).
+    at hamming_max 7 prunes only ~8.5x. Prefer budgets that still
+    prune at least ~32x: <= 5 at 48 bits, <= 7 at 64.
 
     Returns (doc_a, doc_b, hamming), doc_a < doc_b, one row per
     verified pair.

@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "fuzzy_match_pairs",
-    "fuzzy_link_best",
     "resolve_entities",
     "apply_entity_mapping",
 ]
@@ -87,48 +86,6 @@ def fuzzy_match_pairs(
             F.levenshtein("name_a", "name_b").cast("int").alias("dist"),
             "n_a",
             "n_b",
-        )
-    )
-
-
-def fuzzy_link_best(
-    probe: DataFrame,
-    reference: DataFrame,
-    text_col: str,
-    block_fn: Callable[[Column], Column],
-    max_dist: int = 2,
-) -> DataFrame:
-    """Link each distinct probe value to its BEST reference value:
-    same block, distance <= max_dist, winner = min (dist, ref_name) —
-    the deterministic min(struct) election the keeper operators use
-    (operators/dedup.py), so ties never flap between runs. Returns
-    (name, n, match, dist); unmatched probes keep NULL match (left
-    join), so the caller sees coverage, not just hits."""
-    p = _dictionary(probe, text_col, block_fn)
-    r = _dictionary(reference, text_col, block_fn).select(
-        F.col("name").alias("ref_name"), "blk"
-    )
-    cand = p.join(r, "blk", "left").withColumn(
-        "dist",
-        F.when(
-            F.col("ref_name").isNotNull(),
-            F.levenshtein("name", "ref_name"),
-        ),
-    )
-    # the distance gate lives INSIDE the aggregate: a probe whose block
-    # candidates all miss the gate must still come out (match = NULL),
-    # and a WHERE would silently drop it
-    best = F.min(
-        F.when(F.col("dist") <= max_dist, F.struct("dist", "ref_name"))
-    )
-    return (
-        cand.groupBy("name", "n")
-        .agg(best.alias("best"))
-        .select(
-            "name",
-            "n",
-            F.col("best.ref_name").alias("match"),
-            F.col("best.dist").cast("int").alias("dist"),
         )
     )
 

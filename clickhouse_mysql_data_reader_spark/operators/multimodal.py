@@ -57,15 +57,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def real_decoder(content: bytes, kind: str) -> list[float]:
-    """Placeholder for the actual media decoder (Pillow / torchaudio /
-    pyav are not available in this environment)."""
-    raise NotImplementedError(
-        "media decoding requires image/audio libraries not present in "
-        "this container; inject a decode_fn into extract_features()"
-    )
-
-
 def deterministic_fake_decoder(content: bytes, kind: str) -> list[float]:
     """Stand-in decoder: 8 floats derived from the content digest.
     Deterministic, so the distributed plumbing is testable end-to-end."""
@@ -116,19 +107,6 @@ def extract_features(
             yield pd.DataFrame(out)
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def real_pixel_decoder(
-    content: bytes, kind: str, grid_w: int = 7, grid_h: int = 8
-) -> list[int]:
-    """Placeholder for the real thumbnail decoder (Pillow: open ->
-    convert('L') -> resize((grid_w, grid_h)) -> row-major pixel list);
-    image libraries are not in this container — inject via the
-    ``decode_fn`` seam exactly like ``real_decoder``."""
-    raise NotImplementedError(
-        "pixel decoding requires an image library not present in this "
-        "container; inject a decode_fn into image_dhash()"
-    )
 
 
 def deterministic_fake_pixels(

@@ -666,32 +666,6 @@ def histogram_quantile(
     )
 
 
-def merge_anomaly_stats(*stats: DataFrame) -> DataFrame:
-    """Union landed `anomaly_stats` tables into one — (n, S, Q) moments
-    are additive, so daily stats tables merge by per-key SUM without
-    ever re-scanning raw data (the same lifecycle as `sketch_rollup`
-    and histogram merging: land small daily facts, fold them into the
-    reference window on demand). merged(stats(day1), stats(day2)) ==
-    stats(day1 ∪ day2) exactly — integer sums, pinned by test.
-    """
-    if not stats:
-        raise ValueError("merge_anomaly_stats: no stats tables")
-    need = {"key", "n_obs", "sum_x", "sum_sq"}
-    for s in stats:
-        missing = need - set(s.columns)
-        if missing:
-            raise ValueError(f"merge_anomaly_stats: table missing {sorted(missing)}")
-    dec = "decimal(38,0)"
-    out = stats[0].select("key", "n_obs", "sum_x", "sum_sq")
-    for s in stats[1:]:
-        out = out.unionByName(s.select("key", "n_obs", "sum_x", "sum_sq"))
-    return out.groupBy("key").agg(
-        F.sum("n_obs").cast(dec).alias("n_obs"),
-        F.sum("sum_x").cast(dec).alias("sum_x"),
-        F.sum("sum_sq").cast(dec).alias("sum_sq"),
-    )
-
-
 def _psi_guarded_edge(col):
     """A NULL frozen edge means the baseline had no non-null values —
     Spark's least/greatest would then silently clamp EVERY row into the
@@ -1004,7 +978,7 @@ def psi_baseline(
     composition). Mergeable: two baselines over the SAME (mn, mx,
     n_buckets) add by summing per-bucket ``n_obs`` — the counts are
     plain integers; merging references with different edges is
-    meaningless — ``psi_baseline_merge`` rejects it in-plan.
+    meaningless.
     NULL values are excluded, like ``psi_drift``; a baseline with NO
     non-null values raises at execution (no edges to freeze).
 
@@ -1097,145 +1071,6 @@ def psi_drift_frozen(
         )
     )
     return _psi_from_counts(filled)
-
-
-def psi_baseline_by(
-    df: DataFrame, value_col: str, key_col: str, n_buckets: int = 10
-) -> DataFrame:
-    """The LANDED per-key drift reference for ``psi_drift_frozen_by``:
-    one row per (key, bucket) — (key, bucket, n_obs, mn, mx) — with
-    each key's frozen fixed-width edges denormalized onto its rows, so
-    one parquet table carries every source's reference (the keyed twin
-    of ``psi_baseline``; deployment form of ``psi_drift_by`` exactly
-    as the global pair relate). NULL keys/values are excluded; a key
-    needs >= 1 non-null value to appear (it then has edges by
-    construction — no guarded-edge window fill needed, the per-key
-    spine carries the edges directly).
-
-    Mergeable per key: references over the SAME per-key edges add by
-    summing (key, bucket) counts — same contract as
-    ``psi_baseline_merge``, keyed."""
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    vals = df.filter(F.col(value_col).isNotNull() & F.col(key_col).isNotNull())
-    mm = vals.groupBy(F.col(key_col).alias("_k")).agg(
-        F.min(value_col).cast("long").alias("_mn"),
-        F.max(value_col).cast("long").alias("_mx"),
-    )
-    counts = (
-        vals.select(
-            F.col(key_col).alias("_k"),
-            F.col(value_col).cast("long").alias("_x"),
-        )
-        .join(F.broadcast(mm), "_k")
-        .select(
-            "_k",
-            _psi_bucket(F.col("_x"), F.col("_mn"), F.col("_mx"), n_buckets).alias(
-                "bucket"
-            ),
-        )
-        .groupBy("_k", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-    )
-    spine = mm.crossJoin(
-        df.sparkSession.range(n_buckets).select(F.col("id").alias("bucket"))
-    )
-    return spine.join(counts, ["_k", "bucket"], "left").select(
-        F.col("_k").alias(key_col),
-        "bucket",
-        F.coalesce("n_obs", F.lit(0)).alias("n_obs"),
-        F.col("_mn").alias("mn"),
-        F.col("_mx").alias("mx"),
-    )
-
-
-def psi_drift_frozen_by(
-    baseline: DataFrame, new: DataFrame, value_col: str, key_col: str
-) -> DataFrame:
-    """Per-key PSI of a NEW batch against a LANDED ``psi_baseline_by``
-    reference — bit-equal to ``psi_drift_by(old, new)`` when the
-    baseline was built from ``old`` (shared bucket/smoothing helpers,
-    pinned by test). Per-key bin counts and edges are DERIVED from the
-    reference; keys absent from it are excluded (the ``psi_drift_by``
-    new-key contract — scoring a never-seen key against edges invented
-    from its own data is not drift monitoring)."""
-    edges = baseline.groupBy(F.col(key_col).alias("_k")).agg(
-        F.min("mn").cast("long").alias("_mn"),
-        F.min("mx").cast("long").alias("_mx"),
-        F.count(F.lit(1)).alias("_nb"),
-    )
-    ncounts = (
-        new.filter(F.col(value_col).isNotNull() & F.col(key_col).isNotNull())
-        .select(
-            F.col(key_col).alias("_k"),
-            F.col(value_col).cast("long").alias("_x"),
-        )
-        .join(F.broadcast(edges), "_k")
-        .select(
-            "_k",
-            _psi_bucket(
-                F.col("_x"), F.col("_mn"), F.col("_mx"), F.col("_nb")
-            ).alias("bucket"),
-        )
-        .groupBy("_k", "bucket")
-        .agg(F.count(F.lit(1)).alias("_nn"))
-    )
-    filled = (
-        baseline.select(
-            F.col(key_col).alias("_k"), "bucket", F.col("n_obs").alias("n_old")
-        )
-        .join(ncounts, ["_k", "bucket"], "left")
-        .select(
-            F.col("_k").alias(key_col),
-            "bucket",
-            "n_old",
-            F.coalesce("_nn", F.lit(0)).alias("n_new"),
-        )
-    )
-    return _psi_from_counts(filled, keys=(key_col,))
-
-
-def psi_baseline_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two landed ``psi_baseline`` references by summing
-    per-bucket counts — valid ONLY when both were built over the same
-    frozen edges and bucket count, which is CHECKED in-plan (a
-    mismatched merge raises at execution instead of silently blending
-    incompatible bins — the same loud-guard posture as ``_z_ticks``).
-    The merge is how a reference grows with the corpus at 100 TB:
-    land one baseline per partition/epoch, merge the bounded
-    n_buckets-row frames, never rescan history."""
-    ea = a.select("bucket", F.col("n_obs").alias("_na"),
-                  F.col("mn").alias("_mna"), F.col("mx").alias("_mxa"))
-    eb = b.select("bucket", F.col("n_obs").alias("_nb"),
-                  F.col("mn").alias("_mnb"), F.col("mx").alias("_mxb"))
-    j = ea.join(eb, "bucket", "full_outer")
-    bad = (
-        F.col("_na").isNull() | F.col("_nb").isNull()  # bucket sets differ
-        | ~F.col("_mna").eqNullSafe(F.col("_mnb"))
-        | ~F.col("_mxa").eqNullSafe(F.col("_mxb"))
-    )
-    def guard(ok):
-        # attached to EVERY output column, not just n_obs: a consumer
-        # whose plan prunes n_obs (e.g. select('mn','mx')) must still
-        # hit the raise, or an invalid merge would silently record the
-        # a-side edges as the merged reference's
-        return F.when(
-            bad,
-            F.raise_error(
-                F.lit(
-                    "psi_baseline_merge: references disagree on edges or "
-                    "bucket count — baselines merge only over the identical "
-                    "frozen (mn, mx, n_buckets); rebuild one of them"
-                )
-            ).cast("long"),
-        ).otherwise(ok)
-
-    return j.select(
-        "bucket",
-        guard(F.col("_na") + F.col("_nb")).alias("n_obs"),
-        guard(F.col("_mna")).alias("mn"),
-        guard(F.col("_mxa")).alias("mx"),
-    )
 
 
 def fk_orphan_report(

@@ -291,7 +291,7 @@ def pack_sequences(
 
     ``shard_col`` / ``order_col`` override the default id-derived
     layout: pass another deterministic sharding/ordering (e.g.
-    ``training_shuffle``'s (shard, pos) via ``shuffled_pack``) to pack
+    ``training_shuffle``'s (shard, pos)) to pack
     in that order instead; ``order_col`` must be unique within a shard
     for the layout to stay deterministic.
     """
@@ -481,98 +481,6 @@ def _source_token_totals(
     return [(r["source"], float(r["src_tokens"])) for r in rows]
 
 
-def temperature_weights(
-    df: DataFrame,
-    token_count_col: Column,
-    source_col: str,
-    alpha: float = 0.3,
-) -> dict[str, float]:
-    """Temperature-based mixture weights (the multilingual-sampling
-    exponent of XLM-R / mT5: Conneau et al. 2020 use alpha = 0.3, mT5
-    also 0.3): target weight ``q_i = p_i^alpha / sum_j p_j^alpha`` over
-    the observed per-source token shares ``p_i``. ``alpha < 1`` flattens
-    the distribution — small sources are upweighted relative to their
-    natural share, big crawl dumps are damped — and ``alpha = 1``
-    returns the natural shares unchanged.
-
-    Returns the dict ``mixture_sample`` takes as ``weights``. This is
-    ONE bounded driver action (the per-source token aggregate — a
-    few-row result, the same bounded-metadata class as kmeans
-    centroids); the exponent runs driver-side in Python floats, so the
-    in-plan determinism of ``mixture_sample`` is untouched: it still
-    sees plain literal weights.
-    """
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive, got {alpha}")
-    totals = _source_token_totals(df, token_count_col, source_col)
-    if not totals:
-        return {}
-    total = sum(t for _, t in totals)
-    if total <= 0:
-        raise ValueError(
-            "temperature_weights: corpus has zero tokens — no shares to exponentiate"
-        )
-    powed = {s: (t / total) ** alpha for s, t in totals}
-    z = sum(powed.values())
-    return {s: v / z for s, v in sorted(powed.items())}
-
-
-def temperature_mixture(
-    df: DataFrame,
-    token_count_col: Column,
-    key_col: str,
-    source_col: str,
-    token_budget: int,
-    alpha: float = 0.3,
-    salt: str = "mixture",
-) -> DataFrame:
-    """``mixture_sample`` with its weights derived by temperature
-    sampling from the corpus itself — the standard one-call shape for
-    balancing a multi-source (or multilingual) corpus without
-    hand-tuning per-source weights. Note ``mixture_sample`` never
-    upsamples: a source whose temperature target exceeds its actual
-    tokens is kept whole (rate caps at 1), so very small sources reach
-    at most their full size."""
-    w = temperature_weights(df, token_count_col, source_col, alpha)
-    return mixture_sample(
-        df, token_count_col, key_col, source_col, w, token_budget, salt=salt
-    )
-
-
-def shuffled_pack(
-    df: DataFrame,
-    token_count_col: Column,
-    id_col: str,
-    budget: int = 128,
-    n_shards: int = 8,
-    salt: str = "shuffle",
-) -> DataFrame:
-    """``pack_sequences`` over the ``training_shuffle`` order — the last
-    mile of the pipeline: pack documents into fixed-token context
-    windows in a DECORRELATED deterministic order instead of id order
-    (adjacent ids share crawl domain/date/topic; SGD wants them spread
-    across packs). The shuffle's (shard, pos) plugs straight into
-    ``pack_sequences``' shard/order overrides — each pack is filled
-    from one shuffled stream, reproducible across runs/retries, new
-    ``salt`` = fresh epoch layout.
-
-    Returns the ``pack_sequences`` schema (shard, doc_id, n_tokens,
-    start_token, pack_id, pack_offset) with the ORIGINAL ids; shard is
-    the shuffle's shard and the within-shard fill order is the
-    shuffle's rank — no surrogate keys, no extra join.
-    """
-    sh = training_shuffle(df, id_col=id_col, n_shards=n_shards, salt=salt)
-    return pack_sequences(
-        sh,
-        token_count_col,
-        id_col=id_col,
-        budget=budget,
-        n_shards=n_shards,
-        shard_col=F.col("shard"),
-        order_col=F.col("pos"),
-    )
-
-
 def unimax_weights(
     df: DataFrame,
     token_count_col: Column,
@@ -593,7 +501,7 @@ def unimax_weights(
     Greedy waterfilling over sources sorted by size (provably the
     paper's allocation: once the smallest source is capped, the
     problem recurses on the rest): one bounded driver aggregate (the
-    few-row per-source totals, same class as ``temperature_weights``)
+    few-row per-source totals)
     + a python loop over sources. Returns the ``mixture_sample``
     weights dict (fractions of ``token_budget``). NOTE
     ``mixture_sample`` itself never upsamples (rate caps at 1), so
@@ -627,10 +535,9 @@ def sqrt_temperature_mixture(
     salt: str = "temper",
 ) -> DataFrame:
     """Temperature mixture at ``alpha = 0.5`` with the weights derived
-    IN-PLAN in exact integer arithmetic — the deployment shape of
-    ``temperature_mixture`` when even its few-row driver collect is
-    unwanted (a scheduled pipeline stage, a streaming trigger, a plan
-    that must stay one lazy DAG end-to-end).
+    IN-PLAN in exact integer arithmetic: no driver collect, so a
+    scheduled pipeline stage or a streaming trigger stays one lazy DAG
+    end-to-end.
 
     The integer square root realizes the exponent exactly:
     ``w_i = floor(sqrt(tokens_i))`` so the keep-rate is
@@ -641,8 +548,8 @@ def sqrt_temperature_mixture(
     there except at exact squares, where it is exact — and
     ``Z * tokens`` stays far below 2^63 at any real corpus size), so
     rates and every md5 keep decision are bit-identical across engines
-    and runs: no libm ``pow`` enters the plan, unlike the float
-    exponent of ``temperature_weights``.
+    and runs: no libm ``pow`` enters the plan, unlike a float
+    ``tokens ** alpha`` exponent.
 
     Plan at 100 TB: one partial+final agg for per-source totals (a
     few-row frame), a 1-row normalizer agg crossJoined back as a

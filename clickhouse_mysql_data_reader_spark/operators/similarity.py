@@ -520,7 +520,7 @@ def pq_encode(
 ) -> DataFrame:
     """(vec_id, codes array<int>): per subspace, the POSITION of the
     nearest codebook centroid within that subspace's sorted codebook —
-    the same dense index `_adc_lut` builds its lookup arrays with, so
+    the same dense index ``ivfpq_topk`` builds its lookup arrays with, so
     fold-by-code can never misalign when hash-init left a codebook's
     raw cell ids sparse (the coarse level makes the identical
     position remap in `_assign_residuals`). Codebooks are inlined as
@@ -543,21 +543,6 @@ def pq_encode(
     )
 
 
-def _adc_lut(vec: Column, cbs: dict, bounds: list[tuple[int, int]]) -> Column:
-    """S x k lookup table (array<array<double>>) of squared distances
-    from each SUBVECTOR of ``vec`` to each codebook centroid — the ADC
-    table, as a pure expression over whatever column ``vec`` is (a raw
-    query vector, or a residual)."""
-    return F.array(
-        *[
-            F.array(
-                *[_sq_dist(F.slice(vec, start, length), c) for _cell, c in cbs[s]]
-            )
-            for s, (start, length) in enumerate(bounds)
-        ]
-    )
-
-
 def _adc_fold(lut: Column, codes: Column) -> Column:
     """sum_s LUT[s][code_s] — one corpus distance from S table lookups."""
     return F.aggregate(
@@ -565,43 +550,6 @@ def _adc_fold(lut: Column, codes: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def pq_adc_topk(
-    corpus_codes: DataFrame,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    n_subspaces: int = 4,
-    k: int = 3,
-    query_id_col: str = "qid",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance: per query, an S x k
-    lookup table of squared distances from each query SUBVECTOR to each
-    codebook centroid, then every corpus distance is just
-    sum_s LUT[s][code_s].
-
-    Plan shape: the LUT is computed as a column ON THE QUERY FRAME
-    (|queries| rows of S*k doubles) which is then broadcast; the corpus
-    side streams its (vec_id, codes) rows through a zip_with +
-    element_at fold — never the original vectors, never a shuffle of
-    the corpus. Returned: (qid, vec_id, adc_dist, rn) with the
-    deterministic (dist, vec_id) tie-break the exact searchers use.
-    """
-    cbs = _collect_codebooks(codebooks)
-    bounds = _subspace_bounds(dim, n_subspaces)
-    lut = _adc_lut(as_double_array(vec_col), cbs, bounds)
-    q = F.broadcast(
-        queries.select(F.col(query_id_col).alias("qid"), lut.alias("_lut"))
-    )
-    scored = corpus_codes.crossJoin(q).select(
-        "qid",
-        "vec_id",
-        F.round(_adc_fold(F.col("_lut"), F.col("codes")), 6).alias("adc_dist"),
-    )
-    w = W.partitionBy("qid").orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def _assign_residuals(
@@ -613,9 +561,8 @@ def _assign_residuals(
     """(vec_id, cell, residual) for every vector: nearest coarse cell by
     L2, residual = vector - that cell's centroid. The centroid table is
     collected (bounded: n_cells x dim) and inlined as literals, so the
-    assignment+residual is a zero-shuffle scan expression — shared by
-    the initial ``ivfpq_index`` build and incremental ``ivfpq_append``
-    so the two paths cannot drift."""
+    assignment+residual is a zero-shuffle scan expression of the
+    ``ivfpq_index`` build."""
     cent_rows = sorted(
         (int(r["cell"]), [float(x) for x in r["centroid"]])
         for r in coarse_centroids.collect()
@@ -786,45 +733,6 @@ def ivfpq_topk(
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-def ivfpq_append(
-    new_vectors: DataFrame,
-    coarse_centroids: DataFrame,
-    codebooks: DataFrame,
-    dim: int,
-    n_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode NEW vectors against a FROZEN IVF-PQ index (the faiss
-    ``add()`` semantics): assign each to its nearest existing coarse
-    cell, quantize the residual with the existing codebooks, return
-    corpus_codes-shaped rows ``(vec_id, cell, codes)`` ready to append
-    to the landed codes table.
-
-    This is the production incremental path — the expensive part of the
-    index (two Lloyd trainings) is paid at build time; an append is the
-    same zero-shuffle assignment + encode expressions as the initial
-    build (shared via ``_assign_residuals``), so daily embedding
-    batches cost O(|batch|) with no retraining and the searcher sees
-    the union immediately. Quantizers are deliberately not updated:
-    distribution drift degrades quantization ERROR (recall), never
-    correctness — retrain via ``ivfpq_index`` and re-encode when recall
-    drops, exactly like rebuilding a faiss index.
-    """
-    with_res = _assign_residuals(
-        new_vectors, coarse_centroids, id_col=id_col, vec_col=vec_col
-    )
-    codes = pq_encode(
-        with_res,
-        codebooks,
-        dim=dim,
-        n_subspaces=n_subspaces,
-        id_col="vec_id",
-        vec_col="residual",
-    )
-    return with_res.select("vec_id", "cell").join(codes, "vec_id")
-
-
 def semantic_dedup_decisions(
     corpus: DataFrame,
     threshold: float,
@@ -845,7 +753,7 @@ def semantic_dedup_decisions(
 
     Returns (``id_col``, component, cent_sim, keep) for every vector
     that belongs to some near-dup group; vectors with no near-dup never
-    appear and are implicitly kept (``semantic_dedup`` handles them).
+    appear and are implicitly kept.
 
     Plan shape at 100 TB: Lloyd training + assignment are the shared
     IVF operators (broadcast-argmin, shuffle only on (cell, dim));
@@ -896,34 +804,6 @@ def semantic_dedup_decisions(
         .withColumn("keep", F.row_number().over(w) == 1)
         .select(F.col("vec_id").alias(id_col), "component", "cent_sim", "keep")
     )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    threshold: float,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """SemDeDup: drop all but one representative of every semantic
-    near-duplicate group (see ``semantic_dedup_decisions`` for the
-    method and the keeper rule). Returns the surviving corpus rows with
-    their original columns — vectors in no near-dup group pass through
-    untouched, so the filter is a LEFT-ANTI join against the bounded
-    drop set rather than a join against every vector."""
-    decisions = semantic_dedup_decisions(
-        corpus,
-        threshold,
-        k=k,
-        n_iter=n_iter,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroids=centroids,
-    )
-    drops = decisions.filter(~F.col("keep")).select(id_col)
-    return corpus.join(drops, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------

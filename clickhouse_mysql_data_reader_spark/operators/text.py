@@ -602,8 +602,8 @@ def bm25_stats(
     distinct term, (term, df, n_docs, total_tok). Land it once
     (``.write.parquet``) over the reference corpus, then pass it to
     ``bm25_topk(stats=...)`` so every subsequent batch scores against
-    the SAME distribution — the ``lm_surprisal(counts=)`` / DSIR
-    deployment shape.
+    the SAME distribution — the ``lm_surprisal(counts=)`` deployment
+    shape.
 
     n_docs/total_tok are denormalized onto every row (constant columns)
     so the landed table is self-contained — one parquet table, no
@@ -693,7 +693,7 @@ def bm25_topk(
     sort). Ties break (score desc, doc_id asc), fully deterministic.
 
     ``stats`` freezes the collection statistics (the same deployment
-    move as ``lm_surprisal(counts=)`` / DSIR's ``logratios``): pass a
+    move as ``lm_surprisal(counts=)``): pass a
     landed ``bm25_stats(...)`` table — (term, df, n_docs, total_tok),
     written to parquet once — and df/idf, N, and avgdl all come from
     that REFERENCE distribution instead of being recounted from ``df``,
@@ -970,7 +970,7 @@ def winnow_fingerprints(
 def token_counts(df: DataFrame, text_col: str, out_col: str = "token") -> DataFrame:
     """(token, n) corpus token-frequency table: explode + filter-empty +
     map-side-combined groupBy count — the shared corpus-scale pass of
-    ``vocab_topk`` and BPE training (operators/bpe.py)."""
+    ``vocab_topk`` and the LM scorers."""
     from clickhouse_mysql_data_reader_spark.util import fan_out
 
     return (
@@ -1029,7 +1029,7 @@ def hashed_bow_embed(
     "hashing trick" of Weinberger et al. 2009): token -> md5 bucket in
     [0, dim); the embedding is the per-bucket count vector, L2-
     normalized by default so downstream cosine operators (ANN top-k,
-    ``near_dup_pairs``, ``semantic_dedup``) treat it like any learned
+    ``near_dup_pairs``, ``semantic_dedup_decisions``) treat it like any learned
     embedding. This is the bridge from a raw text corpus to the
     embedding-similarity family when no model embeddings exist.
 

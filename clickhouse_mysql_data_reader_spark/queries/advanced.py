@@ -196,8 +196,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization (gaps-and-islands): a new session starts after "
     ">1h of inactivity; session id is the running sum of gap flags. One "
     "shuffle on user_id serves both windows; session assignment is a "
-    "linear per-partition pass. The streaming twin is session_window() "
-    "in streaming/windows.py.",
+    "linear per-partition pass.",
 )
 def window_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
@@ -236,8 +235,7 @@ def window_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Sliding-window aggregate (1h window, 30m slide) in batch form: "
     "window() assigns each event to its 2 overlapping slots JVM-side "
-    "(an Expand, no self-join), then a plain hash aggregate. The "
-    "streaming twin with watermarks lives in streaming/windows.py.",
+    "(an Expand, no self-join), then a plain hash aggregate.",
 )
 def window_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

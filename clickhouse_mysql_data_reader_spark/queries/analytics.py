@@ -1892,8 +1892,7 @@ def scalar_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2, 3
     """,
-    doc="Batch equivalent of the streaming tumbling-window aggregate "
-    "(streaming variant with watermark lives in streaming/windows.py).",
+    doc="Hourly tumbling-window aggregate over event time, in batch form.",
 )
 def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

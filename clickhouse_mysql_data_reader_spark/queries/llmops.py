@@ -7,7 +7,7 @@ Oracle-portability notes:
 - ratios are raw double divisions (bit-deterministic IEEE) instead of
   round(), whose half-way semantics differ across engines;
 - the shingle construction is mirrored token-for-token between
-  ``operators.dedup.word_shingles`` and the SQL CTE below.
+  ``operators.dedup.shingles_from_tokens`` and the SQL CTE below.
 """
 
 from __future__ import annotations
@@ -2988,9 +2988,7 @@ _TEMPER_BUDGET = 12_000
     "family) with weights derived IN-PLAN in exact integer arithmetic: "
     "w_i = isqrt(source tokens) realizes the 0.5 exponent with no libm "
     "pow and no driver collect — one lazy DAG end-to-end (totals agg, "
-    "1-row normalizer crossJoin, broadcast rate table, md5 keep). The "
-    "scale shape of temperature_weights/temperature_mixture, whose "
-    "float-pow weights are driver-side Python.",
+    "1-row normalizer crossJoin, broadcast rate table, md5 keep).",
 )
 def sample_temperature_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhouse_mysql_data_reader_spark.operators.sampling import (

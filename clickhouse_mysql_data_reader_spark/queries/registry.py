@@ -613,7 +613,7 @@ DEPRIORITIZED = (
     #     cell-blocked cosine pairs (the checked dedup_embed_near
     #     family's plan) -> connected components (the checked
     #     dedup_cluster family) -> least-typical-keeper election;
-    #     first driver-checkable registration of the semantic_dedup
+    #     first driver-checkable registration of the semantic_dedup_decisions
     #     operator family (unit-tested since round 4)
     #   - monitor_psi_drift: Population Stability Index between corpus
     #     snapshots — fixed-width baseline-frozen bins, Laplace

@@ -124,8 +124,3 @@ def schema_diff(old: T.StructType, new: T.StructType) -> list[SchemaChange]:
                 )
             )
     return changes
-
-
-def evolution_safe(old: T.StructType, new: T.StructType) -> bool:
-    """True iff every drift between the schemas is a safe evolution."""
-    return all(c.safe for c in schema_diff(old, new))

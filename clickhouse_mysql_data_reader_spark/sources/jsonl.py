@@ -102,47 +102,6 @@ def quarantine_split(df: DataFrame, corrupt_col: str = "_corrupt_record") -> tup
     return good, bad
 
 
-def read_jsonl_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str = "_corrupt_record",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming JSONL source — documents arriving as file drops (the
-    usual shape of a crawl/ingest handoff directory) consumed as a
-    Structured Streaming frame; compose with ``quarantine_split`` and
-    ``curation.curate_stream`` downstream.
-
-    A schema is REQUIRED (Spark streaming sources never infer), which
-    is also the production rule for the batch reader. The PERMISSIVE
-    corrupt-record column is appended exactly as in :func:`read_jsonl`.
-    ``max_files_per_trigger`` bounds per-micro-batch intake so one
-    giant backfill drop doesn't become one giant batch.
-    """
-    mode = mode.upper()
-    if mode not in _MODES:
-        raise ValueError(f"read_jsonl_stream: mode must be one of {_MODES}, got {mode!r}")
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    if mode == "PERMISSIVE" and corrupt_col not in schema.names:
-        # COPY first: StructType.add mutates in place and returning
-        # self would leak the quarantine column into the CALLER'S
-        # schema object (phantom field in every later reuse)
-        schema = T.StructType(list(schema.fields)).add(
-            corrupt_col, T.StringType(), True
-        )
-    reader = (
-        spark.readStream.schema(schema)
-        .option("mode", mode)
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
-
-
 def write_jsonl(
     df: DataFrame,
     path: str,

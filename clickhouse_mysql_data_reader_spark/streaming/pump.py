@@ -72,54 +72,6 @@ def read_cdc_stream(
     return reader.load(path)
 
 
-def kafka_cdc_options(
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> dict[str, str]:
-    """Source options for the Kafka form of the CDC stream — the
-    production swap for ``read_cdc_stream``'s file source (a
-    Debezium/maxwell-style binlog topic; the reference's analogue is
-    tailing the binlog directly, mysqlreader.py). Kept as a plain dict
-    (like ``sources/jdbc.py`` scan_options) so the wiring is testable
-    without a broker in the container.
-
-    ``failOnDataLoss=false``: a compacted/expired offset range degrades
-    to a gap instead of killing the query — the pump's last-write-wins
-    apply tolerates replays and gaps are surfaced by telemetry, not by
-    crashing the stream.
-    """
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": "false",
-    }
-    if max_offsets_per_trigger is not None:
-        # per-trigger batch bound — the backpressure knob (the
-        # reference's analogue: pool flush thresholds, bbpool.py)
-        opts["maxOffsetsPerTrigger"] = str(int(max_offsets_per_trigger))
-    return opts
-
-
-def parse_cdc_envelope(raw: DataFrame, payload: T.StructType) -> DataFrame:
-    """Decode Kafka-shaped rows (binary ``value`` holding the JSON CDC
-    event) into the flat envelope+payload frame every downstream
-    operator consumes. Works identically on streaming and batch frames
-    (unified semantics), so the decode is unit-tested without a broker
-    and the full pipeline is ``read_kafka -> parse -> start_pump``.
-
-    Corrupt events (JSON that doesn't parse) surface as all-NULL rows
-    rather than killing the stream; filter on ``op IS NOT NULL``
-    downstream if the topic can carry junk.
-    """
-    schema = cdc_event_schema(payload)
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("_e")
-    ).select("_e.*")
-
-
 PART_COL = "_part"
 MANIFEST = "MANIFEST.json"
 
@@ -192,12 +144,6 @@ class SnapshotStore:
             if name.startswith("gen-") and name not in live:
                 shutil.rmtree(os.path.join(tdir, name), ignore_errors=True)
 
-    def partition_paths(self, db: str, table: str) -> dict[str, str]:
-        """Live partition value -> absolute data dir (for tests/tools)."""
-        tdir = self.path_for(db, table)
-        m = self._load_manifest(tdir) or {"partitions": {}}
-        return {pv: os.path.join(tdir, rel) for pv, rel in m["partitions"].items()}
-
     # -- read/apply --------------------------------------------------------
     def read(
         self,
@@ -229,32 +175,6 @@ class SnapshotStore:
         # the manifest records the schema: reading with it skips
         # parquet's schema-inference job
         return spark.read.schema(schema).parquet(*paths)
-
-    def profile(self, spark: SparkSession, db: str, table: str) -> DataFrame | None:
-        """Post-landing quality profile of the snapshot's CURRENT state
-        (operators/profile.py profile_table): the reference users'
-        manual `SELECT count(*)` destination check as one call against
-        the manifest-committed files. None when nothing landed yet."""
-        from clickhouse_mysql_data_reader_spark.operators.profile import (
-            profile_table,
-        )
-
-        state = self.read(spark, db, table)
-        return None if state is None else profile_table(state)
-
-    def validate(
-        self, spark: SparkSession, db: str, table: str, rules: list[tuple]
-    ) -> DataFrame | None:
-        """Declarative rule gate over the landed state (operators/
-        profile.py validate_table) — e.g. `("unique", key_col)` is the
-        invariant the latest-wins merge must uphold. None when nothing
-        landed yet."""
-        from clickhouse_mysql_data_reader_spark.operators.profile import (
-            validate_table,
-        )
-
-        state = self.read(spark, db, table)
-        return None if state is None else validate_table(state, rules)
 
     def apply(self, spark: SparkSession, db: str, table: str, changes: DataFrame) -> None:
         from clickhouse_mysql_data_reader_spark.operators.cdc import cdc_final_state

@@ -69,7 +69,7 @@ def self_contained_pickle(module) -> None:
     without the repo on PYTHONPATH then fail the import. Call
     ``self_contained_pickle(sys.modules[__name__])`` before building
     the UDF (one shared implementation; the per-module wrappers in
-    membership/stateful/multimodal delegate here so a cloudpickle API
+    membership/multimodal/similarity delegate here so a cloudpickle API
     change is fixed in one place).
     """
     try:
@@ -78,94 +78,3 @@ def self_contained_pickle(module) -> None:
         cloudpickle.register_pickle_by_value(module)
     except Exception:
         pass
-
-
-def plan_report(df: DataFrame) -> dict:
-    """Machine-readable summary of a DataFrame's physical plan — the
-    properties worth asserting in tests and checking before a 100 TB
-    run, without grepping explain output by hand:
-
-    - ``n_exchanges``: shuffle count (each is a full network pass);
-    - ``joins``: physical join operators used (a CartesianProduct or
-      BroadcastNestedLoopJoin here is almost always a missing equi-key);
-    - ``scans``: per-scan pushed filters and projected column count
-      (a scan reading 11 columns for a 2-column projection means
-      pruning failed);
-    - ``has_aqe``: AdaptiveSparkPlan present (runtime re-planning on).
-
-    Codegen spans are deliberately NOT reported: under AQE the codegen
-    ids are only assigned when stages actually execute, so any number
-    derived from the un-executed plan would be a misleading zero.
-
-    Introspection only — never executes the frame.
-    """
-    import re
-
-    jvm = df.sparkSession._jvm
-    plan = df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    nodes = re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, re.M)
-
-    def _split_top_level(s: str) -> list[str]:
-        # split on commas NOT nested inside (), [], or <> — a pushed
-        # In(col, [a,b]) filter and a struct<a:array<int>,b:int> schema
-        # both carry nested commas a naive split would fragment
-        out, depth, cur = [], 0, []
-        for ch in s:
-            if ch in "([<":
-                depth += 1
-            elif ch in ")]>":
-                depth -= 1
-            if ch == "," and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        tail = "".join(cur).strip()
-        if tail:
-            out.append(tail)
-        return [x for x in out if x]
-
-    scans = []
-    for m in re.finditer(r"PushedFilters: \[([^\n]*)\]", plan):
-        scans.append({"pushed_filters": _split_top_level(m.group(1))})
-    for i, m in enumerate(re.finditer(r"ReadSchema: struct<(.*)>\s*$", plan, re.M)):
-        cols = _split_top_level(m.group(1))
-        if i < len(scans):
-            scans[i]["n_read_columns"] = len(cols)
-        else:
-            scans.append({"pushed_filters": [], "n_read_columns": len(cols)})
-    return {
-        "n_exchanges": sum(1 for n in nodes if n == "Exchange"),
-        "joins": sorted({n for n in nodes if "Join" in n}),
-        "scans": scans,
-        "has_aqe": "AdaptiveSparkPlan" in plan,
-    }
-
-
-def suggest_shuffle_partitions(
-    df: DataFrame,
-    target_mb: int = 128,
-    min_partitions: int = 1,
-    max_partitions: int = 200_000,
-) -> int:
-    """Partition-count advice from Catalyst's own size estimate:
-    ceil(estimated_bytes / target_mb), clamped. The sizing rule every
-    100 TB tuning guide states — shuffle partitions should hold
-    ~100-200 MB each — as a function over the optimizer statistics
-    (parquet footer sizes; filter selectivity only refines it when CBO
-    column stats exist, i.e. after ANALYZE TABLE), so a job
-    can `spark.conf.set("spark.sql.shuffle.partitions",
-    suggest_shuffle_partitions(df))` before its heavy stage instead of
-    inheriting a global constant. Introspection only, never executes;
-    the estimate inherits Catalyst's optimism (post-filter sizes are
-    heuristic), so treat it as an order-of-magnitude setting, not a
-    contract — AQE coalescing cleans up the remainder at runtime.
-    """
-    if target_mb <= 0:
-        raise ValueError("suggest_shuffle_partitions: target_mb must be positive")
-    # py4j converts the Scala BigInt straight to a Python int
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    n = -(-size // (target_mb * 1024 * 1024))  # ceil div
-    return max(min_partitions, min(int(n), max_partitions))

@@ -8,11 +8,11 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from clickhouse_mysql_data_reader_spark.operators import classifier as C
 from clickhouse_mysql_data_reader_spark.operators.classifier import (
-    quality_filter,
-    score_quality,
+    quality_prob_col,
     train_quality_classifier,
 )
 from clickhouse_mysql_data_reader_spark.operators.text import hashed_bow_embed
@@ -37,6 +37,12 @@ def _mk(spark, texts, start=0):
     )
 
 
+def _score(corpus, w, b):
+    return corpus.select(
+        "doc_id", quality_prob_col(F.col("text"), w, b).alias("quality_prob")
+    )
+
+
 def test_classifier_separates_planted_domains(spark):
     pos, neg = _mk(spark, QUALITY), _mk(spark, CRAWL, start=100)
     w, b = train_quality_classifier(pos, neg, dim=128)
@@ -49,12 +55,8 @@ def test_classifier_separates_planted_domains(spark):
         ],
         start=200,
     )
-    probs = {r["doc_id"]: r["quality_prob"] for r in score_quality(held, w, b).collect()}
+    probs = {r["doc_id"]: r["quality_prob"] for r in _score(held, w, b).collect()}
     assert probs[200] > 0.5 > probs[201]
-
-    kept = quality_filter(held, w, b, threshold=0.5)
-    assert kept.columns == ["doc_id", "text"]
-    assert [r["doc_id"] for r in kept.collect()] == [200]
 
 
 def test_score_matches_numpy_sigmoid(spark):
@@ -67,7 +69,7 @@ def test_score_matches_numpy_sigmoid(spark):
         r["doc_id"]: np.array(r["embedding"])
         for r in hashed_bow_embed(corpus, "text", "doc_id", dim=64).collect()
     }
-    got = {r["doc_id"]: r["quality_prob"] for r in score_quality(corpus, w, b).collect()}
+    got = {r["doc_id"]: r["quality_prob"] for r in _score(corpus, w, b).collect()}
     for i, e in emb.items():
         want = 1.0 / (1.0 + math.exp(-(float(e @ np.array(w)) + b)))
         assert got[i] == pytest.approx(want, rel=1e-12), f"doc {i}"
@@ -91,7 +93,7 @@ def test_scoring_plan_is_shuffle_free(spark):
     """Weights ride as literals inside the plan; features are in-row —
     the whole scorer is scan-stage expressions with no Exchange."""
     corpus = _mk(spark, QUALITY + CRAWL)
-    df = score_quality(corpus, [0.1] * 32, -0.5)
+    df = _score(corpus, [0.1] * 32, -0.5)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -102,12 +104,7 @@ def test_inline_features_match_frame_features(spark):
     """quality_prob_col scores through text.hashed_bow_expr; its feature
     map must stay bit-identical to hashed_bow_embed (what training
     collects) — the training/scoring sync pin."""
-    from pyspark.sql import functions as F
-
-    from clickhouse_mysql_data_reader_spark.operators.text import (
-        hashed_bow_embed,
-        hashed_bow_expr,
-    )
+    from clickhouse_mysql_data_reader_spark.operators.text import hashed_bow_expr
 
     corpus = _mk(spark, QUALITY + CRAWL + [""])
     frame = {

@@ -277,6 +277,55 @@ def test_migrate_to_csv_roundtrip(spark, tmp_path):
     assert report.reconciled and report.src_rows == 5
 
 
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_migrate_table_reads_its_source_once(spark, tmp_path):
+    """migrate-table counts the source rows in the scan that writes
+    them: it starts exactly the jobs of its write and its reconciliation
+    read, with no separate source count (against JDBC that count is a
+    second full SELECT), and still reconciles — on the plain and on the
+    month-partitioned write."""
+    from clickhouse_mysql_data_reader_spark.schema.ddl import (
+        elect_partition_date_field,
+        schema_to_columns,
+    )
+    from clickhouse_mysql_data_reader_spark.sinks.batch import write_parquet
+
+    dst = str(tmp_path / "dst")
+    argv = ["--migrate-table", "--src-parquet-dir", SF, "--dst-parquet-dir", dst]
+    for table, n in (("nation", 25), ("orders", 1500)):
+        mig = _mig(spark, argv + ["--src-tables", table])
+        report, jobs = _jobs_in(spark, f"migrate_{table}", lambda: mig.migrate_table("db", table))
+
+        def write_and_count():
+            df = mig.apply_column_policy(mig.read_source("db", table))
+            date_col = elect_partition_date_field(schema_to_columns(df.schema))
+            assert (date_col is None) == (table == "nation")
+            ref = str(tmp_path / "ref" / table)
+            write_parquet(df, ref, date_col=date_col)
+            return spark.read.parquet(ref).count()
+
+        landed, ref_jobs = _jobs_in(spark, f"ref_{table}", write_and_count)
+        assert report.src_rows == report.dst_rows == landed == n, table
+        assert jobs == ref_jobs, table
+
+    # a re-land whose WHERE selects nothing: the empty scan stage makes
+    # AQE drop the observing node, and the count falls back to a recount
+    mig = _mig(
+        spark, argv + ["--src-tables", "orders", "--src-tables-where-clauses", "o_orderkey < 0"]
+    )
+    assert mig.migrate_table("db", "orders").src_rows == 0
+
+
 # -- cli: verbs end-to-end --------------------------------------------------
 
 

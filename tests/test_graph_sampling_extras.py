@@ -575,119 +575,6 @@ def test_training_shuffle_is_a_deterministic_permutation(spark):
         training_shuffle(docs, n_shards=0)
 
 
-def test_temperature_weights_flatten_toward_uniform(spark):
-    """alpha=1 returns natural shares; alpha<1 moves weights toward
-    uniform (small sources up, big sources down) — numpy cross-check;
-    alpha->0 approaches uniform; composition feeds mixture_sample."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from clickhouse_mysql_data_reader_spark.operators.sampling import (
-        temperature_mixture,
-        temperature_weights,
-    )
-
-    rows = []
-    sizes = {"en": 800, "fr": 150, "sw": 50}
-    i = 0
-    for src, n_docs in ((s, c // 10) for s, c in sizes.items()):
-        for _ in range(n_docs):
-            rows.append((i, src, 10))
-            i += 1
-    docs = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
-
-    nat = temperature_weights(docs, F.col("n_tokens"), "source", alpha=1.0)
-    p = {s: c / 1000 for s, c in sizes.items()}
-    for s in sizes:
-        assert abs(nat[s] - p[s]) < 1e-12
-
-    w = temperature_weights(docs, F.col("n_tokens"), "source", alpha=0.3)
-    want = {s: v**0.3 for s, v in p.items()}
-    z = sum(want.values())
-    for s in sizes:
-        assert w[s] == __import__("pytest").approx(want[s] / z, rel=1e-12)
-    assert w["sw"] > p["sw"] and w["en"] < p["en"], "flattening direction"
-    assert abs(sum(w.values()) - 1.0) < 1e-12
-
-    near_uniform = temperature_weights(docs, F.col("n_tokens"), "source", alpha=1e-6)
-    assert all(abs(v - 1 / 3) < 1e-3 for v in near_uniform.values())
-
-    report = {
-        r["source"]: r
-        for r in temperature_mixture(
-            docs, F.col("n_tokens"), "doc_id", "source", token_budget=500, alpha=0.3
-        ).collect()
-    }
-    assert report["sw"]["rate"] == 1.0, "small source kept whole (never upsampled)"
-    assert report["en"]["rate"] < 1.0, "dominant source downsampled"
-    assert report["en"]["n_tokens_kept"] < report["en"]["n_tokens"]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="alpha"):
-        temperature_weights(docs, F.col("n_tokens"), "source", alpha=0)
-
-
-def test_shuffled_pack_fills_packs_in_shuffle_order(spark):
-    """shuffled_pack = pack_sequences over the training_shuffle layout:
-    original ids come back, within-(shard, pack) fill order follows the
-    shuffle rank (not id order), layout is reproducible, a new salt
-    regroups packs, and the plain id-order packing still works
-    unchanged (override path is opt-in)."""
-    from pyspark.sql import functions as F
-
-    from clickhouse_mysql_data_reader_spark.operators.sampling import (
-        pack_sequences,
-        shuffled_pack,
-        training_shuffle,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, 10) for i in range(100)], "doc_id long, n_tokens long"
-    )
-    out = shuffled_pack(docs, F.col("n_tokens"), "doc_id", budget=40, n_shards=4)
-    rows = out.collect()
-    assert len(rows) == 100 and {r["doc_id"] for r in rows} == set(range(100))
-
-    # shard must be the SHUFFLE's shard, not doc_id % n_shards
-    sh = {
-        r["doc_id"]: r["shard"]
-        for r in training_shuffle(docs, n_shards=4).collect()
-    }
-    for r in rows:
-        assert r["shard"] == sh[r["doc_id"]], f"doc {r['doc_id']}"
-    assert any(r["shard"] != r["doc_id"] % 4 for r in rows)
-
-    # contiguous running layout within each shard: offsets advance by
-    # n_tokens in shuffle-rank order
-    pos = {
-        r["doc_id"]: r["pos"]
-        for r in training_shuffle(docs, n_shards=4).collect()
-    }
-    by_shard = {}
-    for r in rows:
-        by_shard.setdefault(r["shard"], []).append(r)
-    for s, rs in by_shard.items():
-        rs.sort(key=lambda r: pos[r["doc_id"]])
-        expect = 0
-        for r in rs:
-            assert r["start_token"] == expect, f"shard {s} doc {r['doc_id']}"
-            assert r["pack_id"] == expect // 40 and r["pack_offset"] == expect % 40
-            expect += r["n_tokens"]
-
-    again = shuffled_pack(docs, F.col("n_tokens"), "doc_id", budget=40, n_shards=4)
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, rows))
-    other = shuffled_pack(
-        docs, F.col("n_tokens"), "doc_id", budget=40, n_shards=4, salt="epoch2"
-    ).collect()
-    a = {r["doc_id"]: (r["shard"], r["pack_id"], r["pack_offset"]) for r in rows}
-    b = {r["doc_id"]: (r["shard"], r["pack_id"], r["pack_offset"]) for r in other}
-    assert any(a[d] != b[d] for d in a), "new salt must relayout"
-
-    plain = pack_sequences(docs, F.col("n_tokens"), "doc_id", budget=40, n_shards=4)
-    assert all(r["shard"] == r["doc_id"] % 4 for r in plain.collect())
-
-
 def test_unimax_waterfilling_allocation(spark):
     """Hand-computed UniMax allocation: small sources cap at
     size*max_epochs, excess redistributes uniformly over larger ones;
@@ -733,15 +620,13 @@ def test_unimax_waterfilling_allocation(spark):
 
 
 def test_weighting_and_shuffle_guards(spark):
-    """Review-pass guards: shuffle output-name collisions raise; a
-    zero-token corpus raises in temperature_weights; NULL source sums
-    coalesce to zero in unimax; inverted ccnet thresholds raise;
+    """Review-pass guards: shuffle output-name collisions raise; NULL
+    source sums coalesce to zero in unimax; inverted ccnet thresholds raise;
     corpus_stats rejects non-positive histogram widths."""
     from pyspark.sql import functions as F
     import pytest as _pytest
 
     from clickhouse_mysql_data_reader_spark.operators.sampling import (
-        temperature_weights,
         training_shuffle,
         unimax_weights,
     )
@@ -753,10 +638,6 @@ def test_weighting_and_shuffle_guards(spark):
     with_pos = spark.createDataFrame([(1, 5)], "doc_id long, pos long")
     with _pytest.raises(ValueError, match="collide"):
         training_shuffle(with_pos)
-
-    zero = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], "doc_id long, source string, n_tokens long")
-    with _pytest.raises(ValueError, match="zero tokens"):
-        temperature_weights(zero, F.col("n_tokens"), "source")
 
     nulls = spark.createDataFrame(
         [(1, "a", 100), (2, "b", None)], "doc_id long, source string, n_tokens long"
@@ -1115,41 +996,6 @@ def test_value_histogram_merges_and_quantiles_bound_truth(spark):
             spark.createDataFrame([("a", -1.0)], "k string, value double"),
             ["k"], "value", 5.0,
         ).collect()
-
-
-def test_merge_anomaly_stats_is_exact_union(spark):
-    from clickhouse_mysql_data_reader_spark.operators.profile import (
-        anomaly_stats,
-        anomaly_zscore,
-        merge_anomaly_stats,
-    )
-
-    d1 = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.5), ("b", 7.0)], "k string, value double"
-    )
-    d2 = spark.createDataFrame(
-        [("a", 50.0), ("c", 3.0), ("c", 3.25)], "k string, value double"
-    )
-    merged = merge_anomaly_stats(
-        anomaly_stats(d1, "k", "value"), anomaly_stats(d2, "k", "value")
-    )
-    fresh = anomaly_stats(d1.unionByName(d2), "k", "value")
-    as_rows = lambda df: sorted(
-        (r["key"], int(r["n_obs"]), int(r["sum_x"]), int(r["sum_sq"]))
-        for r in df.collect()
-    )
-    assert as_rows(merged) == as_rows(fresh)
-
-    # merged stats drive the detector identically to fresh stats
-    batch = spark.createDataFrame([("a", 40.0), ("a", 2.0)], "k string, value double")
-    via_merged = sorted(map(tuple, anomaly_zscore(batch, "k", "value", 2, stats=merged).collect()))
-    via_fresh = sorted(map(tuple, anomaly_zscore(batch, "k", "value", 2, stats=fresh).collect()))
-    assert via_merged == via_fresh
-
-    with pytest.raises(ValueError, match="no stats"):
-        merge_anomaly_stats()
-    with pytest.raises(ValueError, match="missing"):
-        merge_anomaly_stats(d1)
 
 
 def test_anomaly_zscore_overflow_guard_and_scale_invariance(spark):

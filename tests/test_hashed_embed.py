@@ -8,7 +8,7 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
-from clickhouse_mysql_data_reader_spark.operators.similarity import semantic_dedup
+from clickhouse_mysql_data_reader_spark.operators.similarity import semantic_dedup_decisions
 from clickhouse_mysql_data_reader_spark.operators.text import hashed_bow_embed
 
 
@@ -76,6 +76,7 @@ def test_semantic_dedup_over_hashed_text_embeddings(spark):
     emb = hashed_bow_embed(_mk(spark, rows), "text", "doc_id", dim=64).select(
         F.col("doc_id").alias("vec_id"), "embedding"
     )
-    kept = {r["vec_id"] for r in semantic_dedup(emb, 0.9, k=2, n_iter=2).collect()}
-    assert 3 in kept and 4 in kept
-    assert len(kept & {1, 2}) == 1, "near-copies collapse to one keeper"
+    dec = semantic_dedup_decisions(emb, 0.9, k=2, n_iter=2)
+    dropped = {r["vec_id"] for r in dec.filter("NOT keep").collect()}
+    assert not dropped & {3, 4}
+    assert len(dropped & {1, 2}) == 1, "near-copies collapse to one keeper"

@@ -14,7 +14,6 @@ from clickhouse_mysql_data_reader_spark.operators.multimodal import (
     documents_as_media,
     extract_features,
     frame_sample_plan,
-    real_decoder,
 )
 
 
@@ -47,13 +46,6 @@ def test_extract_features_deterministic(media, spark):
 def test_extract_features_runs_distributed(media):
     feats = extract_features(media.repartition(4))
     assert feats.count() == media.count()
-
-
-def test_real_decoder_is_explicit_stub(media):
-    with pytest.raises(NotImplementedError):
-        real_decoder(b"bytes", "image")
-    with pytest.raises(Exception):
-        extract_features(media, decode_fn=real_decoder).collect()
 
 
 def test_frame_sample_plan_explosion(media):
@@ -219,7 +211,6 @@ def test_image_dhash_default_fake_is_md5_blocked(spark):
     from clickhouse_mysql_data_reader_spark.operators.multimodal import (
         deterministic_fake_pixels,
         image_dhash,
-        real_pixel_decoder,
     )
 
     a = ("x" * 256).encode()
@@ -230,8 +221,6 @@ def test_image_dhash_default_fake_is_md5_blocked(spark):
     assert got[1] == got[2]
     px = deterministic_fake_pixels(a, "image")
     assert len(px) == 56 and all(0 <= p <= 255 for p in px)
-    with pytest.raises(NotImplementedError):
-        real_pixel_decoder(b"bytes", "image")
     # a decoder returning too few pixels fails loudly, not silently
     with pytest.raises(Exception, match="pixels"):
         image_dhash(df, decode_fn=lambda c, k: [1, 2, 3]).collect()

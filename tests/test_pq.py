@@ -1,11 +1,9 @@
 """Product quantization (similarity.py PQ family): codebook shape,
-code determinism/range, and ADC retrieval quality on planted clusters.
+code determinism/range, and IVF-PQ retrieval quality on planted clusters.
 No SQL oracle applies (Lloyd iterations are not practically expressible
 in DuckDB), so this is the operator's verification surface."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import Window as W
@@ -13,7 +11,6 @@ from pyspark.sql import functions as F
 
 from clickhouse_mysql_data_reader_spark.operators.similarity import (
     _subspace_bounds,
-    pq_adc_topk,
     pq_encode,
     pq_train,
 )
@@ -75,58 +72,6 @@ def test_pq_encode_codes_in_range_and_deterministic(spark):
     assert {r["vec_id"]: list(r["codes"]) for r in codes} == again
 
 
-def test_pq_adc_topk_recovers_planted_clusters(spark):
-    """Held-out queries (perturbed cluster members NOT in the corpus):
-    the ADC top-1 must come from the query's own planted cluster for
-    every query — the clusters are separated by ~40 units while PQ
-    quantization error is sub-unit. Also: deterministic rn sequence and
-    adc distances are non-decreasing within each query's top-k."""
-    corpus = _clustered(spark)
-    cb = pq_train(corpus, dim=DIM, n_subspaces=S, k=K, n_iter=3)
-    codes = pq_encode(corpus, cb, dim=DIM, n_subspaces=S)
-    centers = ((0, 0), (40, 0), (0, 40))
-    qrows = []
-    for qi, (cx, cy) in enumerate(centers):
-        vec = [cx + 0.55, cy + 0.55] + [0.02] * (DIM - 2)
-        qrows.append((qi, vec))
-    queries = spark.createDataFrame(qrows, "qid long, embedding array<double>")
-    top = pq_adc_topk(codes, cb, queries, dim=DIM, n_subspaces=S, k=3).collect()
-    cluster_of = {r["vec_id"]: r["cluster"] for r in corpus.collect()}
-    by_q = {}
-    for r in top:
-        by_q.setdefault(r["qid"], []).append(r)
-    assert set(by_q) == {0, 1, 2}
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r["rn"])
-        assert [r["rn"] for r in rows] == [1, 2, 3]
-        dists = [r["adc_dist"] for r in rows]
-        assert dists == sorted(dists)
-        # every returned neighbor is from the query's own cluster
-        assert all(cluster_of[r["vec_id"]] == qid for r in rows), rows
-
-
-def test_pq_adc_distance_tracks_true_distance(spark):
-    """ADC is an approximation of the true squared L2: for a query at
-    cluster 0's center, the ADC distance to every cluster-0 member must
-    be far below the ADC distance to every other-cluster member (the
-    inter-cluster gap is ~1600 in squared units)."""
-    corpus = _clustered(spark)
-    cb = pq_train(corpus, dim=DIM, n_subspaces=S, k=K, n_iter=3)
-    codes = pq_encode(corpus, cb, dim=DIM, n_subspaces=S)
-    queries = spark.createDataFrame(
-        [(0, [0.5, -0.5] + [0.02] * (DIM - 2))], "qid long, embedding array<double>"
-    )
-    all_ranked = pq_adc_topk(
-        codes, cb, queries, dim=DIM, n_subspaces=S, k=corpus.count()
-    ).collect()
-    cluster_of = {r["vec_id"]: r["cluster"] for r in corpus.collect()}
-    same = [r["adc_dist"] for r in all_ranked if cluster_of[r["vec_id"]] == 0]
-    other = [r["adc_dist"] for r in all_ranked if cluster_of[r["vec_id"]] != 0]
-    assert same and other
-    assert max(same) < min(other)
-    assert max(same) < 100 < 400 < min(other)
-
-
 def test_ivfpq_index_and_search_planted_clusters(spark):
     """The full IVF-PQ composition: coarse cells + residual PQ + probe
     search. Held-out queries must retrieve only own-cluster members,
@@ -177,58 +122,17 @@ def test_ivfpq_index_and_search_planted_clusters(spark):
         assert true_nn in {r["vec_id"] for r in rows}, (qid, true_nn, rows)
 
 
-@pytest.mark.slow
-def test_ivfpq_append_matches_build_encoding(spark, sf_dir):
-    """Incremental add: vectors encoded via ivfpq_append against the
-    frozen quantizers must be IDENTICAL to the rows the initial build
-    produced for them (same cells, same codes) — the append path shares
-    the assignment+encode machinery, and this pins that they cannot
-    drift. A search over base+appended codes then behaves as if the
-    index had been built over everything."""
-    from clickhouse_mysql_data_reader_spark.operators.similarity import (
-        ivfpq_append,
-        ivfpq_index,
-        ivfpq_topk,
-    )
-    from clickhouse_mysql_data_reader_spark.sources.parquet import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()["embedding"])
-    cents, cbs, codes_full = ivfpq_index(
-        emb, dim=dim, n_cells=4, n_subspaces=4, k_codes=8
-    )
-    late = emb.filter(F.col("vec_id") % 5 == 0)
-    appended = ivfpq_append(late, cents, cbs, dim=dim, n_subspaces=4)
-    assert appended.columns == codes_full.columns
-    want = {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in codes_full.join(
-            late.select("vec_id"), "vec_id", "left_semi"
-        ).collect()
-    }
-    got = {r["vec_id"]: (r["cell"], list(r["codes"])) for r in appended.collect()}
-    assert got == want
-
-    # base (without the late vectors) + appended == full index for search
-    base = codes_full.join(late.select("vec_id"), "vec_id", "left_anti")
-    union_codes = base.unionByName(appended)
-    q = emb.filter(F.col("vec_id") == 5).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    hits = ivfpq_topk(
-        union_codes, cents, cbs, q, dim=dim, n_subspaces=4, n_probe=2, k=3
-    ).collect()
-    assert hits, "appended vector must be searchable"
-    assert any(r["vec_id"] == 5 for r in hits), "self should rank in top-3"
-
-
 def test_pq_adc_exact_with_sparse_codebook_cells(spark):
     """Regression: hash-init k-means can leave a codebook's raw cell
     ids sparse (e.g. cells 0,2,5). The ADC fold indexes the LUT by the
     dense code POSITION, so a gapped codebook must still produce
     exactly the numpy ADC distances — the old raw-cell-id codes read
-    the wrong LUT slot (or past its end) for every code above a gap."""
+    the wrong LUT slot (or past its end) for every code above a gap.
+    One coarse cell at the origin makes ``ivfpq_topk``'s residuals the
+    raw vectors, so its distances are plain PQ ADC."""
     import numpy as np
+
+    from clickhouse_mysql_data_reader_spark.operators.similarity import ivfpq_topk
 
     dim, s_cnt = 4, 2
     # hand-built codebooks with GAPPED cell ids per subspace
@@ -255,10 +159,12 @@ def test_pq_adc_exact_with_sparse_codebook_cells(spark):
     )
     code_df = pq_encode(corpus, cb, dim=dim, n_subspaces=s_cnt)
     codes = {r["vec_id"]: list(r["codes"]) for r in code_df.collect()}
+    origin = spark.createDataFrame([(0, [0.0] * dim)], "cell int, centroid array<double>")
     got = {
         r["vec_id"]: r["adc_dist"]
-        for r in pq_adc_topk(
-            code_df, cb, queries, dim=dim, n_subspaces=s_cnt, k=3
+        for r in ivfpq_topk(
+            code_df.withColumn("cell", F.lit(0)), origin, cb, queries,
+            dim=dim, n_subspaces=s_cnt, n_probe=1, k=3,
         ).collect()
     }
 
@@ -277,6 +183,20 @@ def test_pq_adc_exact_with_sparse_codebook_cells(spark):
     assert min(got, key=got.get) == 2
 
 
+def _adc_lut(vec, cbs, bounds):
+    """S x k lookup table (array<array<double>>) of squared distances
+    from each SUBVECTOR of ``vec`` to each codebook centroid — the ADC
+    table as a Catalyst expression, which the expression path built."""
+    from clickhouse_mysql_data_reader_spark.operators.similarity import _sq_dist
+
+    return F.array(
+        *[
+            F.array(*[_sq_dist(F.slice(vec, start, length), c) for _cell, c in cbs[s]])
+            for s, (start, length) in enumerate(bounds)
+        ]
+    )
+
+
 def _old_expression_ivfpq_topk(
     corpus_codes, coarse_centroids, codebooks, queries, dim,
     n_subspaces=4, n_probe=2, k=3,
@@ -287,7 +207,6 @@ def _old_expression_ivfpq_topk(
     reference for the driver-built LUTs."""
     from clickhouse_mysql_data_reader_spark.operators.similarity import (
         _adc_fold,
-        _adc_lut,
         _collect_codebooks,
         as_double_array,
         assign_cells_probes,

@@ -146,81 +146,8 @@ def test_unknown_types_never_raise(garbage):
     assert dt is not None
 
 
-# ---------------------------------------------------------------------------
-# optimal_lsh_bands — driver-side S-curve tuner (pure arithmetic, no Spark)
-# ---------------------------------------------------------------------------
-
-def test_optimal_lsh_bands_known_shape_and_extremes():
-    from clickhouse_mysql_data_reader_spark.operators.dedup import (
-        optimal_lsh_bands,
-    )
-    import pytest
-
-    # fp_weight extremes: all-FN-cost wants maximal collision (r=1 ->
-    # b=num_hashes); all-FP-cost wants minimal collision (b=1)
-    assert optimal_lsh_bands(16, 0.8, fp_weight=0.0) == 16
-    assert optimal_lsh_bands(16, 0.8, fp_weight=1.0) == 1
-    # only divisors of num_hashes are candidates (equal-width bands)
-    for nh in (12, 16, 20, 64):
-        b = optimal_lsh_bands(nh, 0.8)
-        assert nh % b == 0
-    # validation
-    for bad_t in (0.0, 1.0, -1.0):
-        with pytest.raises(ValueError, match="threshold"):
-            optimal_lsh_bands(16, bad_t)
-    with pytest.raises(ValueError, match="num_hashes"):
-        optimal_lsh_bands(0, 0.8)
-    with pytest.raises(ValueError, match="fp_weight"):
-        optimal_lsh_bands(16, 0.8, fp_weight=1.5)
-
-
-def test_curation_config_with_tuned_lsh():
-    """CurationConfig.with_tuned_lsh — the recommended tune-before-
-    first-landing flow: lsh_bands comes from the tuner at the config's
-    own threshold, minhash_k mirrors num_hashes (the state-manifest
-    pair), and hand-passing either pinned parameter is rejected so the
-    landed-state caveat can't be bypassed by accident."""
-    import pytest
-
-    from clickhouse_mysql_data_reader_spark.curation import CurationConfig
-    from clickhouse_mysql_data_reader_spark.operators.dedup import (
-        optimal_lsh_bands,
-    )
-
-    cfg = CurationConfig.with_tuned_lsh(near_dup_jaccard=0.7)
-    assert cfg.minhash_k == 16
-    assert cfg.lsh_bands == optimal_lsh_bands(16, 0.7)
-    assert cfg.near_dup_jaccard == 0.7
-    # default threshold comes from the dataclass default
-    assert (
-        CurationConfig.with_tuned_lsh().lsh_bands
-        == optimal_lsh_bands(16, CurationConfig().near_dup_jaccard)
-    )
-    # other knobs pass through
-    assert CurationConfig.with_tuned_lsh(num_hashes=64, dedup_lines=True).dedup_lines
-    for banned in ({"lsh_bands": 4}, {"minhash_k": 16}):
-        with pytest.raises(ValueError, match="with_tuned_lsh"):
-            CurationConfig.with_tuned_lsh(**banned)
-
-
 from hypothesis import given as _given, settings as _settings
 from hypothesis import strategies as _st
-
-
-@_settings(max_examples=60, deadline=None)
-@_given(
-    t_lo=_st.floats(min_value=0.05, max_value=0.45),
-    t_hi=_st.floats(min_value=0.55, max_value=0.95),
-)
-def test_optimal_lsh_bands_monotone_in_threshold(t_lo, t_hi):
-    """A HIGHER target threshold steepens the wanted S-curve to the
-    right: the optimizer must never pick MORE bands (fewer rows per
-    band shifts collisions left) for the higher threshold."""
-    from clickhouse_mysql_data_reader_spark.operators.dedup import (
-        optimal_lsh_bands,
-    )
-
-    assert optimal_lsh_bands(16, t_hi) <= optimal_lsh_bands(16, t_lo)
 
 
 # ---------------------------------------------------------------------------

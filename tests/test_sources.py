@@ -16,7 +16,6 @@ from clickhouse_mysql_data_reader_spark.sources.csv import read_csv, sniff_diale
 from clickhouse_mysql_data_reader_spark.sources.jsonl import (
     quarantine_split,
     read_jsonl,
-    read_jsonl_stream,
     write_jsonl,
 )
 from clickhouse_mysql_data_reader_spark.sources.jdbc import (
@@ -246,43 +245,8 @@ def test_jsonl_quarantine_requires_corrupt_column(spark):
         quarantine_split(df)
 
 
-def test_jsonl_stream_matches_batch_and_quarantines(spark, tmp_path):
-    """Streaming twin of the batch JSONL read: same rows, and a
-    malformed line lands in the corrupt column instead of killing the
-    stream."""
-    d = tmp_path / "drops"
-    d.mkdir()
-    (d / "a.jsonl").write_text('{"doc_id": 1, "text": "one"}\n{"doc_id": 2, "text": "two"}\n')
-    (d / "b.jsonl").write_text('broken line\n{"doc_id": 3, "text": "three"}\n')
-    stream = read_jsonl_stream(
-        spark, str(d), schema="doc_id bigint, text string", max_files_per_trigger=1
-    )
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("jsonl_stream_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("select * from jsonl_stream_t").collect()
-    good = sorted(r["doc_id"] for r in rows if r["_corrupt_record"] is None)
-    bad = [r["_corrupt_record"] for r in rows if r["_corrupt_record"] is not None]
-    assert good == [1, 2, 3]
-    assert bad == ["broken line"]
-    with pytest.raises(ValueError, match="mode must be one of"):
-        read_jsonl_stream(spark, str(d), schema="doc_id bigint", mode="NOPE")
-
-
 def test_read_jsonl_does_not_mutate_caller_schema(spark, tmp_path):
     from pyspark.sql import types as T
-
-    from clickhouse_mysql_data_reader_spark.sources.jsonl import (
-        read_jsonl,
-        read_jsonl_stream,
-    )
 
     p = tmp_path / "s.jsonl"
     p.write_text('{"a": 1}\n')
@@ -291,7 +255,4 @@ def test_read_jsonl_does_not_mutate_caller_schema(spark, tmp_path):
     assert "_corrupt_record" in df.columns
     # the CALLER's object must be untouched (StructType.add mutates in
     # place — a leaked phantom column breaks every later reuse)
-    assert schema.fieldNames() == ["a"]
-    stream = read_jsonl_stream(spark, str(tmp_path), schema=schema)
-    assert "_corrupt_record" in stream.columns
     assert schema.fieldNames() == ["a"]

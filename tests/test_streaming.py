@@ -1,13 +1,12 @@
-"""Streaming CDC pump + windowed aggregates, driven by deterministic
-event files (FIXTURES F5 methodology) with availableNow triggers."""
+"""Streaming CDC pump and the stream-static monitoring operators, driven
+by deterministic event files (FIXTURES F5 methodology) with availableNow
+triggers."""
 
 from __future__ import annotations
 
-import pytest
-
 import json
-import time
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -15,11 +14,6 @@ from clickhouse_mysql_data_reader_spark.streaming.pump import (
     SnapshotStore,
     read_cdc_stream,
     start_pump,
-)
-from clickhouse_mysql_data_reader_spark.streaming.windows import (
-    session_counts,
-    sliding_counts,
-    tumbling_counts,
 )
 
 PAYLOAD = T.StructType(
@@ -167,202 +161,10 @@ def test_cdc_pump_resume_from_checkpoint(spark, tmp_path):
     assert {r["id"]: r["str"] for r in store.read(spark, "db", "log_a").collect()} == {1: "v2"}
 
 
-def _ts_events_df(spark):
-    rows = [
-        ("2024-01-01 00:05:00", 1, 1.0),
-        ("2024-01-01 00:20:00", 1, 2.0),
-        ("2024-01-01 00:50:00", 2, 3.0),
-        ("2024-01-01 01:10:00", 1, 4.0),
-        ("2024-01-01 02:40:00", 2, 5.0),
-    ]
-    return spark.createDataFrame(rows, "ts_s string, user_id long, value double").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "user_id", "value"
-    )
-
-
 def _stream_from(spark, df, tmp_path, name):
     p = str(tmp_path / name)
     df.write.mode("overwrite").parquet(p)
     return spark.readStream.schema(df.schema).parquet(p)
-
-
-def _run_to_memory(stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def test_tumbling_window_stream_matches_batch(spark, tmp_path):
-    df = _ts_events_df(spark)
-    stream = _stream_from(spark, df, tmp_path, "ev1")
-    _run_to_memory(tumbling_counts(stream), "tumbling_t")
-    got = {
-        (str(r["win_start"]), r["n_events"], r["sum_value"])
-        for r in spark.sql("select * from tumbling_t").collect()
-    }
-    expected = {
-        (str(r["win_start"]), r["n_events"], r["sum_value"])
-        for r in tumbling_counts(df).collect()
-    }
-    assert got == expected
-    assert len(got) == 3  # hours 0, 1, 2
-
-
-def test_sliding_window_overlap(spark, tmp_path):
-    df = _ts_events_df(spark)
-    out = sliding_counts(df, width="1 hour", slide="30 minutes").collect()
-    # an event at 00:05 belongs to 2 windows (23:30-00:30, 00:00-01:00)
-    total = sum(r["n_events"] for r in out)
-    assert total == 2 * df.count()
-
-
-def test_session_window_gap_split(spark, tmp_path):
-    df = _ts_events_df(spark)
-    out = session_counts(df, gap="20 minutes").collect()
-    sessions_u1 = [r for r in out if r["user_id"] == 1]
-    # user 1: 00:05+00:20 merge (gap 15m), 01:10 separate
-    assert len(sessions_u1) == 2
-    assert {r["n_events"] for r in sessions_u1} == {2, 1}
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """True stream-stream join (both sides streaming, watermarked,
-    bounded event-time range): results equal the batch twin of the same
-    composition — unified semantics, and the bounded range is what lets
-    Spark expire both sides' buffered state."""
-    from clickhouse_mysql_data_reader_spark.streaming.windows import (
-        stream_stream_interval_join,
-    )
-
-    clicks = _ts_events_df(spark)  # left: (ts, user_id, value)
-    buys_rows = [
-        ("2024-01-01 00:15:00", 1, 10.0),  # in [00:05, 00:35] of the 00:05 click
-        ("2024-01-01 00:45:00", 2, 20.0),  # BEFORE the 00:50 click -> no match
-        ("2024-01-01 01:05:00", 2, 30.0),  # in [00:50, 01:20] of the 00:50 click
-        ("2024-01-01 03:40:00", 2, 40.0),  # 60m after the 02:40 click -> outside
-    ]
-    buys = spark.createDataFrame(
-        buys_rows, "ts_s string, user_id long, amount double"
-    ).select(F.col("ts_s").cast("timestamp").alias("ts"), "user_id", "amount")
-
-    expected = {
-        (str(r["ts"]), r["user_id"], str(r["r_ts"]), r["r_amount"])
-        for r in stream_stream_interval_join(
-            clicks, buys, within="30 minutes"
-        ).collect()
-    }
-    assert expected == {
-        ("2024-01-01 00:05:00", 1, "2024-01-01 00:15:00", 10.0),
-        ("2024-01-01 00:50:00", 2, "2024-01-01 01:05:00", 30.0),
-    }
-
-    ls = _stream_from(spark, clicks, tmp_path, "ssj_l")
-    rs = _stream_from(spark, buys, tmp_path, "ssj_r")
-    joined = stream_stream_interval_join(ls, rs, within="30 minutes")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (str(r["ts"]), r["user_id"], str(r["r_ts"]), r["r_amount"])
-        for r in spark.sql("select * from ssj_t").collect()
-    }
-    assert got == expected
-
-
-def test_streaming_tumbling_with_watermark_runs(spark, tmp_path):
-    df = _ts_events_df(spark)
-    stream = _stream_from(spark, df, tmp_path, "ev2")
-    agg = tumbling_counts(stream, watermark="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wm_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # append mode only emits windows closed by the watermark; the final
-    # (max-ts) window stays open -> strictly fewer rows than complete mode
-    n = spark.sql("select count(*) n from wm_t").collect()[0]["n"]
-    assert n >= 1
-
-
-def test_dedup_within_watermark_drops_replays(spark, tmp_path):
-    from clickhouse_mysql_data_reader_spark.streaming.windows import (
-        dedup_within_watermark,
-    )
-
-    rows = [
-        ("2024-01-01 00:05:00", 1, 1.0),
-        ("2024-01-01 00:06:00", 1, 1.0),   # replay of key 1 within horizon
-        ("2024-01-01 00:10:00", 2, 2.0),
-        ("2024-01-01 00:12:00", 2, 9.0),   # same key, different value: still a dup by key
-        ("2024-01-01 00:30:00", 3, 3.0),
-    ]
-    df = spark.createDataFrame(rows, "ts_s string, k long, v double").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "k", "v"
-    )
-    stream = _stream_from(spark, df, tmp_path, "ddwm")
-    out = dedup_within_watermark(stream, ["k"], ts_col="ts", watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ddwm_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(r["k"] for r in spark.sql("select * from ddwm_t").collect())
-    assert got == [1, 2, 3]  # one row per key within the horizon
-
-    # batch twin: unified semantics via plain dropDuplicates
-    batch = dedup_within_watermark(df, ["k"])
-    assert sorted(r["k"] for r in batch.collect()) == [1, 2, 3]
-
-
-def test_kafka_cdc_options_and_envelope_decode(spark):
-    """The Kafka swap of the CDC source, minus the broker: the option
-    dict carries the subscribe/backpressure knobs, and parse_cdc_envelope
-    decodes Kafka-shaped (binary value) rows into the exact frame
-    read_cdc_stream produces — corrupt payloads become NULL rows, not
-    stream death."""
-    from clickhouse_mysql_data_reader_spark.streaming.pump import (
-        kafka_cdc_options,
-        parse_cdc_envelope,
-    )
-
-    opts = kafka_cdc_options("b1:9092,b2:9092", "binlog.db", max_offsets_per_trigger=5000)
-    assert opts["kafka.bootstrap.servers"] == "b1:9092,b2:9092"
-    assert opts["subscribe"] == "binlog.db"
-    assert opts["startingOffsets"] == "earliest"
-    assert opts["failOnDataLoss"] == "false"
-    assert opts["maxOffsetsPerTrigger"] == "5000"
-
-    good = json.dumps(_ev("insert", 7, 42, "hello"))
-    raw = spark.createDataFrame(
-        [(b"k1", good.encode()), (b"k2", b"{not json")],
-        "key binary, value binary",
-    )
-    out = parse_cdc_envelope(raw, PAYLOAD)
-    rows = {r["log_pos"]: r for r in out.collect()}
-    assert set(out.columns) == {"op", "log_file", "log_pos", "schema", "table", "id", "day", "str"}
-    assert rows[7]["op"] == "insert" and rows[7]["id"] == 42 and rows[7]["str"] == "hello"
-    # the corrupt event decodes to an all-NULL row (filterable), present
-    assert None in rows and rows[None]["op"] is None
 
 
 @pytest.mark.slow
@@ -492,15 +294,14 @@ def test_psi_frozen_foreachbatch_matches_batch(spark, tmp_path):
 
 
 def test_cms_foreachbatch_merge_matches_full_build(spark, tmp_path):
-    """The count-min sketch's streaming deployment (the
-    psi_baseline_merge idiom): each micro-batch builds its own sketch
-    and MERGES it into the landed one — counts are additive, so the
-    landed sketch after N epochs equals one build over everything seen,
-    bucket for bucket, and estimates never rescan the corpus."""
+    """The count-min sketch's streaming deployment: each micro-batch
+    builds its own sketch and adds it into the landed one (counts are
+    additive per (row_idx, bucket)), so the landed sketch after N epochs
+    equals one build over everything seen, bucket for bucket, and
+    estimates never rescan the corpus."""
     from clickhouse_mysql_data_reader_spark.operators.cms import (
         cms_build,
         cms_estimate,
-        cms_merge,
     )
 
     items = spark.createDataFrame(
@@ -513,9 +314,11 @@ def test_cms_foreachbatch_merge_matches_full_build(spark, tmp_path):
     )
 
     def absorb(batch_df, epoch_id):
-        landed = spark.read.parquet(landed_path)
-        merged = cms_merge(
-            landed, cms_build(batch_df, "item", depth=2, width=32)
+        merged = (
+            spark.read.parquet(landed_path)
+            .unionByName(cms_build(batch_df, "item", depth=2, width=32))
+            .groupBy("row_idx", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
         )
         # land via a temp dir + read-back (the batch plan reads the
         # path it would overwrite)
@@ -535,7 +338,7 @@ def test_cms_foreachbatch_merge_matches_full_build(spark, tmp_path):
 
     landed = spark.read.parquet(landed_path)
     full = cms_build(items, "item", depth=2, width=32)
-    assert sorted(tuple(r) for r in landed.collect()) == sorted(
+    assert sorted(tuple(r) for r in landed.select(*full.columns).collect()) == sorted(
         tuple(r) for r in full.collect()
     )
     # and the landed sketch answers point queries exactly here (7 items

@@ -10,7 +10,6 @@ from pyspark.sql import types as T
 from clickhouse_mysql_data_reader_spark.catalog.names import (
     NameResolver,
     create_full_table_name,
-    parse_full_table_name,
     table_matches_prefix,
 )
 from clickhouse_mysql_data_reader_spark.schema.ddl import (
@@ -100,10 +99,8 @@ def test_ddl_runs_in_spark(spark, tmp_path):
 
 def test_full_table_names():
     assert create_full_table_name("db", "t") == "`db`.`t`"
-    assert parse_full_table_name("`db`.`t`") == ("db", "t")
-    assert parse_full_table_name("db.t") == ("db", "t")
-    assert parse_full_table_name("t") == (None, "t")
-    assert parse_full_table_name("`we`` ird`.`t.x`") == ("we` ird", "t.x")
+    assert create_full_table_name(None, "t") == "`t`"
+    assert create_full_table_name("we` ird", "t.x") == "`we`` ird`.`t.x`"
 
 
 def test_prefix_match_and_resolver():
@@ -123,10 +120,7 @@ def test_prefix_match_and_resolver():
 def test_schema_diff_classifies_changes():
     from pyspark.sql import types as T
 
-    from clickhouse_mysql_data_reader_spark.schema.drift import (
-        evolution_safe,
-        schema_diff,
-    )
+    from clickhouse_mysql_data_reader_spark.schema.drift import schema_diff
 
     old = T.StructType(
         [
@@ -156,7 +150,6 @@ def test_schema_diff_classifies_changes():
     assert by[("added", "extra")].safe
     assert not by[("removed", "gone")].safe
     assert not by[("nullability_changed", "note")].safe
-    assert not evolution_safe(old, new)
 
     # narrowing / scale-loss / required-add are unsafe
     o2 = T.StructType([T.StructField("v", T.LongType(), True)])
@@ -173,5 +166,5 @@ def test_schema_diff_classifies_changes():
     assert not schema_diff(o2, T.StructType([T.StructField("v", T.DecimalType(18, 0), True)]))[0].safe
     # atomic -> string is the reference's own degrade move: safe
     assert schema_diff(o2, T.StructType([T.StructField("v", T.StringType(), True)]))[0].safe
-    # identical schemas: no drift, trivially safe
-    assert schema_diff(old, old) == [] and evolution_safe(old, old)
+    # identical schemas: no drift
+    assert schema_diff(old, old) == []
